@@ -1,6 +1,6 @@
 package graft.connector
 
-import graft.store.{EmbeddedLogStore, LogRecord}
+import graft.store.EmbeddedLogStore
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.read.InputPartition
 import org.apache.spark.sql.connector.read.streaming._
@@ -20,16 +20,12 @@ class LogContinuousStream(schema: StructType, opts: LogServiceOptions)
 
   private val store = opts.newStore
 
-  private def shardEnds(): Map[Int, Long] =
-    store.listShards(opts.project, opts.store)
-      .map(s => s.id -> store.shardEnd(opts.project, opts.store, s.id)).toMap
-
   override def initialOffset(): Offset = opts.startingOffsets.trim.toLowerCase match {
+    // retention moves earliest to the per-shard base
     case "earliest" => LogServiceOffset(opts.project, opts.store,
-      store.listShards(opts.project, opts.store)
-        .map(s => s.id -> store.shardStart(opts.project, opts.store, s.id))
-        .toMap) // retention moves earliest to the per-shard base
-    case "latest" => LogServiceOffset(opts.project, opts.store, shardEnds())
+      store.snapshot(opts.project, opts.store).starts)
+    case "latest" => LogServiceOffset(opts.project, opts.store,
+      store.snapshot(opts.project, opts.store).ends)
     case json => LogServiceOffset.parse(json)
   }
 
@@ -76,29 +72,23 @@ class LogContinuousPartitionReader(schema: StructType, p: LogInputPartition,
   private val readers = schema.fields.map(f =>
     RowConverters.makeReader(f.dataType, f.nullable))
   private var ordinal = p.from
-  private var it: Iterator[(Long, LogRecord)] = Iterator.empty
-  private var bases: Array[Long] = _
+  private var it: store.SegmentReader = _
   private var current: InternalRow = _
 
   override def next(): Boolean = {
-    while (!it.hasNext) {
-      val end = store.shardEnd(p.project, p.store, p.shard)
-      if (end > ordinal) {
-        it = store.read(p.project, p.store, p.shard, ordinal, end)
-        // refreshed alongside the iterator; under append-only commits
-        // bases only extend. A racing compaction can reshape segment
-        // boundaries — ordinals stay exact (the read iterator
-        // self-heals); only the cosmetic "<segment>-<offset>" sequence
-        // strings would reflect the pre-rewrite boundaries until the
-        // next refresh.
-        if (appendSeq) bases = store.segmentBases(p.project, p.store, p.shard)
+    // one snapshot per poll gives both the end and the segments to read
+    while (it == null || !it.hasNext) {
+      val log = store.snapshot(p.project, p.store).shard(p.shard)
+      if (log.end > ordinal) {
+        it = store.readSegments(p.project, p.store, p.shard,
+          log.clip(ordinal, log.end), ordinal, log.end, None)
       } else {
         Thread.sleep(10) // poll backoff; interrupted by epoch end/stop
       }
     }
     val (ord, rec) = it.next()
     ordinal = ord + 1
-    val seq = if (appendSeq) RowConverters.sequenceNumberOf(bases, ord) else null
+    val seq = if (appendSeq) RowConverters.sequenceNumber(it.segmentBase, ord) else null
     current = RowConverters.recordToRow(schema, readers, p.project, p.store,
       p.shard, ord, rec, seq)
     true
@@ -106,5 +96,5 @@ class LogContinuousPartitionReader(schema: StructType, p: LogInputPartition,
 
   override def get(): InternalRow = current
   override def getOffset: PartitionOffset = LogShardPartitionOffset(p.shard, ordinal)
-  override def close(): Unit = ()
+  override def close(): Unit = if (it != null) it.close()
 }

@@ -1,6 +1,6 @@
 package graft.connector
 
-import graft.store.EmbeddedLogStore
+import graft.store.StoreSnapshot
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming._
 import org.apache.spark.sql.types.StructType
@@ -25,32 +25,29 @@ class LogMicroBatchStream(schema: StructType, opts: LogServiceOptions)
     with SupportsTriggerAvailableNow {
 
   private val store = opts.newStore
+  private def snapshot() = store.snapshot(opts.project, opts.store)
   // Trigger.AvailableNow: freeze the target end offsets at query start so
   // the run drains exactly to that point, still paced by the read limit.
   private var availableNowTarget: Option[Map[Int, Long]] = None
-  private def shardEnds(): Map[Int, Long] =
-    availableNowTarget.getOrElse(
-      store.listShards(opts.project, opts.store)
-        .map(s => s.id -> store.shardEnd(opts.project, opts.store, s.id)).toMap)
+  private def shardEnds(snap: => StoreSnapshot): Map[Int, Long] =
+    availableNowTarget.getOrElse(snap.ends)
 
   override def prepareForTriggerAvailableNow(): Unit = {
-    availableNowTarget = Some(
-      store.listShards(opts.project, opts.store)
-        .map(s => s.id -> store.shardEnd(opts.project, opts.store, s.id)).toMap)
+    availableNowTarget = Some(snapshot().ends)
   }
 
-  override def initialOffset(): Offset = opts.startingOffsets.trim.toLowerCase match {
-    case "earliest" => LogServiceOffset(opts.project, opts.store,
-      store.listShards(opts.project, opts.store)
-        .map(s => s.id -> store.shardStart(opts.project, opts.store, s.id))
-        .toMap) // retention moves earliest to the per-shard base
-    case "latest" => LogServiceOffset(opts.project, opts.store, shardEnds())
-    case json => LogServiceOffset.parse(json) match {
-      case o =>
-        val ends = shardEnds()
+  override def initialOffset(): Offset = {
+    val snap = snapshot()
+    opts.startingOffsets.trim.toLowerCase match {
+      // retention moves earliest to the per-shard base
+      case "earliest" => LogServiceOffset(opts.project, opts.store, snap.starts)
+      case "latest" => LogServiceOffset(opts.project, opts.store, shardEnds(snap))
+      case json =>
+        val o = LogServiceOffset.parse(json)
+        val ends = shardEnds(snap)
         o.copy(shardOrdinals = o.shardOrdinals.map {
           case (s, -1L) => s -> ends.getOrElse(s, 0L)
-          case (s, -2L) => s -> store.shardStart(opts.project, opts.store, s)
+          case (s, -2L) => s -> snap.shard(s).start
           case (s, n) => s -> n
         })
     }
@@ -77,7 +74,7 @@ class LogMicroBatchStream(schema: StructType, opts: LogServiceOptions)
     * LoghubMicroBatchSourceSuite.scala:276-314). */
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val startOff = start.asInstanceOf[LogServiceOffset]
-    val ends = shardEnds()
+    val ends = shardEnds(snapshot())
     val budget: Long = liveBudgetOverride().getOrElse(limit match {
       case m: ReadMaxRows => m.maxRows()
       case _ => Long.MaxValue
@@ -94,16 +91,19 @@ class LogMicroBatchStream(schema: StructType, opts: LogServiceOptions)
     LogServiceOffset(opts.project, opts.store, next)
   }
 
+  /** One snapshot per planned batch (none for an empty one) gives every
+    * partition its segment list. */
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[LogServiceOffset]
     val e = end.asInstanceOf[LogServiceOffset]
+    lazy val snap = snapshot()
     e.shardOrdinals.toSeq.sortBy(_._1).flatMap { case (shard, until) =>
       val from = s.shardOrdinals.getOrElse(shard, 0L)
       require(until >= from,
         s"offset rollback on shard $shard: $until < $from") // O9 guard
       if (until > from)
         Some(LogInputPartition(opts.project, opts.store, shard, from, until,
-          opts.root): InputPartition)
+          opts.root, segments = Some(snap.shard(shard).clip(from, until))): InputPartition)
       else None
     }.toArray
   }

@@ -1,6 +1,6 @@
 package graft.connector
 
-import graft.store.{EmbeddedLogStore, LogRecord, ShardInfo}
+import graft.store.{EmbeddedLogStore, Segment, StoreSnapshot}
 import java.util
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
@@ -296,35 +296,33 @@ class LogStatScan(opts: LogServiceOptions, statCols: String,
   override def toBatch: Batch = this
   override def planInputPartitions(): Array[InputPartition] = {
     val store = opts.newStore
-    // ONE manifest fold for every shard's (base, segments): mixing
-    // per-shard folds could straddle a concurrent expiry and misalign
-    // bases against listings. The snapshot ends are pinned by version —
+    // ONE snapshot for every shard's (base, segments): mixing per-shard
+    // folds could straddle a concurrent expiry and misalign bases
+    // against listings. The snapshot ends are pinned by version —
     // consistent by construction — and the segment-alignment require
     // below still guards any base/end drift loudly.
-    val byShard = store.storeView(opts.project, opts.store)
+    val snap = store.snapshot(opts.project, opts.store)
     val snapEnds = opts.snapshotVersion.map(v =>
       store.shardEndsAt(opts.project, opts.store, v))
     var total = 0L
     var minT = Long.MaxValue
     var maxT = Long.MinValue
-    byShard.toSeq.sortBy(_._1).foreach { case (shard, (base, segs)) =>
+    snap.logs.toSeq.sortBy(_._1).foreach { case (shard, log) =>
       // fold segments in ordinal order; a snapshot clamp is always
       // segment-aligned (shardEndsAt sums whole segment counts), so a
       // segment is either fully in the snapshot or fully out — the
       // [minTime, maxTime] envelope is only valid for whole segments
       // live ordinals start at the retention base (expired prefix gone)
-      var ord = base
       val end = snapEnds.map(_.getOrElse(shard, 0L)).getOrElse(Long.MaxValue)
-      segs.foreach { seg =>
-        if (ord < end && seg.count > 0) {
-          require(ord + seg.count <= end,
-            s"snapshot end $end splits a segment at ordinal $ord — " +
+      log.segments.foreach { seg =>
+        if (seg.base < end && seg.count > 0) {
+          require(seg.end <= end,
+            s"snapshot end $end splits a segment at ordinal ${seg.base} — " +
               "manifest prefix must be segment-aligned")
           total += seg.count
           if (seg.minTime < minT) minT = seg.minTime
           if (seg.maxTime > maxT) maxT = seg.maxTime
         }
-        ord += seg.count
       }
     }
     Array(LogStatPartition(statCols, total,
@@ -370,16 +368,19 @@ class LogScan(schema: StructType, opts: LogServiceOptions,
   override def description(): String =
     s"graft-logstore ${opts.project}#${opts.store} timeRange=$pushedTimeRange limit=$pushedLimit"
 
-  /** Exact row count from segment metadata (a manifest fold, no data
-    * reads) — lets Catalyst/AQE treat small stores as broadcast-able
-    * instead of assuming the default size. Bytes are estimated at a
-    * conservative 64 per record per projected column. */
+  /** The scan's one manifest fold, taken on first use and shared by
+    * statistics, offset resolution and partition planning. */
+  private lazy val snapshot: StoreSnapshot =
+    opts.newStore.snapshot(opts.project, opts.store)
+
+  /** Exact row count from segment metadata (no data reads) — lets
+    * Catalyst/AQE treat small stores as broadcast-able instead of
+    * assuming the default size. Bytes are estimated at a conservative
+    * 64 per record per projected column. */
   override def estimateStatistics(): Statistics = {
-    val store = opts.newStore
     // LIVE rows: end minus the retention base (expired records are gone)
-    val rows = store.listShards(opts.project, opts.store)
-      .map(s => store.shardEnd(opts.project, opts.store, s.id) -
-        store.shardStart(opts.project, opts.store, s.id)).sum
+    val rows = snapshot.shards.map(s => snapshot.shard(s.id))
+      .map(log => log.end - log.start).sum
     val capped = pushedLimit.map(n => math.min(rows, n.toLong)).getOrElse(rows)
     val bytes = capped * 64L * math.max(1, schema.fields.length)
     new Statistics {
@@ -390,7 +391,8 @@ class LogScan(schema: StructType, opts: LogServiceOptions,
     }
   }
 
-  override def toBatch: Batch = new LogBatch(schema, opts, pushedTimeRange, pushedLimit)
+  override def toBatch: Batch =
+    new LogBatch(schema, opts, () => snapshot, pushedTimeRange, pushedLimit)
   override def toMicroBatchStream(checkpointLocation: String) = {
     require(opts.snapshotVersion.isEmpty,
       "store.snapshotversion is a batch-only option: a stream reads the live log")
@@ -406,12 +408,22 @@ class LogScan(schema: StructType, opts: LogServiceOptions,
 /** One InputPartition per shard slice — the unit of parallelism, as in
   * the reference (1 task per shard, LoghubSourceRDD.scala:283-289),
   * optionally sliced `store.sliceshard` ways and bounded by a pushed or
-  * option-supplied time range. */
+  * option-supplied time range.
+  *
+  * `segments` is the slice's (file, base ordinal) list, clipped to
+  * [from, until) from the planning snapshot: the reader opens those files
+  * directly and takes its `__sequence_number__` bases from the same list,
+  * so a task does no manifest fold of its own. If a racing compaction or
+  * expiry deleted a listed file, the reader folds again and resumes at
+  * its next unread ordinal. A partition built without a list (None)
+  * resolves one from a fresh snapshot when its reader opens. */
 case class LogInputPartition(project: String, store: String, shard: Int,
     from: Long, until: Long, root: String,
-    timeRange: Option[(Int, Int)] = None) extends InputPartition
+    timeRange: Option[(Int, Int)] = None,
+    segments: Option[Seq[Segment]] = None) extends InputPartition
 
 class LogBatch(schema: StructType, opts: LogServiceOptions,
+    snapshot: () => StoreSnapshot,
     pushedTimeRange: Option[(Int, Int)] = None,
     pushedLimit: Option[Int] = None) extends Batch {
 
@@ -429,12 +441,9 @@ class LogBatch(schema: StructType, opts: LogServiceOptions,
   }
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val store = opts.newStore
-    val shards = store.listShards(opts.project, opts.store)
-    val startOrds = OffsetRanges.resolve(store, opts, opts.startingOffsets,
-      isStart = true, shards)
-    val endOrds = OffsetRanges.resolve(store, opts, opts.endingOffsets,
-      isStart = false, shards)
+    val snap = snapshot()
+    val startOrds = OffsetRanges.resolve(snap, opts, opts.startingOffsets, isStart = true)
+    val endOrds = OffsetRanges.resolve(snap, opts, opts.endingOffsets, isStart = false)
     val tr = effectiveTimeRange
     // with a residual time filter the first-n ordinals may not be the
     // first n MATCHING rows — the cap applies only to unfiltered scans
@@ -443,8 +452,8 @@ class LogBatch(schema: StructType, opts: LogServiceOptions,
     // as of the pinned manifest version (ordinals are append-stable, so
     // the prefix IS the point-in-time content)
     val snapEnds = opts.snapshotVersion.map(v =>
-      store.shardEndsAt(opts.project, opts.store, v))
-    shards.flatMap { s =>
+      opts.newStore.shardEndsAt(opts.project, opts.store, v))
+    snap.shards.flatMap { s =>
       val from = startOrds.getOrElse(s.id, 0L)
       val until0 = snapEnds match {
         case Some(se) => math.min(endOrds.getOrElse(s.id, 0L), se.getOrElse(s.id, 0L))
@@ -458,7 +467,7 @@ class LogBatch(schema: StructType, opts: LogServiceOptions,
           val lo = from + (until - from) * i / slices
           val hi = from + (until - from) * (i + 1) / slices
           LogInputPartition(opts.project, opts.store, s.id, lo, hi,
-            opts.root, tr): InputPartition
+            opts.root, tr, Some(snap.shard(s.id).clip(lo, hi))): InputPartition
         }
       }
     }.toArray
@@ -471,26 +480,25 @@ object OffsetRanges {
   /** earliest | latest | offset-json → per-shard ordinals. Validation per
     * reference O2 (LoghubSourceProvider.scala:216-248): a bounded batch
     * cannot start at latest nor end at earliest. */
-  def resolve(store: EmbeddedLogStore, opts: LogServiceOptions, spec: String,
-      isStart: Boolean, shards: Seq[ShardInfo]): Map[Int, Long] =
+  def resolve(snap: StoreSnapshot, opts: LogServiceOptions, spec: String,
+      isStart: Boolean): Map[Int, Long] =
     spec.trim.toLowerCase match {
       case "earliest" =>
         if (!isStart) throw new IllegalArgumentException(
           "ending offsets can't be 'earliest'")
-        shards.map(s =>
-          s.id -> store.shardStart(opts.project, opts.store, s.id)).toMap
+        snap.starts
       case "latest" =>
         if (isStart) throw new IllegalArgumentException(
           "starting offsets can't be 'latest' for batch queries")
-        shards.map(s => s.id -> store.shardEnd(opts.project, opts.store, s.id)).toMap
+        snap.ends
       case _ =>
         val o = LogServiceOffset.parse(spec)
         require(o.project == opts.project && o.store == opts.store,
           s"offset json for ${o.project}#${o.store}, expected ${opts.project}#${opts.store}")
         // sentinels per LoghubOffsetRangeLimit: -1 latest, -2 earliest
         o.shardOrdinals.map {
-          case (s, -1L) => s -> store.shardEnd(opts.project, opts.store, s)
-          case (s, -2L) => s -> store.shardStart(opts.project, opts.store, s)
+          case (s, -1L) => s -> snap.shard(s).end
+          case (s, -2L) => s -> snap.shard(s).start
           case (s, n) => s -> n
         }
     }
@@ -509,20 +517,19 @@ class LogPartitionReader(schema: StructType, p: LogInputPartition,
   private val store = new EmbeddedLogStore(p.root)
   private val readers = schema.fields.map(f =>
     RowConverters.makeReader(f.dataType, f.nullable))
-  private val it: Iterator[(Long, LogRecord)] =
-    store.read(p.project, p.store, p.shard, p.from, p.until, p.timeRange)
-  private val bases: Array[Long] =
-    if (appendSeq) store.segmentBases(p.project, p.store, p.shard) else null
+  private val it = store.readSegments(p.project, p.store, p.shard,
+    p.segments.getOrElse(store.snapshot(p.project, p.store).shard(p.shard).segments),
+    p.from, p.until, p.timeRange)
   private var current: InternalRow = _
 
   override def next(): Boolean = {
     if (!it.hasNext) return false
     val (ord, rec) = it.next()
-    val seq = if (appendSeq) RowConverters.sequenceNumberOf(bases, ord) else null
+    val seq = if (appendSeq) RowConverters.sequenceNumber(it.segmentBase, ord) else null
     current = RowConverters.recordToRow(schema, readers, p.project, p.store,
       p.shard, ord, rec, seq)
     true
   }
   override def get(): InternalRow = current
-  override def close(): Unit = ()
+  override def close(): Unit = it.close()
 }

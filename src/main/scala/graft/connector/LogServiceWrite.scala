@@ -71,8 +71,9 @@ class LogStreamingWrite(schema: StructType, opts: LogServiceOptions)
     // durably committed, so a maintenance failure must not fail it.
     if (opts.autoCompactSegments > 0) {
       try {
-        val needs = store.listShards(opts.project, opts.store).exists { sh =>
-          store.listSegments(opts.project, opts.store, sh.id)
+        val snap = store.snapshot(opts.project, opts.store)
+        val needs = snap.shards.exists { sh =>
+          snap.shard(sh.id).segments
             .count(_.count < opts.autoCompactTarget) >= opts.autoCompactSegments
         }
         if (needs)
@@ -171,9 +172,8 @@ class LogDataWriter(schema: StructType, opts: LogServiceOptions,
   }
 
   override def commit(): WriterCommitMessage =
-    LogCommitMessage(pending.toSeq.map { case (shard, recs) =>
-      store.stageSegment(opts.project, opts.store, shard, segmentName, recs.toSeq)
-    })
+    LogCommitMessage(store.stageSegments(opts.project, opts.store,
+      pending.toSeq.map { case (shard, recs) => (shard, segmentName, recs.toSeq) }))
 
   override def abort(): Unit = ()
   override def close(): Unit = ()

@@ -109,14 +109,11 @@ object RowConverters {
     * segment, the group index is the segment's base cursor (the cursor
     * of its first record — the reference seeds its group index from the
     * batch cursor the same way), and the log index is the record's
-    * position within the segment. `bases` is
-    * [[graft.store.EmbeddedLogStore.segmentBases]] for the shard. */
-  def sequenceNumberOf(bases: Array[Long], ordinal: Long): String = {
-    var idx = java.util.Arrays.binarySearch(bases, ordinal)
-    if (idx < 0) idx = -idx - 2 // insertion point - 1 = containing segment
-    val base = bases(idx)
+    * position within the segment. `base` is the base ordinal of the
+    * segment the record was read from
+    * ([[graft.store.EmbeddedLogStore#SegmentReader.segmentBase]]). */
+  def sequenceNumber(base: Long, ordinal: Long): String =
     s"$base-${ordinal - base}"
-  }
 
   def recordToRow(schema: StructType, readers: Array[FieldReader],
       project: String, store: String, shard: Int, ordinal: Long,

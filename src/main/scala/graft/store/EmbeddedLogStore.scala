@@ -25,6 +25,88 @@ case class ShardInfo(id: Int, readOnly: Boolean)
   * messages from tasks to the driver's manifest commit. */
 case class StagedSegment(shard: Int, file: String)
 
+/** A committed segment as one snapshot places it: the fields its file
+  * name carries (`<logicalName>-<minT>-<maxT>-<count>.jsonl`) plus
+  * `base`, the ordinal of its first record in the shard's sequence. */
+case class Segment(fileName: String, minTime: Int, maxTime: Int,
+    count: Long, base: Long) {
+  def end: Long = base + count
+  def logicalName: String =
+    fileName.stripSuffix(".jsonl").split("-").dropRight(3).mkString("-")
+}
+
+object Segment {
+  def parse(fileName: String, base: Long = 0L): Segment = {
+    val parts = fileName.stripSuffix(".jsonl").split("-")
+    Segment(fileName, parts(parts.length - 3).toInt,
+      parts(parts.length - 2).toInt, parts.last.toLong, base)
+  }
+}
+
+/** One shard of a [[StoreSnapshot]]: its first live ordinal (0 until
+  * retention moves it) and its live segments in commit order. */
+case class ShardLog(start: Long, segments: IndexedSeq[Segment]) {
+  /** END ordinal: retention moves the start, never the end. */
+  def end: Long = segments.lastOption.fold(start)(_.end)
+  /** The segments holding any ordinal in [from, until). */
+  def clip(from: Long, until: Long): IndexedSeq[Segment] =
+    segments.filter(s => s.base < until && s.end > from)
+}
+
+/** Immutable result of ONE validated manifest fold, plus the shard list
+  * `meta.json` held when the fold read it. Every question an operation
+  * asks of the log — shard ends and starts, segment listings and bases,
+  * the replay skip set, the next version — is answered from one of
+  * these, so the answers can never straddle a concurrent commit, expiry
+  * or compaction. */
+final class StoreSnapshot private[store] (
+    /** Highest manifest version in the folded listing (0 = no commits). */
+    val version: Long,
+    val shards: Seq[ShardInfo],
+    private[store] val files: Seq[String],
+    private[store] val checkpointVersion: Long,
+    private[store] val entries: Seq[(Int, String)],
+    private[store] val absorbed: Seq[(Int, String)],
+    private[store] val bases: Map[Int, Long]) {
+
+  /** Manifest files in the folded listing — the count auto-compaction
+    * compares with its threshold. */
+  def manifestCount: Int = files.size
+
+  private lazy val filesByShard: Map[Int, Seq[String]] = entries.groupMap(_._1)(_._2)
+  // a shard's log is built on first use: a caller asking about one shard
+  // parses only that shard's segment names
+  private val shardLogs = scala.collection.concurrent.TrieMap[Int, ShardLog]()
+
+  def shard(id: Int): ShardLog = shardLogs.getOrElseUpdate(id, {
+    val start = bases.getOrElse(id, 0L)
+    var at = start
+    ShardLog(start, filesByShard.getOrElse(id, Seq.empty).map { f =>
+      val seg = Segment.parse(f, at); at += seg.count; seg
+    }.toIndexedSeq)
+  })
+
+  /** Every listed shard's log, plus any shard the manifests name. */
+  def logs: Map[Int, ShardLog] =
+    (shards.map(_.id) ++ filesByShard.keys ++ bases.keys).distinct.map(s => s -> shard(s)).toMap
+  def starts: Map[Int, Long] = shards.map(s => s.id -> shard(s.id).start).toMap
+  def ends: Map[Int, Long] = shards.map(s => s.id -> shard(s.id).end).toMap
+
+  /** Everything ever committed — live manifest entries PLUS segments a
+    * compaction or expiry absorbed. Replay idempotence (the commit skip,
+    * the stage shape guard, discard) must use this set, not the live
+    * entries, or an epoch replayed after its segments were merged away
+    * would re-append its data. */
+  lazy val committed: Set[(Int, String)] = (entries ++ absorbed).toSet
+
+  /** The committed file of logical segment `logicalName` on `shard`. */
+  def committedFile(shard: Int, logicalName: String): Option[String] =
+    (entries.iterator ++ absorbed).collectFirst {
+      case (s, f) if s == shard && f.startsWith(logicalName + "-") &&
+        Segment.parse(f).logicalName == logicalName => f
+    }
+}
+
 /** File-backed sharded log store — the hermetic stand-in for the log
   * service the reference connects to (replaces LoghubClientAgent.java;
   * cursor model per Utils.decodeCursorToTimestamp, Utils.scala:221-225).
@@ -51,6 +133,18 @@ case class StagedSegment(shard: Int, file: String)
   * data*. Replayed epochs re-stage the same logical segment name and
   * commit idempotently: the file is replaced in place and its ordinal
   * position stays pinned by the first manifest that listed it.
+  *
+  * **One fold per operation.** The fold is a [[StoreSnapshot]]: an
+  * operation (a batch plan, a micro-batch trigger, a writer task's
+  * staging, a commit) takes one and answers everything from it, so its
+  * cost does not grow with the number of shards or segments it asks
+  * about. Partitions carry their segment lists from the plan's snapshot
+  * to the readers, which open files directly and fold again only when a
+  * racing compaction or expiry deleted a listed file. There is
+  * deliberately no cache across operations: manifest names are reused
+  * (a dropped and recreated store starts again at `m-0000000001.json`),
+  * so nothing short of reading the files can tell a stale fold from a
+  * current one.
   *
   * On a cluster the root lives on shared storage; every operation here
   * is a pure function of manifest contents, so any executor can read or
@@ -90,10 +184,18 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
     shards.foreach(s => Files.createDirectories(shardDir(project, store, s.id)))
   }
 
-  def listShards(project: String, store: String): Seq[ShardInfo] = {
-    val mapper = new ObjectMapper()
-    val tree = mapper.readTree(io(Files.readAllBytes(metaPath(project, store))))
-    tree.get("shards").elements().asScala.map { n =>
+  def listShards(project: String, store: String): Seq[ShardInfo] =
+    readShards(project, store, new ObjectMapper())
+
+  private def readShards(project: String, store: String,
+      mapper: ObjectMapper): Seq[ShardInfo] = {
+    val bytes =
+      try io(Files.readAllBytes(metaPath(project, store)))
+      catch {
+        case _: java.nio.file.NoSuchFileException =>
+          throw new IllegalArgumentException(s"no store $project/$store under $root")
+      }
+    mapper.readTree(bytes).get("shards").elements().asScala.map { n =>
       ShardInfo(n.get("id").asInt(), n.get("readOnly").asBoolean())
     }.toSeq.sortBy(_.id)
   }
@@ -106,8 +208,20 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
       val n = arr.addObject()
       n.put("id", s.id); n.put("readOnly", s.readOnly)
     }
-    io(Files.write(metaPath(project, store),
-      mapper.writeValueAsBytes(rootNode)))
+    writeAtomically(metaPath(project, store), mapper.writeValueAsBytes(rootNode))
+  }
+
+  /** Replace `path` whole: write a temp sibling, then rename it over the
+    * target. A concurrent reader sees the old or the new content, never
+    * the empty or partial file an in-place rewrite exposes. */
+  private def writeAtomically(path: java.nio.file.Path, bytes: Array[Byte]): Unit = {
+    val tmp = path.resolveSibling(
+      s".${path.getFileName}.tmp-${System.nanoTime()}-${Thread.currentThread().getId}")
+    try io {
+      Files.write(tmp, bytes)
+      Files.move(tmp, path, java.nio.file.StandardCopyOption.REPLACE_EXISTING,
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    } finally Files.deleteIfExists(tmp)
   }
 
   /** Split a shard: parent becomes read-only, two new shards are created
@@ -136,31 +250,38 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
     * with no data reads; record ORDER comes from the commit log, not
     * the file name. Returns the staged descriptor for commit. */
   def stageSegment(project: String, store: String, shard: Int,
-      segmentName: String, records: Seq[LogRecord]): StagedSegment = {
-    require(!segmentName.contains("/"), s"bad segment name $segmentName")
-    require(records.forall(_.time >= 0), "record times must be >= 0")
-    val dir = shardDir(project, store, shard)
-    Files.createDirectories(dir)
-    val mapper = new ObjectMapper()
-    val sb = new StringBuilder
-    records.foreach { r => sb.append(recordToJson(mapper, r)).append('\n') }
-    val minT = records.map(_.time).minOption.getOrElse(0)
-    val maxT = records.map(_.time).maxOption.getOrElse(0)
-    val file = s"$segmentName-$minT-$maxT-${records.size}.jsonl"
-    // a replayed logical segment must not change shape once committed
-    committedFile(project, store, shard, segmentName).foreach { prior =>
-      require(prior == file,
-        s"replayed segment $segmentName is $file, committed as $prior")
+      segmentName: String, records: Seq[LogRecord]): StagedSegment =
+    stageSegments(project, store, Seq((shard, segmentName, records))).head
+
+  /** Stage (shard, segment name, records) triples — a writer task's
+    * segments for every shard it routed rows to — against ONE snapshot:
+    * a replayed logical segment must not change shape once committed,
+    * and every triple is checked against the same committed set. */
+  def stageSegments(project: String, store: String,
+      segments: Seq[(Int, String, Seq[LogRecord])]): Seq[StagedSegment] =
+    if (segments.isEmpty) Seq.empty
+    else stageWith(snapshot(project, store), project, store, segments)
+
+  private def stageWith(snap: StoreSnapshot, project: String, store: String,
+      segments: Seq[(Int, String, Seq[LogRecord])]): Seq[StagedSegment] =
+    segments.map { case (shard, segmentName, records) =>
+      require(!segmentName.contains("/"), s"bad segment name $segmentName")
+      require(records.forall(_.time >= 0), "record times must be >= 0")
+      val dir = shardDir(project, store, shard)
+      Files.createDirectories(dir)
+      val mapper = new ObjectMapper()
+      val sb = new StringBuilder
+      records.foreach { r => sb.append(recordToJson(mapper, r)).append('\n') }
+      val minT = records.map(_.time).minOption.getOrElse(0)
+      val maxT = records.map(_.time).maxOption.getOrElse(0)
+      val file = s"$segmentName-$minT-$maxT-${records.size}.jsonl"
+      snap.committedFile(shard, segmentName).foreach { prior =>
+        require(prior == file,
+          s"replayed segment $segmentName is $file, committed as $prior")
+      }
+      writeAtomically(dir.resolve(file), sb.toString.getBytes(StandardCharsets.UTF_8))
+      StagedSegment(shard, file)
     }
-    val tmp = dir.resolve(s".$file.tmp")
-    io {
-      Files.write(tmp, sb.toString.getBytes(StandardCharsets.UTF_8))
-      Files.move(tmp, dir.resolve(file),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    }
-    StagedSegment(shard, file)
-  }
 
   /** Atomically publish staged segments as one commit. Optimistic
     * versioning: the manifest is hard-linked into place as
@@ -169,19 +290,23 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
     * segment files (an epoch replay) are skipped, keeping commit
     * idempotent and ordinals pinned. Within a commit, segments are
     * ordered by (shard, file name) — deterministic regardless of task
-    * completion order. */
+    * completion order. One snapshot gives both the skip set and the
+    * version; a clean commit folds twice (that snapshot and the verify
+    * below). */
   def commitSegments(project: String, store: String,
       staged: Seq[StagedSegment]): Unit = {
     val mDir = manifestDir(project, store)
     Files.createDirectories(mDir)
     var done = false
+    var manifests = 0
     while (!done) {
-      val committed = committedSet(project, store)
-      val fresh = staged.filterNot(s => committed.contains((s.shard, s.file)))
+      val snap = snapshot(project, store)
+      manifests = snap.manifestCount
+      val fresh = staged.filterNot(s => snap.committed.contains((s.shard, s.file)))
         .distinct.sortBy(s => (s.shard, s.file))
       if (fresh.isEmpty) { done = true }
       else {
-        val version = currentVersion(project, store) + 1
+        val version = snap.version + 1
         val mapper = new ObjectMapper()
         val rootNode = mapper.createObjectNode()
         rootNode.put("version", version)
@@ -205,7 +330,8 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
           var verifying = true
           var attempt = 0
           while (verifying) {
-            val view = manifestView(project, store)
+            val view = snapshot(project, store)
+            manifests = view.manifestCount
             val visible = view.entries.toSet
             if (fresh.forall(s => visible.contains((s.shard, s.file)))) {
               verifying = false; done = true
@@ -222,7 +348,7 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
     // long-running streams write one manifest per epoch: fold the
     // history once the delta chain grows past the threshold so reader
     // cost stays bounded without operator intervention
-    if (manifestFiles(project, store).size > AutoCompactThreshold)
+    if (manifests > AutoCompactThreshold)
       compactManifests(project, store)
   }
 
@@ -239,7 +365,7 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
     * leftovers). Committed files are never touched. */
   def discardStaged(project: String, store: String,
       staged: Seq[StagedSegment]): Unit = {
-    val committed = committedSet(project, store)
+    val committed = snapshot(project, store).committed
     staged.filterNot(s => committed.contains((s.shard, s.file))).foreach { s =>
       Files.deleteIfExists(shardDir(project, store, s.shard).resolve(s.file))
     }
@@ -252,14 +378,14 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
     * clock to age-gate with, by design — determinism over convenience).
     * Returns the number of files removed. */
   def vacuumOrphans(project: String, store: String): Int = {
-    val committed = committedSet(project, store)
+    val snap = snapshot(project, store)
     var removed = 0
-    listShards(project, store).foreach { sh =>
+    snap.shards.foreach { sh =>
       val dir = shardDir(project, store, sh.id)
       if (Files.isDirectory(dir)) {
         listDir(dir)
           .filter(n => n.endsWith(".jsonl") && !n.startsWith("."))
-          .filterNot(n => committed.contains((sh.id, n)))
+          .filterNot(n => snap.committed.contains((sh.id, n)))
           .foreach { n => Files.deleteIfExists(dir.resolve(n)); removed += 1 }
       }
     }
@@ -275,9 +401,6 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
     try stream.iterator().asScala.map(_.getFileName.toString).toSeq
     finally stream.close()
   }
-
-  case class Segment(fileName: String, logicalName: String,
-      minTime: Int, maxTime: Int, count: Long)
 
   private def manifestFiles(project: String, store: String): Seq[String] = {
     val dir = manifestDir(project, store)
@@ -299,11 +422,11 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
   def headVersion(project: String, store: String): Long =
     currentVersion(project, store)
 
-  /** All committed (shard, file) pairs in commit order. A checkpoint
-    * manifest (written by [[compactManifests]]) carries the full prefix
-    * folded in, so reading starts at the LAST checkpoint and folds only
-    * the delta manifests after it — O(commits since compaction), not
-    * O(all commits ever).
+  /** One validated fold of the whole manifest log, plus the shard list
+    * — see [[StoreSnapshot]]. A checkpoint manifest (written by
+    * [[compactManifests]]) carries the full prefix folded in, so the fold
+    * starts at the LAST checkpoint and reads only the delta manifests
+    * after it — O(commits since compaction), not O(all commits ever).
     *
     * A compaction can delete superseded delta manifests between our
     * directory listing and the per-file reads; a reader that trips on
@@ -312,8 +435,32 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
     * A torn listing (later manifest observed, earlier one missed) is
     * detected by the contiguity guard in [[viewFrom]] and also
     * re-lists. */
-  private def committedEntries(project: String, store: String): Seq[(Int, String)] =
-    manifestView(project, store).entries
+  def snapshot(project: String, store: String): StoreSnapshot = {
+    var attempt = 0
+    while (true) {
+      try {
+        viewFrom(project, store, manifestFiles(project, store)) match {
+          case Some(view) => return view
+          case None => // torn listing — re-list for a consistent snapshot
+            attempt += 1
+            if (attempt > 64) throw new IllegalStateException(
+              s"manifest listing for $project/$store torn after $attempt attempts")
+        }
+      } catch {
+        case e: java.nio.file.NoSuchFileException =>
+          attempt += 1
+          if (attempt > 64) throw e
+      }
+    }
+    throw new IllegalStateException("unreachable")
+  }
+
+  /** One listing and fold for the maintenance operations, which derive
+    * their checkpoint version and the files they delete from it: None on
+    * a torn or raced listing, so the caller re-lists. */
+  private def snapshotOnce(project: String, store: String): Option[StoreSnapshot] =
+    try viewFrom(project, store, manifestFiles(project, store))
+    catch { case _: java.nio.file.NoSuchFileException => None }
 
   /** Highest committed manifest version (0 = empty store). The handle a
     * caller pins to read this exact snapshot later via [[shardEndsAt]]. */
@@ -347,12 +494,7 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
           case Some(view) =>
             // END ordinal = retention base + live counts (a shard whose
             // every segment expired still ends at its base)
-            val counts = view.entries.groupBy(_._1).map { case (s, es) =>
-              s -> es.map(e => parseSegment(e._2).count).sum
-            }
-            return (counts.keySet ++ view.bases.keySet).map { s =>
-              s -> (view.bases.getOrElse(s, 0L) + counts.getOrElse(s, 0L))
-            }.toMap
+            return view.logs.map { case (s, log) => s -> log.end }
           case None =>
             // Either the prefix was compacted away (a checkpoint above
             // `version` subsumed and deleted its deltas — permanent) or
@@ -378,36 +520,6 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
       s"manifest listing for $project/$store torn after $attempt attempts")
   }
 
-  /** One validated, untorn view of the manifest directory. `absorbed` =
-    * (shard, file) pairs folded INTO merged segments by a past
-    * [[compactSegments]] — no longer part of the ordinal fold, but
-    * still "committed" for replay-idempotence purposes (a streaming
-    * epoch replayed after its segments were merged away must be
-    * skipped, not re-appended). */
-  private case class ManifestView(files: Seq[String],
-      entries: Seq[(Int, String)], checkpointVersion: Long,
-      absorbed: Seq[(Int, String)], bases: Map[Int, Long])
-
-  private def manifestView(project: String, store: String): ManifestView = {
-    var attempt = 0
-    while (true) {
-      try {
-        viewFrom(project, store, manifestFiles(project, store)) match {
-          case Some(view) => return view
-          case None => // torn listing — re-list for a consistent snapshot
-            attempt += 1
-            if (attempt > 64) throw new IllegalStateException(
-              s"manifest listing for $project/$store torn after $attempt attempts")
-        }
-      } catch {
-        case e: java.nio.file.NoSuchFileException =>
-          attempt += 1
-          if (attempt > 64) throw e
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
-
   /** Fold an explicit manifest-file listing (sorted = commit order) into
     * committed (shard, file) pairs, validating the listing is an untorn
     * snapshot first. Manifest versions are DENSE by construction (max+1
@@ -421,7 +533,7 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
     * harmless: readers fold a consistent prefix, and a compactor
     * checkpointing at max+1 collides on the link and retries.) */
   private def viewFrom(project: String, store: String,
-      files: Seq[String]): Option[ManifestView] = {
+      files: Seq[String]): Option[StoreSnapshot] = {
     val mDir = manifestDir(project, store)
     val mapper = new ObjectMapper()
     val trees = files.map(m =>
@@ -433,23 +545,21 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
     val untorn =
       versions.lazyZip(versions.drop(1)).forall((a, b) => b == a + 1) &&
         (lastCkpt >= 0 || versions.headOption.forall(_ == 1L))
+    def pairs(n: com.fasterxml.jackson.databind.JsonNode): Seq[(Int, String)] =
+      n.elements().asScala.map(e => (e.get("shard").asInt(), e.get("file").asText())).toSeq
     if (!untorn) None
-    else Some(ManifestView(
+    else Some(new StoreSnapshot(
+      versions.lastOption.getOrElse(0L),
+      // read after the manifests: a shard a split added before any
+      // listed commit could write to it is always in the list
+      readShards(project, store, mapper),
       files,
-      trees.drop(math.max(lastCkpt, 0)).flatMap { tree =>
-        tree.get("segments").elements().asScala.map { n =>
-          (n.get("shard").asInt(), n.get("file").asText())
-        }.toSeq
-      },
       if (lastCkpt >= 0) manifestVersion(files(lastCkpt)) else 0L,
+      trees.drop(math.max(lastCkpt, 0)).flatMap(t => pairs(t.get("segments"))),
       // only checkpoints carry an absorbed list (written by
       // compactSegments, carried forward by every later checkpoint)
       if (lastCkpt < 0) Seq.empty
-      else Option(trees(lastCkpt).get("absorbed")).toSeq.flatMap { a =>
-        a.elements().asScala.map { n =>
-          (n.get("shard").asInt(), n.get("file").asText())
-        }.toSeq
-      },
+      else Option(trees(lastCkpt).get("absorbed")).toSeq.flatMap(pairs),
       // per-shard base ordinals (written by expireSegments; absent = 0)
       if (lastCkpt < 0) Map.empty
       else Option(trees(lastCkpt).get("bases")).map { b =>
@@ -476,28 +586,21 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
       // version >= ours and collides on the link below — the loser
       // retries. A TORN listing (directory iteration concurrent with a
       // writer's createLink can observe a later manifest while missing
-      // an earlier one) is rejected by foldValidated's contiguity
-      // guard — versions are dense, so a hole proves the listing is not
-      // a snapshot — and we re-list rather than checkpoint without the
-      // missed commit.
-      val folded = manifestFiles(project, store)
-      if (folded.isEmpty) return
-      val viewOpt =
-        try viewFrom(project, store, folded)
-        catch {
-          // a racing compactor deleted part of our snapshot: re-list
-          case _: java.nio.file.NoSuchFileException => None
-        }
-      viewOpt match {
+      // an earlier one) is rejected by viewFrom's contiguity guard —
+      // versions are dense, so a hole proves the listing is not a
+      // snapshot — and we re-list rather than checkpoint without the
+      // missed commit; so does a listing a racing compactor deleted
+      // part of.
+      snapshotOnce(project, store) match {
         case None => // retry with a fresh snapshot
         case Some(view) =>
+          if (view.files.isEmpty) return
           // absorbed + bases (replay memory, retention bases) survive
           // every later checkpoint
-          val version = folded.map(manifestVersion).max + 1
-          if (writeCheckpoint(project, store, version, view.entries,
+          if (writeCheckpoint(project, store, view.version + 1, view.entries,
               view.absorbed, view.bases)) {
             done = true
-            folded.foreach(f => Files.deleteIfExists(mDir.resolve(f)))
+            view.files.foreach(f => Files.deleteIfExists(mDir.resolve(f)))
           } // else lost the race: retry
       }
     }
@@ -557,33 +660,26 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
     val mDir = manifestDir(project, store)
     if (!Files.isDirectory(mDir)) return 0
     while (true) {
-      val folded = manifestFiles(project, store)
-      if (folded.isEmpty) return 0
-      val viewOpt =
-        try viewFrom(project, store, folded)
-        catch { case _: java.nio.file.NoSuchFileException => None }
-      viewOpt match {
+      snapshotOnce(project, store) match {
         case None => // torn/raced listing: re-list
         case Some(view) =>
+          if (view.files.isEmpty) return 0
           val expired = mutable.Buffer[(Int, String)]()
           val newBases = mutable.Map[Int, Long]() ++ view.bases
-          view.entries.groupBy(_._1).foreach { case (shard, es) =>
-            val pre = es.map(_._2).takeWhile(f =>
-              parseSegment(f).maxTime < beforeTime)
+          view.logs.foreach { case (shard, log) =>
+            val pre = log.segments.takeWhile(_.maxTime < beforeTime)
             if (pre.nonEmpty) {
-              expired ++= pre.map(f => (shard, f))
-              newBases(shard) = newBases.getOrElse(shard, 0L) +
-                pre.map(parseSegment(_).count).sum
+              expired ++= pre.map(seg => (shard, seg.fileName))
+              newBases(shard) = pre.last.end
             }
           }
           if (expired.isEmpty) return 0
           val gone = expired.toSet
           val newEntries = view.entries.filterNot(gone.contains)
           val absorbed = (view.absorbed ++ expired).distinct
-          val version = folded.map(manifestVersion).max + 1
-          if (writeCheckpoint(project, store, version, newEntries,
+          if (writeCheckpoint(project, store, view.version + 1, newEntries,
               absorbed, newBases.toMap)) {
-            folded.foreach(f => Files.deleteIfExists(mDir.resolve(f)))
+            view.files.foreach(f => Files.deleteIfExists(mDir.resolve(f)))
             expired.foreach { case (shard, f) =>
               Files.deleteIfExists(shardDir(project, store, shard).resolve(f))
             }
@@ -597,23 +693,7 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
   /** First live ordinal of a shard (0 until retention moves it). The
     * `earliest` offset resolution target. */
   def shardStart(project: String, store: String, shard: Int): Long =
-    manifestView(project, store).bases.getOrElse(shard, 0L)
-
-  /** Every shard's (base ordinal, live segments) from ONE manifest
-    * fold — the whole-store analog of [[shardView]]. Ordinal math that
-    * spans shards (stat pushdown) must read bases and listings from a
-    * single view: separate per-shard calls can straddle a concurrent
-    * expiry or compaction and misalign the two. */
-  def storeView(project: String,
-      store: String): Map[Int, (Long, Seq[Segment])] = {
-    val view = manifestView(project, store)
-    val segs = view.entries.groupBy(_._1)
-    (view.bases.keySet ++ segs.keySet ++
-        listShards(project, store).map(_.id)).map { s =>
-      s -> (view.bases.getOrElse(s, 0L),
-        segs.getOrElse(s, Seq.empty).map(e => parseSegment(e._2)))
-    }.toMap
-  }
+    snapshot(project, store).shard(shard).start
 
   /** Bin-pack small consecutive segments into larger merged ones, per
     * shard — the OPTIMIZE counterpart to [[compactManifests]], aimed at
@@ -658,18 +738,14 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
     if (!Files.isDirectory(mDir)) return 0
     val mapper = new ObjectMapper()
     while (true) {
-      val folded = manifestFiles(project, store)
-      if (folded.isEmpty) return 0
-      val viewOpt =
-        try viewFrom(project, store, folded)
-        catch { case _: java.nio.file.NoSuchFileException => None }
-      viewOpt match {
+      snapshotOnce(project, store) match {
         case None => // torn/raced listing: re-list
         case Some(view) =>
+          if (view.files.isEmpty) return 0
           // greedy consecutive runs per shard: >= 2 segments, <= target
           val runOf = mutable.Map[(Int, String), Int]()
           val runFiles = mutable.Buffer[(Int, Seq[String])]()
-          view.entries.groupBy(_._1).foreach { case (shard, es) =>
+          view.logs.foreach { case (shard, log) =>
             var cur = mutable.Buffer[String]()
             var total = 0L
             def flush(): Unit = {
@@ -680,12 +756,12 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
               }
               cur = mutable.Buffer[String](); total = 0L
             }
-            es.map(_._2).foreach { f =>
-              val c = parseSegment(f).count
+            log.segments.foreach { seg =>
+              val c = seg.count
               if (c >= targetRecords) flush()
               else {
                 if (total + c > targetRecords) flush()
-                cur += f; total += c
+                cur += seg.fileName; total += c
               }
             }
             flush()
@@ -704,7 +780,8 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
               .digest((s"$shard|" + files.mkString("|"))
                 .getBytes(StandardCharsets.UTF_8))
             val hex = digest.take(8).map(b => f"$b%02x").mkString
-            id -> stageSegment(project, store, shard, s"opt$hex", records).file
+            id -> stageWith(view, project, store,
+              Seq((shard, s"opt$hex", records))).head.file
           }.toMap
           // rewrite the entry list: a run's first member becomes the
           // merged file, later members drop out, everything else stays
@@ -719,12 +796,11 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
           val absorbed = (view.absorbed ++
             runFiles.flatMap { case (shard, files) =>
               files.map(f => (shard, f)) }).distinct
-          val version = folded.map(manifestVersion).max + 1
           onCompactStaged()
-          if (writeCheckpoint(project, store, version, newEntries,
+          if (writeCheckpoint(project, store, view.version + 1, newEntries,
               absorbed, view.bases)) {
             // committed: superseded deltas and replaced data files go
-            folded.foreach(f => Files.deleteIfExists(mDir.resolve(f)))
+            view.files.foreach(f => Files.deleteIfExists(mDir.resolve(f)))
             runFiles.foreach { case (shard, files) =>
               files.foreach(f => Files.deleteIfExists(
                 shardDir(project, store, shard).resolve(f)))
@@ -737,7 +813,7 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
             // unconditional cleanup would delete its committed data.
             // Only files still absent from the committed view are ours
             // to remove; then retry on a fresh snapshot.
-            val committed = committedSet(project, store)
+            val committed = snapshot(project, store).committed
             runFiles.zipWithIndex.foreach { case ((shard, _), id) =>
               if (!committed.contains((shard, mergedName(id))))
                 Files.deleteIfExists(
@@ -749,66 +825,21 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
     0 // unreachable
   }
 
-  /** Everything ever committed — live manifest entries PLUS segments a
-    * compaction absorbed into merged files. Replay idempotence
-    * (commitSegments' skip, stageSegment's shape guard, discardStaged)
-    * must use this set, not the live entries, or an epoch replayed
-    * after its segments were merged away would re-append its data. */
-  private def committedSet(project: String, store: String): Set[(Int, String)] = {
-    val view = manifestView(project, store)
-    (view.entries ++ view.absorbed).toSet
-  }
-
-  private def committedFile(project: String, store: String, shard: Int,
-      logicalName: String): Option[String] = {
-    val view = manifestView(project, store)
-    (view.entries ++ view.absorbed).collectFirst {
-      case (s, f) if s == shard && f.startsWith(logicalName + "-") &&
-        parseSegment(f).logicalName == logicalName => f
-    }
-  }
-
-  private def parseSegment(fileName: String): Segment = {
-    val parts = fileName.stripSuffix(".jsonl").split("-")
-    Segment(fileName, parts.dropRight(3).mkString("-"),
-      parts(parts.length - 3).toInt, parts(parts.length - 2).toInt,
-      parts.last.toLong)
-  }
-
   /** A shard's committed segments in commit order — the record sequence
     * cursors index into. Pure function of the manifest log: stable under
     * concurrent writers and racing readers. */
   def listSegments(project: String, store: String, shard: Int): Seq[Segment] =
-    committedEntries(project, store)
-      .collect { case (s, f) if s == shard => parseSegment(f) }
-
-  /** One consistent (base ordinal, live segments) pair for a shard —
-    * ordinal math must never mix a base and a listing from two
-    * different manifest views (an expiry between them would double- or
-    * zero-count the dropped prefix). */
-  private def shardView(project: String, store: String,
-      shard: Int): (Long, Seq[Segment]) = {
-    val view = manifestView(project, store)
-    (view.bases.getOrElse(shard, 0L),
-      view.entries.collect { case (s, f) if s == shard => parseSegment(f) })
-  }
+    snapshot(project, store).shard(shard).segments
 
   /** Total records ever committed to a shard = END cursor ordinal
     * (retention moves the START, never the end). */
-  def shardEnd(project: String, store: String, shard: Int): Long = {
-    val (base, segs) = shardView(project, store, shard)
-    base + segs.map(_.count).sum
-  }
+  def shardEnd(project: String, store: String, shard: Int): Long =
+    snapshot(project, store).shard(shard).end
 
   /** Base ordinal of each committed segment in commit order — the
     * cursor value of the segment's first record. */
-  def segmentBases(project: String, store: String, shard: Int): Array[Long] = {
-    val (base, segs) = shardView(project, store, shard)
-    val bases = new Array[Long](segs.length)
-    var acc = base; var i = 0
-    while (i < segs.length) { bases(i) = acc; acc += segs(i).count; i += 1 }
-    bases
-  }
+  def segmentBases(project: String, store: String, shard: Int): Array[Long] =
+    snapshot(project, store).shard(shard).segments.map(_.base).toArray
 
   /** First ordinal whose record time >= t (for cursor-from-time);
     * shardEnd if none. Segments whose embedded maxTime < t are skipped
@@ -835,12 +866,11 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
 
   private def cursorAtTimeOnce(project: String, store: String, shard: Int,
       t: Int): Long = {
-    val (base, segs) = shardView(project, store, shard)
-    var ordinal = base
+    val log = snapshot(project, store).shard(shard)
     val mapper = new ObjectMapper()
-    segs.foreach { seg =>
-      if (seg.maxTime < t) ordinal += seg.count
-      else {
+    log.segments.foreach { seg =>
+      if (seg.maxTime >= t) {
+        var ordinal = seg.base
         val lines = io(Files.readAllLines(
           shardDir(project, store, shard).resolve(seg.fileName))).asScala
         lines.foreach { line =>
@@ -849,7 +879,7 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
         }
       }
     }
-    ordinal
+    log.end
   }
 
   /** Read records with ordinals in [from, until). An optional time range
@@ -868,72 +898,90 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
   def read(project: String, store: String, shard: Int,
       from: Long, until: Long,
       timeRange: Option[(Int, Int)] = None): Iterator[(Long, LogRecord)] =
-    new Iterator[(Long, LogRecord)] {
-      private var cur = from
-      private var attempts = 0
-      private var inner = readOnce(project, store, shard, cur, until, timeRange)
-      private def heal(): Unit = {
-        attempts += 1
-        if (attempts > 64) throw new IllegalStateException(
-          s"segment listing for $project/$store shard $shard raced " +
-            s"compaction $attempts times")
-        inner = readOnce(project, store, shard, cur, until, timeRange)
-      }
-      override def hasNext: Boolean = {
-        while (true) {
-          try return inner.hasNext
-          catch { case _: java.nio.file.NoSuchFileException => heal() }
+    readSegments(project, store, shard,
+      snapshot(project, store).shard(shard).segments, from, until, timeRange)
+
+  /** [[read]] over a segment list an earlier snapshot resolved (a
+    * partition's carried list): no fold unless a listed file is gone. */
+  def readSegments(project: String, store: String, shard: Int,
+      segments: Seq[Segment], from: Long, until: Long,
+      timeRange: Option[(Int, Int)]): SegmentReader =
+    new SegmentReader(project, store, shard, segments, from, until, timeRange)
+
+  /** The iterator behind [[read]]. [[segmentBase]] names the segment
+    * each record came from, so a caller's sequence numbers always match
+    * the listing the record was actually read from, healed or not. */
+  final class SegmentReader private[EmbeddedLogStore] (project: String,
+      store: String, shard: Int, listed: Seq[Segment], from: Long,
+      until: Long, timeRange: Option[(Int, Int)])
+      extends Iterator[(Long, LogRecord)] {
+    private val mapper = new ObjectMapper()
+    private val dir = shardDir(project, store, shard)
+    private var cur = from // next ordinal not yet consumed
+    private var heals = 0
+    private var todo = select(listed)
+    private var file: java.io.BufferedReader = null
+    private var fileBase = 0L
+    private var lineOrd = 0L // ordinal of the open file's next line
+    private var pending: (Long, LogRecord) = null
+    private var pendingBase = 0L
+    private var lastBase = 0L
+
+    /** Base ordinal of the segment the record [[next]] returned last
+      * came from. */
+    def segmentBase: Long = lastBase
+
+    private def select(segs: Seq[Segment]): Iterator[Segment] =
+      segs.iterator.filter { seg =>
+        seg.base < until && seg.end > cur && timeRange.forall {
+          case (fromT, untilT) => seg.maxTime >= fromT && seg.minTime < untilT
         }
-        false
       }
-      override def next(): (Long, LogRecord) = {
-        while (true) {
-          try {
-            val r = inner.next()
-            cur = r._1 + 1
-            return r
-          } catch { case _: java.nio.file.NoSuchFileException => heal() }
-        }
-        throw new IllegalStateException("unreachable")
-      }
+
+    private def heal(): Unit = {
+      heals += 1
+      if (heals > 64) throw new IllegalStateException(
+        s"segment listing for $project/$store shard $shard raced " +
+          s"compaction $heals times")
+      todo = select(snapshot(project, store).shard(shard).segments)
     }
 
-  private def readOnce(project: String, store: String, shard: Int,
-      from: Long, until: Long,
-      timeRange: Option[(Int, Int)]): Iterator[(Long, LogRecord)] = {
-    val mapper = new ObjectMapper()
-    val dir = shardDir(project, store, shard)
-    val (shardBase, segs) = shardView(project, store, shard)
-    var base = shardBase // ordinals below it were expired by retention
-    val out = mutable.Buffer[(String, Long)]() // (file, segBase)
-    segs.foreach { seg =>
-      val ordOverlap = base < until && base + seg.count > from
-      val timeOverlap = timeRange.forall { case (fromT, untilT) =>
-        seg.maxTime >= fromT && seg.minTime < untilT
+    def close(): Unit = if (file != null) { file.close(); file = null }
+
+    override def hasNext: Boolean = {
+      while (pending == null && cur < until) {
+        if (file == null) {
+          if (!todo.hasNext) return false
+          val seg = todo.next()
+          try {
+            file = io(Files.newBufferedReader(dir.resolve(seg.fileName),
+              StandardCharsets.UTF_8))
+            fileBase = seg.base; lineOrd = seg.base
+          } catch { case _: java.nio.file.NoSuchFileException => heal() }
+        } else {
+          val line = file.readLine()
+          val ord = lineOrd
+          lineOrd += 1
+          if (line == null || ord >= until) close()
+          else if (ord >= cur) {
+            cur = ord + 1
+            val r = jsonToRecord(mapper, line)
+            if (timeRange.forall { case (fromT, untilT) =>
+                r.time >= fromT && r.time < untilT }) {
+              pending = (ord, r); pendingBase = fileBase
+            }
+          }
+        }
       }
-      if (ordOverlap && timeOverlap) out += ((seg.fileName, base))
-      base += seg.count
+      if (pending == null) close()
+      pending != null
     }
-    val inRange = out.iterator.flatMap { case (file, segBase) =>
-      val reader = io(Files.newBufferedReader(dir.resolve(file), StandardCharsets.UTF_8))
-      new Iterator[(Long, String)] {
-        private var ord = segBase
-        private var line: String = advance()
-        private def advance(): String = {
-          var l = reader.readLine()
-          while (l != null && ord < from) { ord += 1; l = reader.readLine() }
-          if (l == null || ord >= until) { reader.close(); null } else l
-        }
-        override def hasNext: Boolean = line != null
-        override def next(): (Long, String) = {
-          val r = (ord, line); ord += 1; line = advance(); r
-        }
-      }.map { case (ord, l) => (ord, jsonToRecord(mapper, l)) }
-    }
-    timeRange match {
-      case Some((fromT, untilT)) =>
-        inRange.filter { case (_, r) => r.time >= fromT && r.time < untilT }
-      case None => inRange
+
+    override def next(): (Long, LogRecord) = {
+      if (!hasNext) throw new NoSuchElementException("read past the end")
+      val r = pending
+      pending = null; lastBase = pendingBase
+      r
     }
   }
 
@@ -948,7 +996,7 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
     root.put("version", "v1")
     val c = root.putObject("config")
     config.foreach { case (k, v) => c.put(k, v) }
-    Files.write(storeDir(project, store).resolve("config.json"),
+    writeAtomically(storeDir(project, store).resolve("config.json"),
       mapper.writeValueAsBytes(root))
   }
 
@@ -1069,12 +1117,12 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
     * typed read/write schema, persisted as DDL next to meta.json so
     * every session resolves the same table shape. */
   def writeTableSchema(project: String, store: String, ddl: String): Unit =
-    Files.write(storeDir(project, store).resolve("schema.ddl"),
+    writeAtomically(storeDir(project, store).resolve("schema.ddl"),
       ddl.getBytes(StandardCharsets.UTF_8))
 
   def readTableSchema(project: String, store: String): Option[String] = {
     val p = storeDir(project, store).resolve("schema.ddl")
-    if (Files.exists(p)) Some(new String(Files.readAllBytes(p),
+    if (Files.exists(p)) Some(new String(io(Files.readAllBytes(p)),
       StandardCharsets.UTF_8)) else None
   }
 
@@ -1115,7 +1163,7 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
     val p = storeDir(project, store).resolve("config.json")
     if (!Files.exists(p)) return Map.empty
     val mapper = new ObjectMapper()
-    val n = mapper.readTree(Files.readAllBytes(p)).get("config")
+    val n = mapper.readTree(io(Files.readAllBytes(p))).get("config")
     if (n == null) Map.empty
     else n.asInstanceOf[ObjectNode].properties().asScala
       .map(e => e.getKey -> e.getValue.asText()).toMap
