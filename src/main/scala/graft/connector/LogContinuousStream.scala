@@ -20,13 +20,10 @@ class LogContinuousStream(schema: StructType, opts: LogServiceOptions)
 
   private val store = opts.newStore
 
-  override def initialOffset(): Offset = opts.startingOffsets.trim.toLowerCase match {
-    // retention moves earliest to the per-shard base
-    case "earliest" => LogServiceOffset(opts.project, opts.store,
-      store.snapshot(opts.project, opts.store).starts)
-    case "latest" => LogServiceOffset(opts.project, opts.store,
-      store.snapshot(opts.project, opts.store).ends)
-    case json => LogServiceOffset.parse(json)
+  override def initialOffset(): Offset = {
+    val snap = store.snapshot(opts.project, opts.store)
+    LogServiceOffset(opts.project, opts.store,
+      OffsetRanges.resolve(snap, opts, opts.startingOffsets, snap.ends))
   }
 
   override def planInputPartitions(start: Offset): Array[InputPartition] = {

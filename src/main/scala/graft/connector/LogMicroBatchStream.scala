@@ -38,19 +38,8 @@ class LogMicroBatchStream(schema: StructType, opts: LogServiceOptions)
 
   override def initialOffset(): Offset = {
     val snap = snapshot()
-    opts.startingOffsets.trim.toLowerCase match {
-      // retention moves earliest to the per-shard base
-      case "earliest" => LogServiceOffset(opts.project, opts.store, snap.starts)
-      case "latest" => LogServiceOffset(opts.project, opts.store, shardEnds(snap))
-      case json =>
-        val o = LogServiceOffset.parse(json)
-        val ends = shardEnds(snap)
-        o.copy(shardOrdinals = o.shardOrdinals.map {
-          case (s, -1L) => s -> ends.getOrElse(s, 0L)
-          case (s, -2L) => s -> snap.shard(s).start
-          case (s, n) => s -> n
-        })
-    }
+    LogServiceOffset(opts.project, opts.store,
+      OffsetRanges.resolve(snap, opts, opts.startingOffsets, shardEnds(snap)))
   }
 
   override def getDefaultReadLimit: ReadLimit =

@@ -53,7 +53,6 @@ case class LogServiceOptions(all: Map[String, String]) {
     norm.getOrElse("maxoffsetspertrigger", "65536").toLong
   val appendSequenceNumber: Boolean =
     norm.getOrElse("appendsequencenumber", "false").toBoolean
-  val numShards: Int = norm.getOrElse("store.shards", "2").toInt
   /** Bounded time-range scan [starttime, endtime) in unix seconds —
     * the S8 LoghubBatchRDD surface (LoghubBatchRDD.scala:30-208). */
   val startTime: Option[Int] = norm.get("starttime").map(_.toInt)
@@ -66,7 +65,7 @@ case class LogServiceOptions(all: Map[String, String]) {
     * reference's hash-key routing (K6, RDDLoghubWriter.scala:27-78). */
   val routingColumn: Option[String] = norm.get("routing.column")
   /** Batch-only snapshot read pinned at a manifest version (Delta-style
-    * time travel; see EmbeddedLogStore.shardEndsAt). */
+    * time travel; see EmbeddedLogStore.snapshot). */
   val snapshotVersion: Option[Long] = norm.get("store.snapshotversion").map(_.toLong)
   /** Sink-side auto-OPTIMIZE: once any shard holds this many segments
     * smaller than `store.autocompact.target` records, the streaming
@@ -295,34 +294,18 @@ class LogStatScan(opts: LogServiceOptions, statCols: String,
     s"graft-logstore stats-from-manifest($statCols) ${opts.project}#${opts.store}"
   override def toBatch: Batch = this
   override def planInputPartitions(): Array[InputPartition] = {
-    val store = opts.newStore
-    // ONE snapshot for every shard's (base, segments): mixing per-shard
-    // folds could straddle a concurrent expiry and misalign bases
-    // against listings. The snapshot ends are pinned by version —
-    // consistent by construction — and the segment-alignment require
-    // below still guards any base/end drift loudly.
-    val snap = store.snapshot(opts.project, opts.store)
-    val snapEnds = opts.snapshotVersion.map(v =>
-      store.shardEndsAt(opts.project, opts.store, v))
+    // ONE fold (pinned when `store.snapshotversion` is set) gives every
+    // shard's live segments: mixing per-shard folds could straddle a
+    // concurrent expiry and misalign bases against listings
+    val snap = opts.newStore.snapshot(opts.project, opts.store, opts.snapshotVersion)
     var total = 0L
     var minT = Long.MaxValue
     var maxT = Long.MinValue
-    snap.logs.toSeq.sortBy(_._1).foreach { case (shard, log) =>
-      // fold segments in ordinal order; a snapshot clamp is always
-      // segment-aligned (shardEndsAt sums whole segment counts), so a
-      // segment is either fully in the snapshot or fully out — the
-      // [minTime, maxTime] envelope is only valid for whole segments
-      // live ordinals start at the retention base (expired prefix gone)
-      val end = snapEnds.map(_.getOrElse(shard, 0L)).getOrElse(Long.MaxValue)
-      log.segments.foreach { seg =>
-        if (seg.base < end && seg.count > 0) {
-          require(seg.end <= end,
-            s"snapshot end $end splits a segment at ordinal ${seg.base} — " +
-              "manifest prefix must be segment-aligned")
-          total += seg.count
-          if (seg.minTime < minT) minT = seg.minTime
-          if (seg.maxTime > maxT) maxT = seg.maxTime
-        }
+    snap.logs.values.flatMap(_.segments).foreach { seg =>
+      if (seg.count > 0) {
+        total += seg.count
+        if (seg.minTime < minT) minT = seg.minTime
+        if (seg.maxTime > maxT) maxT = seg.maxTime
       }
     }
     Array(LogStatPartition(statCols, total,
@@ -369,9 +352,10 @@ class LogScan(schema: StructType, opts: LogServiceOptions,
     s"graft-logstore ${opts.project}#${opts.store} timeRange=$pushedTimeRange limit=$pushedLimit"
 
   /** The scan's one manifest fold, taken on first use and shared by
-    * statistics, offset resolution and partition planning. */
+    * statistics, offset resolution and partition planning; pinned at
+    * `store.snapshotversion` when that is set. */
   private lazy val snapshot: StoreSnapshot =
-    opts.newStore.snapshot(opts.project, opts.store)
+    opts.newStore.snapshot(opts.project, opts.store, opts.snapshotVersion)
 
   /** Exact row count from segment metadata (no data reads) — lets
     * Catalyst/AQE treat small stores as broadcast-able instead of
@@ -441,24 +425,25 @@ class LogBatch(schema: StructType, opts: LogServiceOptions,
   }
 
   override def planInputPartitions(): Array[InputPartition] = {
+    // reference O2 (LoghubSourceProvider.scala:216-248): a bounded batch
+    // cannot start at latest nor end at earliest
+    if (opts.startingOffsets.trim.equalsIgnoreCase("latest"))
+      throw new IllegalArgumentException("starting offsets can't be 'latest' for batch queries")
+    if (opts.endingOffsets.trim.equalsIgnoreCase("earliest"))
+      throw new IllegalArgumentException("ending offsets can't be 'earliest'")
     val snap = snapshot()
-    val startOrds = OffsetRanges.resolve(snap, opts, opts.startingOffsets, isStart = true)
-    val endOrds = OffsetRanges.resolve(snap, opts, opts.endingOffsets, isStart = false)
+    val startOrds = OffsetRanges.resolve(snap, opts, opts.startingOffsets, snap.ends)
+    val endOrds = OffsetRanges.resolve(snap, opts, opts.endingOffsets, snap.ends)
     val tr = effectiveTimeRange
     // with a residual time filter the first-n ordinals may not be the
     // first n MATCHING rows — the cap applies only to unfiltered scans
     val cap = if (tr.isEmpty) pushedLimit else None
-    // snapshot read: every shard's end is clamped to its ordinal prefix
-    // as of the pinned manifest version (ordinals are append-stable, so
-    // the prefix IS the point-in-time content)
-    val snapEnds = opts.snapshotVersion.map(v =>
-      opts.newStore.shardEndsAt(opts.project, opts.store, v))
     snap.shards.flatMap { s =>
       val from = startOrds.getOrElse(s.id, 0L)
-      val until0 = snapEnds match {
-        case Some(se) => math.min(endOrds.getOrElse(s.id, 0L), se.getOrElse(s.id, 0L))
-        case None => endOrds.getOrElse(s.id, 0L)
-      }
+      // a pinned snapshot ends at the shard's ordinal prefix as of its
+      // version (ordinals are append-stable, so that prefix IS the
+      // point-in-time content); no end reads past the plan's snapshot
+      val until0 = math.min(endOrds.getOrElse(s.id, 0L), snap.shard(s.id).end)
       val until = cap.map(n => math.min(until0, from + n)).getOrElse(until0)
       if (until <= from) Seq.empty
       else {
@@ -477,27 +462,24 @@ class LogBatch(schema: StructType, opts: LogServiceOptions,
 }
 
 object OffsetRanges {
-  /** earliest | latest | offset-json → per-shard ordinals. Validation per
-    * reference O2 (LoghubSourceProvider.scala:216-248): a bounded batch
-    * cannot start at latest nor end at earliest. */
+  /** earliest | latest | offset-json → per-shard ordinals, for batch
+    * bounds and both streams' initial offsets. `earliest` is each
+    * shard's retention base in `snap`; `latest` is `ends` (the
+    * snapshot's ends, or a micro-batch's frozen AvailableNow target).
+    * The JSON is parsed as given (project and store names are
+    * case-sensitive) and must name this table. */
   def resolve(snap: StoreSnapshot, opts: LogServiceOptions, spec: String,
-      isStart: Boolean): Map[Int, Long] =
+      ends: Map[Int, Long]): Map[Int, Long] =
     spec.trim.toLowerCase match {
-      case "earliest" =>
-        if (!isStart) throw new IllegalArgumentException(
-          "ending offsets can't be 'earliest'")
-        snap.starts
-      case "latest" =>
-        if (isStart) throw new IllegalArgumentException(
-          "starting offsets can't be 'latest' for batch queries")
-        snap.ends
+      case "earliest" => snap.starts
+      case "latest" => ends
       case _ =>
         val o = LogServiceOffset.parse(spec)
         require(o.project == opts.project && o.store == opts.store,
           s"offset json for ${o.project}#${o.store}, expected ${opts.project}#${opts.store}")
         // sentinels per LoghubOffsetRangeLimit: -1 latest, -2 earliest
         o.shardOrdinals.map {
-          case (s, -1L) => s -> snap.shard(s).end
+          case (s, -1L) => s -> ends.getOrElse(s, snap.shard(s).end)
           case (s, -2L) => s -> snap.shard(s).start
           case (s, n) => s -> n
         }

@@ -620,8 +620,7 @@ object ConnectorQueries {
       .write.format("graft-logstore").options(opts).mode("append").save()
     val expired = store.expireSegments("proj", "ret", cutoff)
     require(expired > 0 &&
-      store.listShards("proj", "ret")
-        .forall(s => store.shardStart("proj", "ret", s.id) > 0),
+      store.snapshot("proj", "ret").starts.values.forall(_ > 0),
       s"retention expired $expired segments but moved no base")
     spark.read.format("graft-logstore").options(opts)
       .schema("event_id LONG, event_type STRING, value DOUBLE")
@@ -654,8 +653,10 @@ object ConnectorQueries {
     for (k <- 0 until 8)
       ev.filter(col("event_id") % 8 === k)
         .write.format("graft-logstore").options(opts).mode("append").save()
-    def nSegments = store.listShards("proj", "opt")
-      .map(s => store.listSegments("proj", "opt", s.id).size).sum
+    def nSegments = {
+      val snap = store.snapshot("proj", "opt")
+      snap.shards.map(s => snap.shard(s.id).segments.size).sum
+    }
     val before = nSegments
     store.compactSegments("proj", "opt")
     val after = nSegments
@@ -980,8 +981,7 @@ object ConnectorQueries {
     write(ev.filter(col("event_id") % 2 === 1)) // commit 2 = the increment
     val v2 = store.latestVersion("proj", "inc")
     val fromOffsets = graft.connector.LogServiceOffset("proj", "inc",
-      store.listShards("proj", "inc").map(s =>
-        s.id -> store.shardEndsAt("proj", "inc", v1).getOrElse(s.id, 0L)).toMap)
+      store.snapshot("proj", "inc", Some(v1)).ends)
     spark.read.format("graft-logstore").options(opts)
       .option("startingoffsets", fromOffsets.json())
       .option("store.snapshotversion", v2.toString)

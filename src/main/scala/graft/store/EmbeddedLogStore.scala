@@ -1,10 +1,9 @@
 package graft.store
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
-import java.io.File
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.nio.file.{Files, Path, Paths}
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
@@ -146,6 +145,15 @@ final class StoreSnapshot private[store] (
   * so nothing short of reading the files can tell a stale fold from a
   * current one.
   *
+  * **One code path per decision.** Every fold, live or pinned at a
+  * version, is [[snapshot]]; every manifest is published by
+  * `linkManifest`; the three log rewrites (manifest compaction,
+  * retention, segment compaction) share one optimistic checkpoint loop,
+  * `rewriteLog`; and every data-file read (scans, time lookups,
+  * compaction's merge input) goes through [[SegmentReader]]. So each
+  * shares one re-list bound, the [[Retry.io]] contract and the
+  * compaction heal path.
+  *
   * On a cluster the root lives on shared storage; every operation here
   * is a pure function of manifest contents, so any executor can read or
   * write without coordination beyond the version link.
@@ -214,15 +222,21 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
   /** Replace `path` whole: write a temp sibling, then rename it over the
     * target. A concurrent reader sees the old or the new content, never
     * the empty or partial file an in-place rewrite exposes. */
-  private def writeAtomically(path: java.nio.file.Path, bytes: Array[Byte]): Unit = {
-    val tmp = path.resolveSibling(
-      s".${path.getFileName}.tmp-${System.nanoTime()}-${Thread.currentThread().getId}")
+  private def writeAtomically(path: Path, bytes: Array[Byte]): Unit = {
+    val tmp = tmpSibling(path)
     try io {
       Files.write(tmp, bytes)
       Files.move(tmp, path, java.nio.file.StandardCopyOption.REPLACE_EXISTING,
         java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     } finally Files.deleteIfExists(tmp)
   }
+
+  /** A hidden temp name beside `path`, unique per writer thread: two
+    * writers racing for the same target (two committers claiming one
+    * manifest version) must never share a temp file, or one deletes the
+    * file the other is about to link or rename. */
+  private def tmpSibling(path: Path): Path = path.resolveSibling(
+    s".${path.getFileName}.tmp-${System.nanoTime()}-${Thread.currentThread().getId}")
 
   /** Split a shard: parent becomes read-only, two new shards are created
     * (reference semantics: parent drains then is skipped —
@@ -307,17 +321,9 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
       if (fresh.isEmpty) { done = true }
       else {
         val version = snap.version + 1
-        val mapper = new ObjectMapper()
-        val rootNode = mapper.createObjectNode()
-        rootNode.put("version", version)
-        val arr = rootNode.putArray("segments")
-        fresh.foreach { s =>
-          val n = arr.addObject(); n.put("shard", s.shard); n.put("file", s.file)
-        }
-        val tmp = mDir.resolve(s".m-$version.json.tmp-${System.nanoTime()}")
-        io(Files.write(tmp, mapper.writeValueAsBytes(rootNode)))
-        try {
-          io(Files.createLink(mDir.resolve(f"m-$version%010d.json"), tmp))
+        // a lost link race leaves `done` false: re-snapshot and retry
+        if (linkManifest(mDir, version, checkpoint = false,
+            fresh.map(s => (s.shard, s.file)))) {
           // The link can land in a version slot a concurrent compaction
           // just VACATED: if our listing raced the compactor's deletions
           // and missed its checkpoint, `version` can sit below the
@@ -335,14 +341,12 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
             val visible = view.entries.toSet
             if (fresh.forall(s => visible.contains((s.shard, s.file)))) {
               verifying = false; done = true
-            } else if (view.checkpointVersion > version || attempt > 64) {
-              Files.deleteIfExists(mDir.resolve(f"m-$version%010d.json"))
+            } else if (view.checkpointVersion > version || attempt > MaxRelists) {
+              Files.deleteIfExists(mDir.resolve(manifestName(version)))
               verifying = false // outer loop recommits the segments
             } else attempt += 1 // torn view missed our manifest: re-list
           }
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException => // lost the race
-        } finally Files.deleteIfExists(tmp)
+        }
       }
     }
     // long-running streams write one manifest per epoch: fold the
@@ -396,7 +400,7 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
     * open directory fd until closed, and the manifest protocol lists on
     * every fold, so an unclosed stream here exhausts the process fd
     * table under load. */
-  private def listDir(dir: java.nio.file.Path): Seq[String] = {
+  private def listDir(dir: Path): Seq[String] = io {
     val stream = Files.list(dir)
     try stream.iterator().asScala.map(_.getFileName.toString).toSeq
     finally stream.close()
@@ -405,7 +409,7 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
   private def manifestFiles(project: String, store: String): Seq[String] = {
     val dir = manifestDir(project, store)
     if (!Files.isDirectory(dir)) return Seq.empty
-    io(listDir(dir))
+    listDir(dir)
       .filter(n => n.startsWith("m-") && n.endsWith(".json"))
       .sorted // zero-padded version ⇒ commit order
   }
@@ -413,20 +417,34 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
   private def manifestVersion(name: String): Long =
     name.stripPrefix("m-").stripSuffix(".json").toLong
 
-  private def currentVersion(project: String, store: String): Long =
-    manifestFiles(project, store).map(manifestVersion)
-      .maxOption.getOrElse(0L)
+  private def manifestName(version: Long): String = f"m-$version%010d.json"
 
-  /** Current manifest head — the version a snapshot read pins
-    * (`store.snapshotversion` / SQL `VERSION AS OF`). */
-  def headVersion(project: String, store: String): Long =
-    currentVersion(project, store)
+  private def readManifest(mDir: Path, name: String, mapper: ObjectMapper): JsonNode =
+    mapper.readTree(io(Files.readAllBytes(mDir.resolve(name))))
 
-  /** One validated fold of the whole manifest log, plus the shard list
-    * — see [[StoreSnapshot]]. A checkpoint manifest (written by
-    * [[compactManifests]]) carries the full prefix folded in, so the fold
-    * starts at the LAST checkpoint and reads only the delta manifests
-    * after it — O(commits since compaction), not O(all commits ever).
+  private def isCheckpoint(manifest: JsonNode): Boolean =
+    manifest.get("checkpoint") != null && manifest.get("checkpoint").asBoolean()
+
+  /** Highest committed manifest version (0 = empty store): the handle a
+    * caller pins to read this exact state later (`snapshot(..., Some(v))`,
+    * `store.snapshotversion`, SQL `VERSION AS OF`). */
+  def latestVersion(project: String, store: String): Long =
+    manifestFiles(project, store).map(manifestVersion).maxOption.getOrElse(0L)
+
+  /** One validated fold of the manifest log, plus the shard list — see
+    * [[StoreSnapshot]]. A checkpoint manifest (written by the log
+    * rewrites) carries the full prefix folded in, so the fold starts at
+    * the LAST checkpoint and reads only the delta manifests after it —
+    * O(commits since compaction), not O(all commits ever).
+    *
+    * `atVersion` pins the fold to the manifests up to that version — the
+    * snapshot / time-travel read surface. A record's ordinal is pinned by
+    * the first manifest that listed it, so the pinned fold is exactly the
+    * per-shard ordinal prefix as of that version, immune to later
+    * appends. A version below the last checkpoint is permanently
+    * unreadable (its deltas were folded away and deleted, as with Delta
+    * Lake VACUUM) and fails loudly rather than silently reading a
+    * different state; a version above the head reads as the head.
     *
     * A compaction can delete superseded delta manifests between our
     * directory listing and the per-file reads; a reader that trips on
@@ -435,81 +453,33 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
     * A torn listing (later manifest observed, earlier one missed) is
     * detected by the contiguity guard in [[viewFrom]] and also
     * re-lists. */
-  def snapshot(project: String, store: String): StoreSnapshot = {
+  def snapshot(project: String, store: String,
+      atVersion: Option[Long] = None): StoreSnapshot = {
+    atVersion.foreach(v => require(v >= 0, s"snapshot version must be >= 0, got $v"))
     var attempt = 0
-    while (true) {
-      try {
-        viewFrom(project, store, manifestFiles(project, store)) match {
-          case Some(view) => return view
-          case None => // torn listing — re-list for a consistent snapshot
-            attempt += 1
-            if (attempt > 64) throw new IllegalStateException(
-              s"manifest listing for $project/$store torn after $attempt attempts")
-        }
-      } catch {
-        case e: java.nio.file.NoSuchFileException =>
-          attempt += 1
-          if (attempt > 64) throw e
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
-
-  /** One listing and fold for the maintenance operations, which derive
-    * their checkpoint version and the files they delete from it: None on
-    * a torn or raced listing, so the caller re-lists. */
-  private def snapshotOnce(project: String, store: String): Option[StoreSnapshot] =
-    try viewFrom(project, store, manifestFiles(project, store))
-    catch { case _: java.nio.file.NoSuchFileException => None }
-
-  /** Highest committed manifest version (0 = empty store). The handle a
-    * caller pins to read this exact snapshot later via [[shardEndsAt]]. */
-  def latestVersion(project: String, store: String): Long =
-    currentVersion(project, store)
-
-  /** Per-shard END ordinals as of manifest `version` — the snapshot /
-    * time-travel read surface. Because readers fold manifests in version
-    * order and a record's ordinal is pinned by the first manifest that
-    * listed it, the snapshot at `version` is exactly the ordinal prefix
-    * [0, end) per shard — so a bounded scan capped at these ends is a
-    * consistent point-in-time read, immune to concurrent appends.
-    *
-    * A version below the last compaction checkpoint is permanently
-    * unreadable (its delta manifests were folded away and deleted, as
-    * with Delta Lake VACUUM): fails loudly rather than silently reading
-    * a different snapshot. Versions above the current head read as the
-    * head (the usual "read at t > now" semantics). */
-  def shardEndsAt(project: String, store: String, version: Long): Map[Int, Long] = {
-    require(version >= 0, s"snapshot version must be >= 0, got $version")
-    var attempt = 0
-    while (attempt <= 64) {
+    while (attempt <= MaxRelists) {
       try {
         val files = manifestFiles(project, store)
-        val pre = files.filter(manifestVersion(_) <= version)
-        // An empty prefix under a nonempty manifest log means the
-        // history at `version` is not listable (vacuously "valid" to
-        // viewFrom) — treat it like a torn/compacted prefix below.
-        val gone = pre.isEmpty && version >= 1 && files.nonEmpty
+        val pre = atVersion.fold(files)(v => files.filter(manifestVersion(_) <= v))
+        // An empty prefix under a nonempty manifest log means the pinned
+        // history is not listable (vacuously "valid" to viewFrom)
+        val gone = pre.isEmpty && files.nonEmpty && atVersion.exists(_ >= 1)
         (if (gone) None else viewFrom(project, store, pre)) match {
-          case Some(view) =>
-            // END ordinal = retention base + live counts (a shard whose
-            // every segment expired still ends at its base)
-            return view.logs.map { case (s, log) => s -> log.end }
+          case Some(view) => return view
           case None =>
-            // Either the prefix was compacted away (a checkpoint above
-            // `version` subsumed and deleted its deltas — permanent) or
+            // Either the pinned prefix was compacted away (a checkpoint
+            // above it subsumed and deleted its deltas — permanent) or
             // the listing raced a writer/compactor (transient: re-list).
-            val mapper = new ObjectMapper()
-            val compacted = files.filter(manifestVersion(_) > version).exists { f =>
-              try {
-                val t = mapper.readTree(io(Files.readAllBytes(
-                  manifestDir(project, store).resolve(f))))
-                t.get("checkpoint") != null && t.get("checkpoint").asBoolean()
-              } catch { case _: java.nio.file.NoSuchFileException => false }
+            atVersion.foreach { v =>
+              val mapper = new ObjectMapper()
+              val compacted = files.filter(manifestVersion(_) > v).exists { f =>
+                try isCheckpoint(readManifest(manifestDir(project, store), f, mapper))
+                catch { case _: java.nio.file.NoSuchFileException => false }
+              }
+              if (compacted) throw new IllegalArgumentException(
+                s"snapshot version $v of $project/$store predates the " +
+                  "last manifest compaction and is no longer readable")
             }
-            if (compacted) throw new IllegalArgumentException(
-              s"snapshot version $version of $project/$store predates the " +
-                "last manifest compaction and is no longer readable")
             attempt += 1
         }
       } catch {
@@ -519,6 +489,12 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
     throw new IllegalStateException(
       s"manifest listing for $project/$store torn after $attempt attempts")
   }
+
+  /** Per-shard END ordinals as of manifest `version` (retention base +
+    * live counts: a shard whose every segment expired still ends at its
+    * base) — see [[snapshot]]. */
+  def shardEndsAt(project: String, store: String, version: Long): Map[Int, Long] =
+    snapshot(project, store, Some(version)).logs.map { case (s, log) => s -> log.end }
 
   /** Fold an explicit manifest-file listing (sorted = commit order) into
     * committed (shard, file) pairs, validating the listing is an untorn
@@ -536,16 +512,14 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
       files: Seq[String]): Option[StoreSnapshot] = {
     val mDir = manifestDir(project, store)
     val mapper = new ObjectMapper()
-    val trees = files.map(m =>
-      mapper.readTree(io(Files.readAllBytes(mDir.resolve(m)))))
-    val lastCkpt = trees.lastIndexWhere(t =>
-      t.get("checkpoint") != null && t.get("checkpoint").asBoolean())
+    val trees = files.map(readManifest(mDir, _, mapper))
+    val lastCkpt = trees.lastIndexWhere(isCheckpoint)
     val tailFiles = files.drop(math.max(lastCkpt, 0))
     val versions = tailFiles.map(manifestVersion)
     val untorn =
       versions.lazyZip(versions.drop(1)).forall((a, b) => b == a + 1) &&
         (lastCkpt >= 0 || versions.headOption.forall(_ == 1L))
-    def pairs(n: com.fasterxml.jackson.databind.JsonNode): Seq[(Int, String)] =
+    def pairs(n: JsonNode): Seq[(Int, String)] =
       n.elements().asScala.map(e => (e.get("shard").asInt(), e.get("file").asText())).toSeq
     if (!untorn) None
     else Some(new StoreSnapshot(
@@ -575,68 +549,95 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
     * every entry they could read from the old manifests is in the
     * checkpoint, in the same order. Run periodically (e.g. every ~1e3
     * epochs) to bound per-trigger manifest reads. */
-  def compactManifests(project: String, store: String): Unit = {
+  def compactManifests(project: String, store: String): Unit =
+    rewriteLog(project, store)(view =>
+      Some(Rewrite(view.entries, view.absorbed, view.bases)))
+
+  /** A checkpoint planned against one snapshot: its entries, absorbed
+    * list and retention bases; the data files it retires (deleted once
+    * it lands); the files the plan staged (deleted if it loses the
+    * race); and what the operation returns. */
+  private case class Rewrite(entries: Seq[(Int, String)],
+      absorbed: Seq[(Int, String)], bases: Map[Int, Long],
+      retired: Seq[(Int, String)] = Seq.empty,
+      staged: Seq[(Int, String)] = Seq.empty, result: Int = 0)
+
+  /** The one log-rewrite loop behind [[compactManifests]],
+    * [[expireSegments]] and [[compactSegments]]. ONE snapshot feeds both
+    * the plan and the checkpoint's version (snapshot + 1): a manifest a
+    * racing writer commits after the listing carries a version >= ours
+    * and collides on the link, and the loser re-plans on a fresh
+    * snapshot; a torn or raced listing never reaches a plan, because
+    * [[snapshot]] re-lists it. Superseded delta manifests and retired
+    * data files are deleted only after the link lands. Every plan
+    * carries absorbed + bases forward (replay memory and retention bases
+    * survive every later checkpoint). `plan` returns None when there is
+    * nothing to rewrite; the result is the landed plan's (else 0). */
+  private def rewriteLog(project: String, store: String)(
+      plan: StoreSnapshot => Option[Rewrite]): Int = {
     val mDir = manifestDir(project, store)
-    if (!Files.isDirectory(mDir)) return
-    var done = false
-    while (!done) {
-      // ONE directory listing is the snapshot: both the folded entries
-      // and the checkpoint's version derive from it. A manifest
-      // committed by a racing writer after this listing carries a
-      // version >= ours and collides on the link below — the loser
-      // retries. A TORN listing (directory iteration concurrent with a
-      // writer's createLink can observe a later manifest while missing
-      // an earlier one) is rejected by viewFrom's contiguity guard —
-      // versions are dense, so a hole proves the listing is not a
-      // snapshot — and we re-list rather than checkpoint without the
-      // missed commit; so does a listing a racing compactor deleted
-      // part of.
-      snapshotOnce(project, store) match {
-        case None => // retry with a fresh snapshot
-        case Some(view) =>
-          if (view.files.isEmpty) return
-          // absorbed + bases (replay memory, retention bases) survive
-          // every later checkpoint
-          if (writeCheckpoint(project, store, view.version + 1, view.entries,
-              view.absorbed, view.bases)) {
-            done = true
+    if (!Files.isDirectory(mDir)) return 0
+    def delete(files: Seq[(Int, String)]): Unit = files.foreach { case (shard, f) =>
+      Files.deleteIfExists(shardDir(project, store, shard).resolve(f))
+    }
+    while (true) {
+      val view = snapshot(project, store)
+      if (view.files.isEmpty) return 0
+      plan(view) match {
+        case None => return 0
+        case Some(r) =>
+          if (linkManifest(mDir, view.version + 1, checkpoint = true,
+              r.entries, r.absorbed, r.bases)) {
             view.files.foreach(f => Files.deleteIfExists(mDir.resolve(f)))
-          } // else lost the race: retry
+            delete(r.retired)
+            return r.result
+          }
+          // Lost the race. Staged names are DETERMINISTIC, so a racing
+          // rewrite of the same view staged — and may have just
+          // committed — these exact files; unconditional cleanup would
+          // delete its committed data. Only files still absent from the
+          // committed view are ours to remove.
+          if (r.staged.nonEmpty) {
+            val committed = snapshot(project, store).committed
+            delete(r.staged.filterNot(committed.contains))
+          }
       }
     }
+    0 // unreachable
   }
 
-  /** Write a checkpoint manifest at `version` via the optimistic link
-    * protocol. Returns true if the link landed (caller then owns
-    * cleanup of superseded files), false on a version collision. */
-  private def writeCheckpoint(project: String, store: String, version: Long,
-      entries: Seq[(Int, String)], absorbed: Seq[(Int, String)],
-      bases: Map[Int, Long]): Boolean = {
-    val mDir = manifestDir(project, store)
+  /** Publish one manifest at `version`: write it to a temp file, then
+    * hard-link it as `m-<version>.json`. Link creation is
+    * atomic-fail-if-exists, so two writers can never claim the same
+    * version: returns false when the version is taken. A checkpoint
+    * carries the folded prefix plus the absorbed list and bases. */
+  private def linkManifest(mDir: Path, version: Long,
+      checkpoint: Boolean, entries: Seq[(Int, String)],
+      absorbed: Seq[(Int, String)] = Seq.empty,
+      bases: Map[Int, Long] = Map.empty): Boolean = {
     val mapper = new ObjectMapper()
     val rootNode = mapper.createObjectNode()
     rootNode.put("version", version)
-    rootNode.put("checkpoint", true)
-    val arr = rootNode.putArray("segments")
-    entries.foreach { case (shard, file) =>
-      val n = arr.addObject(); n.put("shard", shard); n.put("file", file)
-    }
-    if (absorbed.nonEmpty) {
-      val ab = rootNode.putArray("absorbed")
-      absorbed.foreach { case (shard, file) =>
-        val n = ab.addObject(); n.put("shard", shard); n.put("file", file)
+    if (checkpoint) rootNode.put("checkpoint", true)
+    def putPairs(field: String, pairs: Seq[(Int, String)]): Unit = {
+      val arr = rootNode.putArray(field)
+      pairs.foreach { case (shard, file) =>
+        val n = arr.addObject(); n.put("shard", shard); n.put("file", file)
       }
     }
+    putPairs("segments", entries)
+    if (absorbed.nonEmpty) putPairs("absorbed", absorbed)
     if (bases.nonEmpty) {
       val b = rootNode.putObject("bases")
       bases.toSeq.sortBy(_._1).foreach { case (shard, base) =>
         b.put(shard.toString, base)
       }
     }
-    val tmp = mDir.resolve(s".m-$version.json.tmp-${System.nanoTime()}")
+    val target = mDir.resolve(manifestName(version))
+    val tmp = tmpSibling(target)
     io(Files.write(tmp, mapper.writeValueAsBytes(rootNode)))
     try {
-      io(Files.createLink(mDir.resolve(f"m-$version%010d.json"), tmp))
+      io(Files.createLink(target, tmp))
       true
     } catch {
       case _: java.nio.file.FileAlreadyExistsException => false
@@ -656,44 +657,35 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
     * Expired (shard, file) pairs join the absorbed list, so a streaming
     * epoch replayed after its output expired is still deduped, never
     * resurrected. Returns the number of segments expired. */
-  def expireSegments(project: String, store: String, beforeTime: Int): Int = {
-    val mDir = manifestDir(project, store)
-    if (!Files.isDirectory(mDir)) return 0
-    while (true) {
-      snapshotOnce(project, store) match {
-        case None => // torn/raced listing: re-list
-        case Some(view) =>
-          if (view.files.isEmpty) return 0
-          val expired = mutable.Buffer[(Int, String)]()
-          val newBases = mutable.Map[Int, Long]() ++ view.bases
-          view.logs.foreach { case (shard, log) =>
-            val pre = log.segments.takeWhile(_.maxTime < beforeTime)
-            if (pre.nonEmpty) {
-              expired ++= pre.map(seg => (shard, seg.fileName))
-              newBases(shard) = pre.last.end
-            }
-          }
-          if (expired.isEmpty) return 0
-          val gone = expired.toSet
-          val newEntries = view.entries.filterNot(gone.contains)
-          val absorbed = (view.absorbed ++ expired).distinct
-          if (writeCheckpoint(project, store, view.version + 1, newEntries,
-              absorbed, newBases.toMap)) {
-            view.files.foreach(f => Files.deleteIfExists(mDir.resolve(f)))
-            expired.foreach { case (shard, f) =>
-              Files.deleteIfExists(shardDir(project, store, shard).resolve(f))
-            }
-            return expired.size
-          } // else lost the race: retry on a fresh snapshot
+  def expireSegments(project: String, store: String, beforeTime: Int): Int =
+    rewriteLog(project, store) { view =>
+      val expired = mutable.Buffer[(Int, String)]()
+      val newBases = mutable.Map[Int, Long]() ++ view.bases
+      view.logs.foreach { case (shard, log) =>
+        val pre = log.segments.takeWhile(_.maxTime < beforeTime)
+        if (pre.nonEmpty) {
+          expired ++= pre.map(seg => (shard, seg.fileName))
+          newBases(shard) = pre.last.end
+        }
+      }
+      if (expired.isEmpty) None
+      else {
+        val gone = expired.toSet
+        Some(Rewrite(view.entries.filterNot(gone.contains),
+          (view.absorbed ++ expired).distinct, newBases.toMap,
+          retired = expired.toSeq, result = expired.size))
       }
     }
-    0 // unreachable
-  }
 
   /** First live ordinal of a shard (0 until retention moves it). The
     * `earliest` offset resolution target. */
   def shardStart(project: String, store: String, shard: Int): Long =
     snapshot(project, store).shard(shard).start
+
+  /** Test seam: runs after a compaction attempt has staged its merged
+    * files, before it tries to commit — lets a spec deterministically
+    * interleave a concurrent compactor into the race window. */
+  private[graft] var onCompactStaged: () => Unit = () => ()
 
   /** Bin-pack small consecutive segments into larger merged ones, per
     * shard — the OPTIMIZE counterpart to [[compactManifests]], aimed at
@@ -717,112 +709,70 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
     *     shape guard consult — a streaming epoch replayed after its
     *     segments were merged is skipped, not re-appended.
     *
-    * Commit uses the same single-snapshot optimistic checkpoint
-    * protocol as [[compactManifests]]: one validated listing feeds both
-    * the rewritten entry list and the version; a racing commit collides
-    * on the version link and one side retries. Superseded delta
-    * manifests and replaced data files are deleted only after the link
-    * lands. Runs of >= 2 consecutive segments are merged while their
-    * record total stays <= `targetRecords`; segments at or above the
-    * target are left alone. Returns the number of merged segments
-    * written (0 = nothing worth merging). */
-  /** Test seam: runs after a compaction attempt has staged its merged
-    * files, before it tries to commit — lets a spec deterministically
-    * interleave a concurrent compactor into the race window. */
-  private[graft] var onCompactStaged: () => Unit = () => ()
-
+    * Commit goes through [[rewriteLog]], the optimistic checkpoint
+    * protocol every log rewrite shares. Merged names are a digest of
+    * their constituents, so a crashed or raced attempt re-stages the
+    * same name atomically. Runs of >= 2 consecutive segments are merged
+    * while their record total stays <= `targetRecords`; segments at or
+    * above the target are left alone. Returns the number of merged
+    * segments written (0 = nothing worth merging). */
   def compactSegments(project: String, store: String,
       targetRecords: Long = 1L << 20): Int = {
     require(targetRecords > 0, s"targetRecords $targetRecords must be > 0")
-    val mDir = manifestDir(project, store)
-    if (!Files.isDirectory(mDir)) return 0
-    val mapper = new ObjectMapper()
-    while (true) {
-      snapshotOnce(project, store) match {
-        case None => // torn/raced listing: re-list
-        case Some(view) =>
-          if (view.files.isEmpty) return 0
-          // greedy consecutive runs per shard: >= 2 segments, <= target
-          val runOf = mutable.Map[(Int, String), Int]()
-          val runFiles = mutable.Buffer[(Int, Seq[String])]()
-          view.logs.foreach { case (shard, log) =>
-            var cur = mutable.Buffer[String]()
-            var total = 0L
-            def flush(): Unit = {
-              if (cur.size >= 2) {
-                val id = runFiles.size
-                runFiles += ((shard, cur.toSeq))
-                cur.foreach(f => runOf((shard, f)) = id)
-              }
-              cur = mutable.Buffer[String](); total = 0L
-            }
-            log.segments.foreach { seg =>
-              val c = seg.count
-              if (c >= targetRecords) flush()
-              else {
-                if (total + c > targetRecords) flush()
-                cur += seg.fileName; total += c
-              }
-            }
-            flush()
+    rewriteLog(project, store) { view =>
+      // greedy consecutive runs per shard: >= 2 segments, <= target
+      val runOf = mutable.Map[(Int, String), Int]()
+      val runs = mutable.Buffer[(Int, Seq[Segment])]()
+      view.logs.foreach { case (shard, log) =>
+        var cur = mutable.Buffer[Segment]()
+        var total = 0L
+        def flush(): Unit = {
+          if (cur.size >= 2) {
+            val id = runs.size
+            runs += ((shard, cur.toSeq))
+            cur.foreach(seg => runOf((shard, seg.fileName)) = id)
           }
-          if (runFiles.isEmpty) return 0
-          // stage each merged segment (constituents read in order); the
-          // logical name is a digest of the constituent files, so a
-          // crashed attempt re-stages the same name atomically
-          val mergedName = runFiles.zipWithIndex.map { case ((shard, files), id) =>
-            val records = files.flatMap { f =>
-              io(Files.readAllLines(
-                  shardDir(project, store, shard).resolve(f))).asScala
-                .map(l => jsonToRecord(mapper, l))
-            }
-            val digest = java.security.MessageDigest.getInstance("MD5")
-              .digest((s"$shard|" + files.mkString("|"))
-                .getBytes(StandardCharsets.UTF_8))
-            val hex = digest.take(8).map(b => f"$b%02x").mkString
-            id -> stageWith(view, project, store,
-              Seq((shard, s"opt$hex", records))).head.file
-          }.toMap
-          // rewrite the entry list: a run's first member becomes the
-          // merged file, later members drop out, everything else stays
-          val emitted = mutable.Set[Int]()
-          val newEntries = view.entries.flatMap { case (shard, f) =>
-            runOf.get((shard, f)) match {
-              case Some(id) =>
-                if (emitted.add(id)) Some((shard, mergedName(id))) else None
-              case None => Some((shard, f))
-            }
+          cur = mutable.Buffer[Segment](); total = 0L
+        }
+        log.segments.foreach { seg =>
+          val c = seg.count
+          if (c >= targetRecords) flush()
+          else {
+            if (total + c > targetRecords) flush()
+            cur += seg; total += c
           }
-          val absorbed = (view.absorbed ++
-            runFiles.flatMap { case (shard, files) =>
-              files.map(f => (shard, f)) }).distinct
-          onCompactStaged()
-          if (writeCheckpoint(project, store, view.version + 1, newEntries,
-              absorbed, view.bases)) {
-            // committed: superseded deltas and replaced data files go
-            view.files.foreach(f => Files.deleteIfExists(mDir.resolve(f)))
-            runFiles.foreach { case (shard, files) =>
-              files.foreach(f => Files.deleteIfExists(
-                shardDir(project, store, shard).resolve(f)))
-            }
-            return runFiles.size
-          } else {
-            // Lost the race. Merged names are DETERMINISTIC (digest of
-            // constituents), so a concurrent compactor of the same view
-            // staged — and may have just committed — these exact files;
-            // unconditional cleanup would delete its committed data.
-            // Only files still absent from the committed view are ours
-            // to remove; then retry on a fresh snapshot.
-            val committed = snapshot(project, store).committed
-            runFiles.zipWithIndex.foreach { case ((shard, _), id) =>
-              if (!committed.contains((shard, mergedName(id))))
-                Files.deleteIfExists(
-                  shardDir(project, store, shard).resolve(mergedName(id)))
-            }
+        }
+        flush()
+      }
+      if (runs.isEmpty) None
+      else {
+        // stage each merged segment (constituents read in order)
+        val merged = runs.map { case (shard, segs) =>
+          val records = readSegments(project, store, shard, segs,
+            segs.head.base, segs.last.end, None).map(_._2).toVector
+          val digest = java.security.MessageDigest.getInstance("MD5")
+            .digest((s"$shard|" + segs.map(_.fileName).mkString("|"))
+              .getBytes(StandardCharsets.UTF_8))
+          val hex = digest.take(8).map(b => f"$b%02x").mkString
+          (shard, stageWith(view, project, store,
+            Seq((shard, s"opt$hex", records))).head.file)
+        }
+        // rewrite the entry list: a run's first member becomes the
+        // merged file, later members drop out, everything else stays
+        val emitted = mutable.Set[Int]()
+        val newEntries = view.entries.flatMap { case (shard, f) =>
+          runOf.get((shard, f)) match {
+            case Some(id) => if (emitted.add(id)) Some(merged(id)) else None
+            case None => Some((shard, f))
           }
+        }
+        val retired = runs.toSeq.flatMap { case (shard, segs) =>
+          segs.map(seg => (shard, seg.fileName)) }
+        onCompactStaged()
+        Some(Rewrite(newEntries, (view.absorbed ++ retired).distinct, view.bases,
+          retired = retired, staged = merged.toSeq, result = runs.size))
       }
     }
-    0 // unreachable
   }
 
   /** A shard's committed segments in commit order — the record sequence
@@ -836,51 +786,36 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
   def shardEnd(project: String, store: String, shard: Int): Long =
     snapshot(project, store).shard(shard).end
 
-  /** Base ordinal of each committed segment in commit order — the
-    * cursor value of the segment's first record. */
-  def segmentBases(project: String, store: String, shard: Int): Array[Long] =
-    snapshot(project, store).shard(shard).segments.map(_.base).toArray
-
   /** First ordinal whose record time >= t (for cursor-from-time);
     * shardEnd if none. Segments whose embedded maxTime < t are skipped
-    * from the listing alone — only the first candidate segment onward
-    * is actually scanned. */
-  def cursorAtTime(project: String, store: String, shard: Int, t: Int): Long =
-    retryOnMissingFile(s"cursorAtTime $project/$store/$shard")(
-      cursorAtTimeOnce(project, store, shard, t))
-
-  /** Bounded re-list retry for scans that read data files from a
-    * listing a racing [[compactSegments]] may have invalidated. */
-  private def retryOnMissingFile[T](what: String)(op: => T): T = {
-    var attempts = 0
-    while (true) {
-      try return op
-      catch {
-        case e: java.nio.file.NoSuchFileException =>
-          attempts += 1
-          if (attempts > 64) throw e
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
-
-  private def cursorAtTimeOnce(project: String, store: String, shard: Int,
-      t: Int): Long = {
+    * from the listing alone: the read starts at the first segment with
+    * maxTime >= t, which holds the answer. (A time-range read would not
+    * do: the range is half-open, so no bound admits a record stamped
+    * Int.MaxValue.) */
+  def cursorAtTime(project: String, store: String, shard: Int, t: Int): Long = {
     val log = snapshot(project, store).shard(shard)
-    val mapper = new ObjectMapper()
-    log.segments.foreach { seg =>
-      if (seg.maxTime >= t) {
-        var ordinal = seg.base
-        val lines = io(Files.readAllLines(
-          shardDir(project, store, shard).resolve(seg.fileName))).asScala
-        lines.foreach { line =>
-          if (mapper.readTree(line).get("time").asInt() >= t) return ordinal
-          ordinal += 1
-        }
-      }
+    log.segments.find(_.maxTime >= t).fold(log.end) { seg =>
+      val it = readSegments(project, store, shard, log.segments, seg.base,
+        log.end, None)
+      try it.find(_._2.time >= t).fold(log.end)(_._1) finally it.close()
     }
-    log.end
   }
+
+  /** Exact per-shard record count with time in [fromT, untilT) — the
+    * histogram primitive behind admission control (reference O4,
+    * LoghubOffsetReader.scala:155-220; ours is exact, not bucketed).
+    * Segments fully inside the range are counted from their embedded
+    * metadata; fully outside are skipped — only boundary-straddling
+    * segments are read, each over its own ordinal range, so a read that
+    * heals across a racing compaction still counts exactly its records. */
+  def countInTimeRange(project: String, store: String, shard: Int,
+      fromT: Int, untilT: Int): Long =
+    snapshot(project, store).shard(shard).segments.map { seg =>
+      if (seg.minTime >= untilT || seg.maxTime < fromT) 0L
+      else if (seg.minTime >= fromT && seg.maxTime < untilT) seg.count
+      else readSegments(project, store, shard, Seq(seg), seg.base, seg.end,
+        Some((fromT, untilT))).size.toLong
+    }.sum
 
   /** Read records with ordinals in [from, until). An optional time range
     * [fromT, untilT) additionally (a) skips whole segments whose embedded
@@ -940,7 +875,7 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
 
     private def heal(): Unit = {
       heals += 1
-      if (heals > 64) throw new IllegalStateException(
+      if (heals > MaxRelists) throw new IllegalStateException(
         s"segment listing for $project/$store shard $shard raced " +
           s"compaction $heals times")
       todo = select(snapshot(project, store).shard(shard).segments)
@@ -1023,7 +958,7 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
   def commitGroupOffsets(project: String, store: String, group: String,
       offsets: Map[Int, Long]): Map[Int, Long] = {
     val dir = groupDir(project, store, group)
-    Files.createDirectories(dir)
+    io(Files.createDirectories(dir))
     writeGroupEntry(dir, offsets)
     val entries = listGroupEntries(dir)
     if (entries.size > GroupCompactThreshold) compactGroupEntries(dir, entries)
@@ -1038,12 +973,12 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
   private val GroupCompactThreshold = 32
 
   private def groupDir(project: String, store: String,
-      group: String): java.nio.file.Path = {
+      group: String): Path = {
     require(group.matches("[A-Za-z0-9._-]+"), s"invalid group name '$group'")
     storeDir(project, store).resolve("groups").resolve(group)
   }
 
-  private def writeGroupEntry(dir: java.nio.file.Path,
+  private def writeGroupEntry(dir: Path,
       offsets: Map[Int, Long]): Unit = {
     val mapper = new ObjectMapper()
     val root = mapper.createObjectNode()
@@ -1053,25 +988,18 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
     // append-only, so uniqueness is all that's needed (no ordering)
     val name = s"c-${System.nanoTime()}-${Thread.currentThread().getId}-" +
       s"${scala.util.Random.nextInt(Int.MaxValue)}.json"
-    val tmp = dir.resolve(s".$name.tmp")
-    Files.write(tmp, mapper.writeValueAsBytes(root))
-    Files.move(tmp, dir.resolve(name),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    writeAtomically(dir.resolve(name), mapper.writeValueAsBytes(root))
   }
 
-  private def listGroupEntries(dir: java.nio.file.Path): Seq[String] = {
-    if (!Files.exists(dir)) return Seq.empty
-    val s = Files.list(dir)
-    try s.iterator().asScala.map(_.getFileName.toString)
-      .filter(n => n.startsWith("c-") && n.endsWith(".json")).toSeq
-    finally s.close()
-  }
+  private def listGroupEntries(dir: Path): Seq[String] =
+    if (!Files.exists(dir)) Seq.empty
+    else listDir(dir).filter(n => n.startsWith("c-") && n.endsWith(".json"))
 
-  private def readGroupEntry(dir: java.nio.file.Path,
+  private def readGroupEntry(dir: Path,
       name: String): Option[Map[Int, Long]] =
     try {
       val n = new ObjectMapper()
-        .readTree(Files.readAllBytes(dir.resolve(name))).get("offsets")
+        .readTree(io(Files.readAllBytes(dir.resolve(name)))).get("offsets")
       if (n == null) Some(Map.empty)
       else Some(n.asInstanceOf[ObjectNode].properties().asScala
         .map(e => e.getKey.toInt -> e.getValue.asLong()).toMap)
@@ -1079,7 +1007,7 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
       case _: java.nio.file.NoSuchFileException => None
     }
 
-  private def foldGroupEntries(dir: java.nio.file.Path): Map[Int, Long] = {
+  private def foldGroupEntries(dir: Path): Map[Int, Long] = {
     var attempt = 0
     while (true) {
       val names = listGroupEntries(dir)
@@ -1090,13 +1018,13 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
         return reads.flatMap(_._2.get).groupBy(_._1)
           .map { case (s, vs) => s -> vs.map(_._2).max }
       attempt += 1
-      if (attempt > 64) throw new IllegalStateException(
+      if (attempt > MaxRelists) throw new IllegalStateException(
         s"group listing at $dir torn after $attempt attempts")
     }
     throw new IllegalStateException("unreachable")
   }
 
-  private def compactGroupEntries(dir: java.nio.file.Path,
+  private def compactGroupEntries(dir: Path,
       names: Seq[String]): Unit = {
     val folded = names.flatMap(n => readGroupEntry(dir, n))
     if (folded.isEmpty) return
@@ -1131,21 +1059,14 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
 
   def listProjects(): Seq[String] = {
     val rootPath = Paths.get(root)
-    if (!Files.exists(rootPath)) return Seq.empty
-    val s = Files.list(rootPath)
-    try s.iterator().asScala.filter(Files.isDirectory(_))
-      .map(_.getFileName.toString).toSeq.sorted
-    finally s.close()
+    if (!Files.exists(rootPath)) Seq.empty
+    else listDir(rootPath).filter(n => Files.isDirectory(rootPath.resolve(n))).sorted
   }
 
   def listStores(project: String): Seq[String] = {
     val p = Paths.get(root, project)
-    if (!Files.exists(p)) return Seq.empty
-    val s = Files.list(p)
-    try s.iterator().asScala
-      .filter(d => Files.exists(d.resolve("meta.json")))
-      .map(_.getFileName.toString).toSeq.sorted
-    finally s.close()
+    if (!Files.exists(p)) Seq.empty
+    else listDir(p).filter(n => Files.exists(p.resolve(n).resolve("meta.json"))).sorted
   }
 
   /** Irreversibly delete a store (catalog DROP TABLE). */
@@ -1169,33 +1090,13 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
       .map(e => e.getKey -> e.getValue.asText()).toMap
   }
 
-  /** Exact per-shard record count with time in [fromT, untilT) — the
-    * histogram primitive behind admission control (reference O4,
-    * LoghubOffsetReader.scala:155-220; ours is exact, not bucketed).
-    * Segments fully inside the range are counted from their embedded
-    * metadata; fully outside are skipped — only boundary-straddling
-    * segments are scanned. */
-  def countInTimeRange(project: String, store: String, shard: Int,
-      fromT: Int, untilT: Int): Long =
-    retryOnMissingFile(s"countInTimeRange $project/$store/$shard")(
-      countInTimeRangeOnce(project, store, shard, fromT, untilT))
-
-  private def countInTimeRangeOnce(project: String, store: String, shard: Int,
-      fromT: Int, untilT: Int): Long = {
-    val mapper = new ObjectMapper()
-    val dir = shardDir(project, store, shard)
-    listSegments(project, store, shard).map { seg =>
-      if (seg.minTime >= untilT || seg.maxTime < fromT) 0L
-      else if (seg.minTime >= fromT && seg.maxTime < untilT) seg.count
-      else Files.readAllLines(dir.resolve(seg.fileName)).asScala.count { line =>
-        val t = mapper.readTree(line).get("time").asInt()
-        t >= fromT && t < untilT
-      }.toLong
-    }.sum
-  }
 }
 
 object EmbeddedLogStore {
+  /** Bound on the re-lists of one operation that keeps losing races
+    * (torn listings, files deleted under it): past it, it fails loudly. */
+  private val MaxRelists = 64
+
   private val B64 = java.util.Base64.getEncoder
   private val B64D = java.util.Base64.getDecoder
 

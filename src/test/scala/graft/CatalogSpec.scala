@@ -109,7 +109,7 @@ class CatalogSpec extends AnyFunSuite with StopStreamsAfterAll {
       val root = spark.conf.get(s"spark.sql.catalog.$cat.root")
       spark.sql(s"CREATE TABLE $cat.proj.tt (__time__ INT, msg STRING)")
       spark.sql(s"INSERT INTO $cat.proj.tt VALUES (100, 'first')")
-      val v1 = new EmbeddedLogStore(root).headVersion("proj", "tt")
+      val v1 = new EmbeddedLogStore(root).latestVersion("proj", "tt")
       spark.sql(s"INSERT INTO $cat.proj.tt VALUES (200, 'second')")
       assert(spark.sql(s"SELECT COUNT(*) FROM $cat.proj.tt").head().getLong(0) === 2L)
       assert(spark.sql(

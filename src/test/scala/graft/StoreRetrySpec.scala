@@ -52,6 +52,17 @@ class StoreRetrySpec extends AnyFunSuite {
     assert(s.injected.get() === 3)
   }
 
+  test("consumer-group offset IO rides out transient IO failures") {
+    val root = java.nio.file.Files.createTempDirectory("retry-store").toString
+    val s = new FlakyStore(root, failures = 3)
+    s.createStore("proj", "logs", 2)
+    s.arm = true
+    val offsets = Map(0 -> 5L, 1 -> 2L)
+    assert(s.commitGroupOffsets("proj", "logs", "etl", offsets) === offsets)
+    assert(s.readGroupOffsets("proj", "logs", "etl") === offsets)
+    assert(s.injected.get() === 3)
+  }
+
   test("persistent failure surfaces after bounded retries") {
     val root = java.nio.file.Files.createTempDirectory("retry-store").toString
     val s = new FlakyStore(root, failures = Int.MaxValue)

@@ -49,6 +49,41 @@ class StoreSnapshotSpec extends AnyFunSuite {
       manifests + 8L)
   }
 
+  test("a pinned batch plan reads each manifest once; time scans fold once") {
+    val root = newRoot()
+    val s = new CountingStore(root)
+    s.createStore("proj", "logs", 4)
+    (0 until 100).foreach(i =>
+      s.appendSegment("proj", "logs", i % 4, s"m$i", Seq(rec(i))))
+    val pinned = 60L
+    val opts = new graft.connector.LogServiceOptions(Map("store.root" -> root,
+      "store.project" -> "proj", "store.name" -> "logs",
+      "store.snapshotversion" -> pinned.toString)) {
+      override def newStore: EmbeddedLogStore = s
+    }
+    s.fileReads.set(0)
+    val scan = new graft.connector.LogScan(
+      graft.connector.RowConverters.DefaultSchema, opts)
+    val rows = scan.estimateStatistics().numRows().getAsLong
+    val parts = scan.toBatch.planInputPartitions()
+      .map(_.asInstanceOf[graft.connector.LogInputPartition])
+    // manifests 1..60, then meta.json: statistics and plan share the fold
+    assert(s.fileReads.get() === pinned + 1)
+    assert(rows === pinned) // one record per manifest
+    assert(parts.map(p => p.until - p.from).sum === pinned)
+
+    // shard 1 holds times 1, 5, 9, ... at ordinals 0, 1, 2, ...; one more
+    // segment (ordinals 25-26) straddles the count's upper bound
+    s.appendSegment("proj", "logs", 1, "late", Seq(rec(48), rec(52)))
+    val perFold = 101 + 1
+    s.fileReads.set(0)
+    assert(s.cursorAtTime("proj", "logs", 1, 50) === 13L)
+    assert(s.fileReads.get() === perFold)
+    s.fileReads.set(0)
+    assert(s.countInTimeRange("proj", "logs", 1, 10, 50) === 11L)
+    assert(s.fileReads.get() === perFold)
+  }
+
   test("snapshot answers every shard from one fold") {
     val s = new EmbeddedLogStore(newRoot())
     s.createStore("proj", "logs", 3)
@@ -63,7 +98,7 @@ class StoreSnapshotSpec extends AnyFunSuite {
     assert(snap.shard(0).segments.map(_.base) === Seq(0L, 2L))
     assert(snap.shard(0).clip(2, 3).map(_.logicalName) === Seq("c"))
     assert(snap.shard(0).segments.map(_.base).toArray sameElements
-      s.segmentBases("proj", "logs", 0))
+      s.snapshot("proj", "logs").shard(0).segments.map(_.base))
     assert(snap.committedFile(0, "c") === Some(snap.shard(0).segments(1).fileName))
     assert(snap.committedFile(1, "c") === None)
   }
