@@ -81,20 +81,21 @@ class LogMicroBatchStream(schema: StructType, opts: LogServiceOptions)
   }
 
   /** One snapshot per planned batch (none for an empty one) gives every
-    * partition its segment list. */
+    * slice its segment list; the slices, one per shard that advanced,
+    * are packed like a batch scan's. */
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[LogServiceOffset]
     val e = end.asInstanceOf[LogServiceOffset]
     lazy val snap = snapshot()
-    e.shardOrdinals.toSeq.sortBy(_._1).flatMap { case (shard, until) =>
+    LogPackedPartition.pack(e.shardOrdinals.toSeq.sortBy(_._1).flatMap { case (shard, until) =>
       val from = s.shardOrdinals.getOrElse(shard, 0L)
       require(until >= from,
         s"offset rollback on shard $shard: $until < $from") // O9 guard
       if (until > from)
         Some(LogInputPartition(opts.project, opts.store, shard, from, until,
-          opts.root, segments = Some(snap.shard(shard).clip(from, until))): InputPartition)
+          opts.root, segments = Some(snap.shard(shard).clip(from, until))))
       else None
-    }.toArray
+    })
   }
 
   override def createReaderFactory(): PartitionReaderFactory =

@@ -8,6 +8,7 @@ import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, CountStar, Max, Min}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.write._
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -57,9 +58,10 @@ case class LogServiceOptions(all: Map[String, String]) {
     * the S8 LoghubBatchRDD surface (LoghubBatchRDD.scala:30-208). */
   val startTime: Option[Int] = norm.get("starttime").map(_.toInt)
   val endTime: Option[Int] = norm.get("endtime").map(_.toInt)
-  /** Partitions per shard for bounded scans (reference
-    * `parallelismInShard`, 1..5 — LoghubBatchRDD.scala:40-41; ours is
-    * uncapped). */
+  /** Slices per shard for bounded scans (reference `parallelismInShard`,
+    * 1..5 — LoghubBatchRDD.scala:40-41; ours is uncapped). Slices are
+    * units of work: the plan packs them into at most leaf-parallelism
+    * partitions, so more slices balance the tasks, not multiply them. */
   val sliceShard: Int = math.max(1, norm.getOrElse("store.sliceshard", "1").toInt)
   /** Writer: route each row to shard hash(column) % writableShards — the
     * reference's hash-key routing (K6, RDDLoghubWriter.scala:27-78). */
@@ -389,10 +391,10 @@ class LogScan(schema: StructType, opts: LogServiceOptions,
   }
 }
 
-/** One InputPartition per shard slice — the unit of parallelism, as in
-  * the reference (1 task per shard, LoghubSourceRDD.scala:283-289),
-  * optionally sliced `store.sliceshard` ways and bounded by a pushed or
-  * option-supplied time range.
+/** One shard slice: the ordinals [from, until) of one shard, optionally
+  * cut `store.sliceshard` ways and bounded by a pushed or option-supplied
+  * time range. Slices are the unit of work; a plan packs them into at
+  * most leaf-parallelism partitions ([[LogPackedPartition.pack]]).
   *
   * `segments` is the slice's (file, base ordinal) list, clipped to
   * [from, until) from the planning snapshot: the reader opens those files
@@ -404,7 +406,44 @@ class LogScan(schema: StructType, opts: LogServiceOptions,
 case class LogInputPartition(project: String, store: String, shard: Int,
     from: Long, until: Long, root: String,
     timeRange: Option[(Int, Int)] = None,
-    segments: Option[Seq[Segment]] = None) extends InputPartition
+    segments: Option[Seq[Segment]] = None) extends InputPartition {
+  /** Records the reader will read: the clipped segments that survive
+    * the time prune (the whole range when no list is carried). */
+  def records: Long = segments.fold(until - from) { segs =>
+    segs.iterator.filter(_.overlaps(timeRange))
+      .map(seg => math.min(seg.end, until) - math.max(seg.base, from)).sum
+  }
+}
+
+/** Slices one task reads back to back, ordered by (shard, from). */
+case class LogPackedPartition(slices: Seq[LogInputPartition]) extends InputPartition
+
+object LogPackedPartition {
+  /** Slices in min(#slices, P) bins, where P is the planning session's
+    * `spark.sql.leafNodeDefaultParallelism` (default: the context's
+    * default parallelism), the conf Spark's own file scans use: a task
+    * per core rather than per shard, since at this data size a task's
+    * scheduling costs more than its decode. Greedy longest-first packing
+    * by [[LogInputPartition.records]] balances the bins; ties go to the
+    * bin with fewer slices, so a bin holds one slice whenever the slices
+    * fit. With no session (a plan made outside Spark) P is #slices. */
+  def pack(slices: Seq[LogInputPartition]): Array[InputPartition] = {
+    val parallelism = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .fold(slices.size)(s => s.conf.getOption("spark.sql.leafNodeDefaultParallelism")
+        .fold(s.sparkContext.defaultParallelism)(_.toInt))
+    val n = math.min(slices.size, parallelism)
+    val bins = Array.fill(n)(List.empty[LogInputPartition])
+    val loads = new Array[Long](n)
+    slices.map(s => (s, s.records))
+      .sortBy { case (s, w) => (-w, s.shard, s.from) }
+      .foreach { case (s, w) =>
+        val i = loads.indices.minBy(i => (loads(i), bins(i).size))
+        bins(i) ::= s
+        loads(i) += w
+      }
+    bins.map(b => LogPackedPartition(b.sortBy(s => (s.shard, s.from))): InputPartition)
+  }
+}
 
 class LogBatch(schema: StructType, opts: LogServiceOptions,
     snapshot: () => StoreSnapshot,
@@ -438,7 +477,7 @@ class LogBatch(schema: StructType, opts: LogServiceOptions,
     // with a residual time filter the first-n ordinals may not be the
     // first n MATCHING rows — the cap applies only to unfiltered scans
     val cap = if (tr.isEmpty) pushedLimit else None
-    snap.shards.flatMap { s =>
+    LogPackedPartition.pack(snap.shards.flatMap { s =>
       val from = startOrds.getOrElse(s.id, 0L)
       // a pinned snapshot ends at the shard's ordinal prefix as of its
       // version (ordinals are append-stable, so that prefix IS the
@@ -452,10 +491,10 @@ class LogBatch(schema: StructType, opts: LogServiceOptions,
           val lo = from + (until - from) * i / slices
           val hi = from + (until - from) * (i + 1) / slices
           LogInputPartition(opts.project, opts.store, s.id, lo, hi,
-            opts.root, tr, Some(snap.shard(s.id).clip(lo, hi))): InputPartition
+            opts.root, tr, Some(snap.shard(s.id).clip(lo, hi)))
         }
       }
-    }.toArray
+    })
   }
   override def createReaderFactory(): PartitionReaderFactory =
     new LogReaderFactory(schema, opts.appendSequenceNumber)
@@ -488,10 +527,28 @@ object OffsetRanges {
 
 class LogReaderFactory(schema: StructType, appendSeq: Boolean)
     extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val lp = p.asInstanceOf[LogInputPartition]
-    new LogPartitionReader(schema, lp, appendSeq)
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
+    new LogPackedReader(schema, p.asInstanceOf[LogPackedPartition], appendSeq)
+}
+
+/** A packed partition's slices read back to back, one open at a time;
+  * each slice keeps its own segment list, heal path, time range, LIMIT
+  * cap and sequence-number bases. */
+class LogPackedReader(schema: StructType, p: LogPackedPartition,
+    appendSeq: Boolean) extends PartitionReader[InternalRow] {
+  private val pending = p.slices.iterator
+  private var current: LogPartitionReader = _
+
+  override def next(): Boolean = {
+    while (current == null || !current.next()) {
+      close()
+      if (!pending.hasNext) return false
+      current = new LogPartitionReader(schema, pending.next(), appendSeq)
+    }
+    true
   }
+  override def get(): InternalRow = current.get()
+  override def close(): Unit = if (current != null) { current.close(); current = null }
 }
 
 class LogPartitionReader(schema: StructType, p: LogInputPartition,

@@ -30,6 +30,11 @@ case class StagedSegment(shard: Int, file: String)
 case class Segment(fileName: String, minTime: Int, maxTime: Int,
     count: Long, base: Long) {
   def end: Long = base + count
+  /** Whether a read bounded by `timeRange` ([lo, hi) seconds) must open
+    * this segment: the one time-prune rule, shared by the reader and the
+    * planner's packing weights. */
+  def overlaps(timeRange: Option[(Int, Int)]): Boolean =
+    timeRange.forall { case (lo, hi) => maxTime >= lo && minTime < hi }
   def logicalName: String =
     fileName.stripSuffix(".jsonl").split("-").dropRight(3).mkString("-")
 }
@@ -192,31 +197,26 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
     shards.foreach(s => Files.createDirectories(shardDir(project, store, s.id)))
   }
 
-  def listShards(project: String, store: String): Seq[ShardInfo] =
-    readShards(project, store, new ObjectMapper())
-
-  private def readShards(project: String, store: String,
-      mapper: ObjectMapper): Seq[ShardInfo] = {
+  def listShards(project: String, store: String): Seq[ShardInfo] = {
     val bytes =
       try io(Files.readAllBytes(metaPath(project, store)))
       catch {
         case _: java.nio.file.NoSuchFileException =>
           throw new IllegalArgumentException(s"no store $project/$store under $root")
       }
-    mapper.readTree(bytes).get("shards").elements().asScala.map { n =>
+    Json.readTree(bytes).get("shards").elements().asScala.map { n =>
       ShardInfo(n.get("id").asInt(), n.get("readOnly").asBoolean())
     }.toSeq.sortBy(_.id)
   }
 
   private def writeMeta(project: String, store: String, shards: Seq[ShardInfo]): Unit = {
-    val mapper = new ObjectMapper()
-    val rootNode = mapper.createObjectNode()
+    val rootNode = Json.createObjectNode()
     val arr = rootNode.putArray("shards")
     shards.sortBy(_.id).foreach { s =>
       val n = arr.addObject()
       n.put("id", s.id); n.put("readOnly", s.readOnly)
     }
-    writeAtomically(metaPath(project, store), mapper.writeValueAsBytes(rootNode))
+    writeAtomically(metaPath(project, store), Json.writeValueAsBytes(rootNode))
   }
 
   /** Replace `path` whole: write a temp sibling, then rename it over the
@@ -283,9 +283,8 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
       require(records.forall(_.time >= 0), "record times must be >= 0")
       val dir = shardDir(project, store, shard)
       Files.createDirectories(dir)
-      val mapper = new ObjectMapper()
       val sb = new StringBuilder
-      records.foreach { r => sb.append(recordToJson(mapper, r)).append('\n') }
+      records.foreach { r => sb.append(recordToJson(r)).append('\n') }
       val minT = records.map(_.time).minOption.getOrElse(0)
       val maxT = records.map(_.time).maxOption.getOrElse(0)
       val file = s"$segmentName-$minT-$maxT-${records.size}.jsonl"
@@ -419,8 +418,8 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
 
   private def manifestName(version: Long): String = f"m-$version%010d.json"
 
-  private def readManifest(mDir: Path, name: String, mapper: ObjectMapper): JsonNode =
-    mapper.readTree(io(Files.readAllBytes(mDir.resolve(name))))
+  private def readManifest(mDir: Path, name: String): JsonNode =
+    Json.readTree(io(Files.readAllBytes(mDir.resolve(name))))
 
   private def isCheckpoint(manifest: JsonNode): Boolean =
     manifest.get("checkpoint") != null && manifest.get("checkpoint").asBoolean()
@@ -471,9 +470,8 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
             // above it subsumed and deleted its deltas — permanent) or
             // the listing raced a writer/compactor (transient: re-list).
             atVersion.foreach { v =>
-              val mapper = new ObjectMapper()
               val compacted = files.filter(manifestVersion(_) > v).exists { f =>
-                try isCheckpoint(readManifest(manifestDir(project, store), f, mapper))
+                try isCheckpoint(readManifest(manifestDir(project, store), f))
                 catch { case _: java.nio.file.NoSuchFileException => false }
               }
               if (compacted) throw new IllegalArgumentException(
@@ -511,8 +509,7 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
   private def viewFrom(project: String, store: String,
       files: Seq[String]): Option[StoreSnapshot] = {
     val mDir = manifestDir(project, store)
-    val mapper = new ObjectMapper()
-    val trees = files.map(readManifest(mDir, _, mapper))
+    val trees = files.map(readManifest(mDir, _))
     val lastCkpt = trees.lastIndexWhere(isCheckpoint)
     val tailFiles = files.drop(math.max(lastCkpt, 0))
     val versions = tailFiles.map(manifestVersion)
@@ -526,7 +523,7 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
       versions.lastOption.getOrElse(0L),
       // read after the manifests: a shard a split added before any
       // listed commit could write to it is always in the list
-      readShards(project, store, mapper),
+      listShards(project, store),
       files,
       if (lastCkpt >= 0) manifestVersion(files(lastCkpt)) else 0L,
       trees.drop(math.max(lastCkpt, 0)).flatMap(t => pairs(t.get("segments"))),
@@ -615,8 +612,7 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
       checkpoint: Boolean, entries: Seq[(Int, String)],
       absorbed: Seq[(Int, String)] = Seq.empty,
       bases: Map[Int, Long] = Map.empty): Boolean = {
-    val mapper = new ObjectMapper()
-    val rootNode = mapper.createObjectNode()
+    val rootNode = Json.createObjectNode()
     rootNode.put("version", version)
     if (checkpoint) rootNode.put("checkpoint", true)
     def putPairs(field: String, pairs: Seq[(Int, String)]): Unit = {
@@ -635,7 +631,7 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
     }
     val target = mDir.resolve(manifestName(version))
     val tmp = tmpSibling(target)
-    io(Files.write(tmp, mapper.writeValueAsBytes(rootNode)))
+    io(Files.write(tmp, Json.writeValueAsBytes(rootNode)))
     try {
       io(Files.createLink(target, tmp))
       true
@@ -850,7 +846,6 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
       store: String, shard: Int, listed: Seq[Segment], from: Long,
       until: Long, timeRange: Option[(Int, Int)])
       extends Iterator[(Long, LogRecord)] {
-    private val mapper = new ObjectMapper()
     private val dir = shardDir(project, store, shard)
     private var cur = from // next ordinal not yet consumed
     private var heals = 0
@@ -868,9 +863,7 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
 
     private def select(segs: Seq[Segment]): Iterator[Segment] =
       segs.iterator.filter { seg =>
-        seg.base < until && seg.end > cur && timeRange.forall {
-          case (fromT, untilT) => seg.maxTime >= fromT && seg.minTime < untilT
-        }
+        seg.base < until && seg.end > cur && seg.overlaps(timeRange)
       }
 
     private def heal(): Unit = {
@@ -900,7 +893,7 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
           if (line == null || ord >= until) close()
           else if (ord >= cur) {
             cur = ord + 1
-            val r = jsonToRecord(mapper, line)
+            val r = jsonToRecord(line)
             if (timeRange.forall { case (fromT, untilT) =>
                 r.time >= fromT && r.time < untilT }) {
               pending = (ord, r); pendingBase = fileBase
@@ -926,13 +919,12 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
     * retune a running stream without restarting it). */
   def writeSourceConfig(project: String, store: String,
       config: Map[String, String]): Unit = {
-    val mapper = new ObjectMapper()
-    val root = mapper.createObjectNode()
+    val root = Json.createObjectNode()
     root.put("version", "v1")
     val c = root.putObject("config")
     config.foreach { case (k, v) => c.put(k, v) }
     writeAtomically(storeDir(project, store).resolve("config.json"),
-      mapper.writeValueAsBytes(root))
+      Json.writeValueAsBytes(root))
   }
 
   /** Consumer-group offset commit (reference CheckpointManager.java:
@@ -980,15 +972,14 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
 
   private def writeGroupEntry(dir: Path,
       offsets: Map[Int, Long]): Unit = {
-    val mapper = new ObjectMapper()
-    val root = mapper.createObjectNode()
+    val root = Json.createObjectNode()
     val o = root.putObject("offsets")
     offsets.toSeq.sortBy(_._1).foreach { case (s, v) => o.put(s.toString, v) }
     // unique name: nanos + thread id + random suffix — entries are
     // append-only, so uniqueness is all that's needed (no ordering)
     val name = s"c-${System.nanoTime()}-${Thread.currentThread().getId}-" +
       s"${scala.util.Random.nextInt(Int.MaxValue)}.json"
-    writeAtomically(dir.resolve(name), mapper.writeValueAsBytes(root))
+    writeAtomically(dir.resolve(name), Json.writeValueAsBytes(root))
   }
 
   private def listGroupEntries(dir: Path): Seq[String] =
@@ -998,8 +989,7 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
   private def readGroupEntry(dir: Path,
       name: String): Option[Map[Int, Long]] =
     try {
-      val n = new ObjectMapper()
-        .readTree(io(Files.readAllBytes(dir.resolve(name)))).get("offsets")
+      val n = Json.readTree(io(Files.readAllBytes(dir.resolve(name)))).get("offsets")
       if (n == null) Some(Map.empty)
       else Some(n.asInstanceOf[ObjectNode].properties().asScala
         .map(e => e.getKey.toInt -> e.getValue.asLong()).toMap)
@@ -1083,8 +1073,7 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
   def readSourceConfig(project: String, store: String): Map[String, String] = {
     val p = storeDir(project, store).resolve("config.json")
     if (!Files.exists(p)) return Map.empty
-    val mapper = new ObjectMapper()
-    val n = mapper.readTree(io(Files.readAllBytes(p))).get("config")
+    val n = Json.readTree(io(Files.readAllBytes(p))).get("config")
     if (n == null) Map.empty
     else n.asInstanceOf[ObjectNode].properties().asScala
       .map(e => e.getKey -> e.getValue.asText()).toMap
@@ -1096,6 +1085,10 @@ object EmbeddedLogStore {
   /** Bound on the re-lists of one operation that keeps losing races
     * (torn listings, files deleted under it): past it, it fails loudly. */
   private val MaxRelists = 64
+
+  /** The store's one Jackson mapper: configured once, then thread-safe,
+    * so every manifest, metadata and fallback record parse shares it. */
+  private val Json = new ObjectMapper()
 
   private val B64 = java.util.Base64.getEncoder
   private val B64D = java.util.Base64.getDecoder
@@ -1110,7 +1103,7 @@ object EmbeddedLogStore {
   /** Direct string serialization — ~3x less allocation than building a
     * Jackson tree per record on the hot write path; Jackson still parses
     * on read (tolerant, well-tested). */
-  private[store] def recordToJson(mapper: ObjectMapper, r: LogRecord): String = {
+  private[store] def recordToJson(r: LogRecord): String = {
     val sb = new StringBuilder(64)
     sb.append("{\"time\":").append(r.time)
     sb.append(",\"topic\":"); appendJsonString(sb, r.topic)
@@ -1151,13 +1144,13 @@ object EmbeddedLogStore {
     sb.append('"')
   }
 
-  private[store] def jsonToRecord(mapper: ObjectMapper, line: String): LogRecord = {
+  private[store] def jsonToRecord(line: String): LogRecord = {
     // fast path first: our own writer's output shape; any surprise falls
     // back to the tolerant Jackson parse (differential-tested in
     // StoreManifestSpec — both must agree wherever the fast path accepts)
     val fast = FastJsonl.tryParse(line)
     if (fast != null) return fast
-    val n = mapper.readTree(line)
+    val n = Json.readTree(line)
     def toMap(field: String): Map[String, String] = {
       val node = n.get(field)
       if (node == null) Map.empty

@@ -17,16 +17,30 @@ import scala.jdk.CollectionConverters._
   * still deliver every record exactly once at its original ordinal, with
   * a `__sequence_number__` that names the segment it was read from. */
 class CarriedSegmentsSpec extends AnyFunSuite {
-  private val schema = StructType.fromDDL("msg INT, __sequence_number__ STRING")
-  private val Shards = 2
+  import CarriedSegmentsSpec._
+
+  test("batch partitions read a compacted store exactly once") {
+    check(2, batchPlan, readersFirst = false)
+    check(2, batchPlan, readersFirst = true)
+  }
+
+  test("micro-batch partitions read a compacted store exactly once") {
+    check(2, microBatchPlan, readersFirst = false)
+    check(2, microBatchPlan, readersFirst = true)
+  }
+}
+
+object CarriedSegmentsSpec extends org.scalatest.Assertions {
+  private val schema =
+    StructType.fromDDL("msg INT, __sequence_number__ STRING, __shard__ INT")
   private val SegmentsPerShard = 8
   private val PerSegment = 3
 
-  private def seeded(): (String, EmbeddedLogStore) = {
+  private def seeded(shards: Int): (String, EmbeddedLogStore) = {
     val root = Files.createTempDirectory("carried-segments").toString
     val s = new EmbeddedLogStore(root)
-    s.createStore("proj", "logs", Shards)
-    for (seg <- 0 until SegmentsPerShard; shard <- 0 until Shards)
+    s.createStore("proj", "logs", shards)
+    for (seg <- 0 until SegmentsPerShard; shard <- 0 until shards)
       s.appendSegment("proj", "logs", shard, s"s$seg", (0 until PerSegment).map { i =>
         val msg = shard * 1000 + seg * PerSegment + i
         LogRecord(1700000000 + msg, "t", "s", Map.empty, Map("msg" -> msg.toString))
@@ -39,47 +53,56 @@ class CarriedSegmentsSpec extends AnyFunSuite {
     "appendsequencenumber" -> "true", "store.sliceshard" -> "3")
 
   /** msg → (shard, ordinal) as the store numbers them before compaction. */
-  private def ordinals(s: EmbeddedLogStore): Map[Int, (Int, Long)] =
-    (0 until Shards).flatMap { shard =>
+  private def ordinals(s: EmbeddedLogStore, shards: Int): Map[Int, (Int, Long)] =
+    (0 until shards).flatMap { shard =>
       s.read("proj", "logs", shard, 0, Long.MaxValue).map { case (ord, r) =>
         r.contents("msg").toInt -> (shard, ord)
       }
     }.toMap
 
-  private def drain(r: PartitionReader[InternalRow]): Seq[(Int, String)] = {
-    val out = Seq.newBuilder[(Int, String)]
-    try while (r.next()) out += ((r.get().getInt(0), r.get().getUTF8String(1).toString))
-    finally r.close()
+  /** (shard, msg, sequence number) of every row a reader returns. */
+  private def drain(r: PartitionReader[InternalRow]): Seq[(Int, Int, String)] = {
+    val out = Seq.newBuilder[(Int, Int, String)]
+    try while (r.next()) {
+      val row = r.get()
+      out += ((row.getInt(2), row.getInt(0), row.getUTF8String(1).toString))
+    } finally r.close()
     out.result()
   }
 
-  /** Compacts between planning and reading; with `readersFirst` the
-    * readers already exist when the compaction runs. */
-  private def check(plan: String => (Array[InputPartition], PartitionReaderFactory),
-      readersFirst: Boolean): Unit = {
-    val (root, s) = seeded()
-    val expected = ordinals(s)
+  /** Compacts a `shards`-shard store between planning and reading; with
+    * `readersFirst` the readers already exist when the compaction runs.
+    * Returns the planned partitions. */
+  def check(shards: Int,
+      plan: String => (Array[InputPartition], PartitionReaderFactory),
+      readersFirst: Boolean): Array[InputPartition] = {
+    val (root, s) = seeded(shards)
+    val expected = ordinals(s, shards)
     val (parts, factory) = plan(root)
-    val shardOf = parts.map(_.asInstanceOf[LogInputPartition].shard)
-    assert(parts.forall(_.asInstanceOf[LogInputPartition].segments.isDefined))
+    val slices = parts.map(_.asInstanceOf[LogPackedPartition].slices)
+    assert(slices.flatten.forall(_.segments.isDefined))
     val early = if (readersFirst) parts.map(p => Some(factory.createReader(p))) else parts.map(_ => None)
     assert(s.compactSegments("proj", "logs", targetRecords = 10) > 0)
     val rows = parts.indices.flatMap { i =>
-      drain(early(i).getOrElse(factory.createReader(parts(i)))).map(r => (shardOf(i), r))
+      val read = drain(early(i).getOrElse(factory.createReader(parts(i))))
+      // a partition returns only rows of the shards its slices cover
+      assert(read.map(_._1).toSet.subsetOf(slices(i).map(_.shard).toSet))
+      read
     }
     // every record exactly once
-    assert(rows.map(_._2._1).sorted === expected.keys.toSeq.sorted)
-    val after = (0 until Shards).map(sh => sh -> s.listSegments("proj", "logs", sh)).toMap
-    rows.foreach { case (shard, (msg, seq)) =>
+    assert(rows.map(_._2).sorted === expected.keys.toSeq.sorted)
+    val after = (0 until shards).map(sh => sh -> s.listSegments("proj", "logs", sh)).toMap
+    rows.foreach { case (shard, msg, seq) =>
       val Array(base, offset) = seq.split("-").map(_.toLong)
       // original ordinal, and a sequence string from the layout read
       assert(expected(msg) === ((shard, base + offset)), s"msg $msg seq $seq")
       assert(after(shard).exists(seg => seg.base == base && base + offset < seg.end),
         s"msg $msg seq $seq names no segment of the layout it was read from")
     }
+    parts
   }
 
-  private def batchPlan(root: String) = {
+  def batchPlan(root: String): (Array[InputPartition], PartitionReaderFactory) = {
     val o = opts(root)
     val batch = new LogServiceTableProvider().getTable(schema, Array.empty, o.asJava)
       .asInstanceOf[LogServiceTable]
@@ -87,20 +110,10 @@ class CarriedSegmentsSpec extends AnyFunSuite {
     (batch.planInputPartitions(), batch.createReaderFactory())
   }
 
-  private def microBatchPlan(root: String) = {
+  def microBatchPlan(root: String): (Array[InputPartition], PartitionReaderFactory) = {
     val stream = new LogMicroBatchStream(schema, LogServiceOptions(opts(root)))
     val start = stream.initialOffset()
     val end = stream.latestOffset(start, ReadLimit.allAvailable())
     (stream.planInputPartitions(start, end), stream.createReaderFactory())
-  }
-
-  test("batch partitions read a compacted store exactly once") {
-    check(batchPlan, readersFirst = false)
-    check(batchPlan, readersFirst = true)
-  }
-
-  test("micro-batch partitions read a compacted store exactly once") {
-    check(microBatchPlan, readersFirst = false)
-    check(microBatchPlan, readersFirst = true)
   }
 }

@@ -190,13 +190,22 @@ class PushdownSpec extends AnyFunSuite with StopStreamsAfterAll {
 
   test("sliceshard multiplies partitions without changing results") {
     val ref = seeded()
-    val df1 = LogServiceUtils.createBatchDF(spark, ref, Some(schema))
-    val df4 = LogServiceUtils.createBatchDF(spark, ref, Some(schema), sliceShard = 4)
-    assert(df4.rdd.getNumPartitions === 8) // 2 shards × 4 slices
+    def df(slices: Int) =
+      LogServiceUtils.createBatchDF(spark, ref, Some(schema), sliceShard = slices)
+    def answer(d: org.apache.spark.sql.DataFrame) =
+      (d.count(), d.agg(sum("msg")).first().getLong(0))
+    val df1 = df(1)
     assert(df1.rdd.getNumPartitions === 2)
-    assert(df4.count() === df1.count())
-    assert(df4.agg(sum("msg")).first().getLong(0) ===
-      df1.agg(sum("msg")).first().getLong(0))
+    // with leaf parallelism to spare, every slice is its own partition
+    SparkTestSession.withConf("spark.sql.leafNodeDefaultParallelism", "8") {
+      val df4 = df(4)
+      assert(df4.rdd.getNumPartitions === 8) // 2 shards × 4 slices
+      assert(answer(df4) === answer(df1))
+    }
+    // by default the 8 slices pack into local[4]'s 4 partitions
+    val packed = df(4)
+    assert(packed.rdd.getNumPartitions === 4)
+    assert(answer(packed) === answer(df1))
   }
 
   test("facade stream + write round-trip") {

@@ -22,6 +22,13 @@ object SparkTestSession {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** Runs `body` with one session conf set, then restores its prior state. */
+  def withConf[T](key: String, value: String)(body: => T): T = {
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }
 
 /** Mixed into every suite that starts streaming queries: stop whatever

@@ -1,6 +1,5 @@
 package graft.store
 
-import com.fasterxml.jackson.databind.ObjectMapper
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The fast path must ACCEPT every line the writer produces (otherwise
@@ -8,14 +7,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * and must agree with Jackson wherever it accepts. */
 class FastJsonlSpec extends AnyFunSuite {
 
-  private val mapper = new ObjectMapper()
-
   private def roundTrip(r: LogRecord): Unit = {
-    val line = EmbeddedLogStore.recordToJson(mapper, r)
+    val line = EmbeddedLogStore.recordToJson(r)
     val fast = FastJsonl.tryParse(line)
     assert(fast != null, s"fast path rejected writer output: $line")
     assert(fast === r)
-    assert(fast === EmbeddedLogStore.jsonToRecord(mapper, line))
+    assert(fast === EmbeddedLogStore.jsonToRecord(line))
   }
 
   test("tryParse accepts every line recordToJson writes") {
