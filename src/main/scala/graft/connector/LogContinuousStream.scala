@@ -66,32 +66,29 @@ class LogContinuousPartitionReader(schema: StructType, p: LogInputPartition,
     appendSeq: Boolean) extends ContinuousPartitionReader[InternalRow] {
 
   private val store = new EmbeddedLogStore(p.root)
-  private val readers = schema.fields.map(f =>
-    RowConverters.makeReader(f.dataType, f.nullable))
+  private val decoder = new RowDecoder(schema, p.project, p.store, p.shard,
+    appendSeq, None)
   private var ordinal = p.from
-  private var it: store.SegmentReader = _
+  private var lines: store.SegmentReader = _
   private var current: InternalRow = _
 
   override def next(): Boolean = {
     // one snapshot per poll gives both the end and the segments to read
-    while (it == null || !it.hasNext) {
+    while (lines == null || !lines.advance()) {
       val log = store.snapshot(p.project, p.store).shard(p.shard)
       if (log.end > ordinal) {
-        it = store.readSegments(p.project, p.store, p.shard,
+        lines = store.readSegments(p.project, p.store, p.shard,
           log.clip(ordinal, log.end), ordinal, log.end, None)
       } else {
         Thread.sleep(10) // poll backoff; interrupted by epoch end/stop
       }
     }
-    val (ord, rec) = it.next()
-    ordinal = ord + 1
-    val seq = if (appendSeq) RowConverters.sequenceNumber(it.segmentBase, ord) else null
-    current = RowConverters.recordToRow(schema, readers, p.project, p.store,
-      p.shard, ord, rec, seq)
+    ordinal = lines.ordinal + 1
+    current = decoder.decode(lines.line, lines.ordinal, lines.segmentBase)
     true
   }
 
   override def get(): InternalRow = current
   override def getOffset: PartitionOffset = LogShardPartitionOffset(p.shard, ordinal)
-  override def close(): Unit = if (it != null) it.close()
+  override def close(): Unit = if (lines != null) lines.close()
 }

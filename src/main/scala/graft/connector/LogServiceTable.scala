@@ -115,20 +115,27 @@ class LogServiceTable(tableSchema: StructType, opts: LogServiceOptions,
 }
 
 /** Column pruning reaches the deserializer: only requested fields are
-  * converted (the reference prunes only via user schema,
+  * decoded (the reference prunes only via user schema,
   * LoghubSourceRDD.scala:178-219 — here Catalyst's pruning flows through
   * SupportsPushDownRequiredColumns, SURVEY.md §2.4 T1). Time predicates
-  * on `__time__` push down to segment-skipping cursor ranges — the
-  * reference's one missing pushdown (T6, SURVEY.md §2.4); pushed filters
-  * stay in Spark's post-scan filter for sub-second exactness, so the
-  * pushdown only ever *removes I/O*, never changes semantics. */
+  * on `__time__` push down to a [lo, hi) range of record seconds — the
+  * reference's one missing pushdown (T6, SURVEY.md §2.4) — which skips
+  * whole segments by their time bounds and drops the records outside it
+  * in the reader. Record times are whole seconds, so for a TIMESTAMP,
+  * BIGINT or INT `__time__` compared with a timestamp or integral literal
+  * that range IS the predicate: such filters (and `IsNotNull(__time__)`,
+  * a record time is never null) are answered by the scan and Spark plans
+  * no `Filter` for them. Every other accepted predicate (a fractional
+  * literal, a STRING `__time__`) pushes a superset range and stays in
+  * Spark's post-scan filter. Exact answers hold for batch scans, whose
+  * partitions carry the range; a stream refuses a pushed range. */
 class LogScanBuilder(fullSchema: StructType, opts: LogServiceOptions)
     extends ScanBuilder with SupportsPushDownRequiredColumns
     with SupportsPushDownFilters with SupportsPushDownLimit
     with SupportsPushDownAggregates {
   private var prunedSchema: StructType = fullSchema
   private var pushed: Array[Filter] = Array.empty
-  private var timeRange: Option[(Int, Int)] = None
+  private var timeRange: Option[(Long, Long)] = None
   private var limit: Option[Int] = None
   // pushed stat aggregates, one char per output column:
   // 'c' = COUNT(*), 'n' = MIN(__time__), 'x' = MAX(__time__)
@@ -151,7 +158,9 @@ class LogScanBuilder(fullSchema: StructType, opts: LogServiceOptions)
     * than silently change the answer. */
   private val timeType: Option[org.apache.spark.sql.types.DataType] =
     fullSchema.fields.find(_.name == RowConverters.Time).map(_.dataType)
-  private val timeStatOk: Boolean = timeType.exists {
+  /** The declared `__time__` is the record's second, raw or in µs: the
+    * stat pushdown and exact time-range pushdown both need this. */
+  private val timeExact: Boolean = timeType.exists {
     case org.apache.spark.sql.types.TimestampType | LongType |
          org.apache.spark.sql.types.IntegerType => true
     case _ => false
@@ -160,12 +169,12 @@ class LogScanBuilder(fullSchema: StructType, opts: LogServiceOptions)
     case _: CountStar => Some('c')
     case m: Min => m.column match {
       case f: org.apache.spark.sql.connector.expressions.NamedReference
-        if timeStatOk && f.fieldNames.sameElements(Array(RowConverters.Time)) => Some('n')
+        if timeExact && f.fieldNames.sameElements(Array(RowConverters.Time)) => Some('n')
       case _ => None
     }
     case m: Max => m.column match {
       case f: org.apache.spark.sql.connector.expressions.NamedReference
-        if timeStatOk && f.fieldNames.sameElements(Array(RowConverters.Time)) => Some('x')
+        if timeExact && f.fieldNames.sameElements(Array(RowConverters.Time)) => Some('x')
       case _ => None
     }
     case _ => None
@@ -190,9 +199,12 @@ class LogScanBuilder(fullSchema: StructType, opts: LogServiceOptions)
 
   /** LIMIT n caps each partition's ordinal range to its first n records
     * (partial pushdown: Spark's own limit still runs above). Only safe
-    * when no residual time filter could exclude rows inside the cap —
-    * combined with a time range the cap is skipped at plan time. */
-  override def pushLimit(n: Int): Boolean = { limit = Some(n); true }
+    * when no time range could exclude rows inside the cap, so a scan with
+    * a pushed range refuses it (one bounded by the `starttime`/`endtime`
+    * options skips the cap at plan time). */
+  override def pushLimit(n: Int): Boolean = timeRange.isEmpty && {
+    limit = Some(n); true
+  }
 
   override def pruneColumns(requiredSchema: StructType): Unit = {
     // preserve declared field order and metadata handling
@@ -201,15 +213,38 @@ class LogScanBuilder(fullSchema: StructType, opts: LogServiceOptions)
     prunedSchema = StructType(if (kept.isEmpty) Array(fullSchema.fields.head) else kept)
   }
 
-  /** (floor epoch seconds, has sub-second fraction). Record times are
-    * integer seconds, so each comparison op has an exact integer bound:
-    * GT → floor+1; GTE → ceil; LT → exclusive ceil; LTE → floor+1. */
-  private def toEpochS(v: Any): Option[(Long, Boolean)] = v match {
-    case t: java.sql.Timestamp =>
-      Some((Math.floorDiv(t.getTime, 1000L), Math.floorMod(t.getTime, 1000L) != 0))
-    case i: java.time.Instant => Some((i.getEpochSecond, i.getNano != 0))
-    case n: java.lang.Number => Some((n.longValue(), false))
-    case _ => None
+  /** A literal's position among whole seconds: (floor epoch second, has a
+    * fraction, exact). Record times are integer seconds, so each
+    * comparison has an integer bound: GT → floor+1; GTE → ceil;
+    * LT → exclusive ceil; LTE → floor+1. The bound is the predicate
+    * itself (`exact`) only for a timestamp or integral literal against a
+    * TIMESTAMP, BIGINT or INT `__time__`. The fraction comes from the
+    * nanos: `Timestamp.getTime` drops sub-millisecond digits. A
+    * fractional literal is floored, not truncated (`< 10.5` keeps 10).
+    * Seconds are clamped just outside the Int range, where every record
+    * time compares the same and `s + 1` cannot overflow. */
+  private def toEpochS(v: Any): Option[(Long, Boolean, Boolean)] = {
+    def clamp(s: Long) = s.max(Int.MinValue - 1L).min(Int.MaxValue + 1L)
+    def fractional(d: java.math.BigDecimal) = {
+      val floor = d.setScale(0, java.math.RoundingMode.FLOOR)
+      val s = floor.max(java.math.BigDecimal.valueOf(Int.MinValue - 1L))
+        .min(java.math.BigDecimal.valueOf(Int.MaxValue + 1L)).longValue
+      Some((s, d.compareTo(floor) != 0, false))
+    }
+    v match {
+      case t: java.sql.Timestamp =>
+        Some((clamp(Math.floorDiv(t.getTime, 1000L)), t.getNanos != 0, timeExact))
+      case i: java.time.Instant => Some((clamp(i.getEpochSecond), i.getNano != 0, timeExact))
+      case n @ (_: java.lang.Long | _: java.lang.Integer | _: java.lang.Short |
+          _: java.lang.Byte) =>
+        Some((clamp(n.asInstanceOf[Number].longValue), false, timeExact))
+      case d: java.math.BigDecimal => fractional(d)
+      case d: scala.math.BigDecimal => fractional(d.bigDecimal)
+      case d @ (_: java.lang.Double | _: java.lang.Float)
+          if java.lang.Double.isFinite(d.asInstanceOf[Number].doubleValue) =>
+        fractional(new java.math.BigDecimal(d.asInstanceOf[Number].doubleValue))
+      case _ => None
+    }
   }
 
   /** String-typed `__time__` bound → conservative epoch second. A STRING
@@ -223,10 +258,10 @@ class LogScanBuilder(fullSchema: StructType, opts: LogServiceOptions)
     * one second: whatever the fraction text and the `.0`-suffix
     * comparison quirks resolve to, the passing set is always inside
     * [s, +inf) for GT/GTE and (-inf, s+1) for LT/LTE/EQ. The pushdown
-    * keeps that superset range — Spark re-evaluates the original string
-    * filter post-scan, so over-keeping by ≤1s can't change results,
-    * only segment skipping. Unparseable bounds (raw epoch digits,
-    * arbitrary strings) refuse and scan. */
+    * keeps that superset range and Spark re-evaluates the original
+    * string filter post-scan, so over-keeping by ≤1s can't change
+    * results, only segment skipping. Unparseable bounds (raw epoch
+    * digits, arbitrary strings) refuse and scan. */
   private def strBoundS(v: Any): Option[Long] = v match {
     case s: String if timeType.contains(StringType) =>
       try Some(Math.floorDiv(java.sql.Timestamp.valueOf(s).getTime, 1000L))
@@ -234,37 +269,52 @@ class LogScanBuilder(fullSchema: StructType, opts: LogServiceOptions)
     case _ => None
   }
 
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
+  /** The [lo, hi) range of record seconds a `__time__` predicate passes,
+    * and whether that range is exactly the predicate. */
+  private def rangeOf(f: Filter): Option[(Long, Long, Boolean)] = {
     import org.apache.spark.sql.sources._
-    var lo = Int.MinValue.toLong
-    var hi = Int.MaxValue.toLong // exclusive
-    def ceilOf(s: Long, frac: Boolean): Long = if (frac) s + 1 else s
-    val accepted = filters.filter {
-      case GreaterThan(RowConverters.Time, v) =>
-        toEpochS(v).exists { case (s, _) => lo = math.max(lo, s + 1); true } ||
-          strBoundS(v).exists { s => lo = math.max(lo, s); true }
-      case GreaterThanOrEqual(RowConverters.Time, v) =>
-        toEpochS(v).exists { case (s, f) => lo = math.max(lo, ceilOf(s, f)); true } ||
-          strBoundS(v).exists { s => lo = math.max(lo, s); true }
-      case LessThan(RowConverters.Time, v) =>
-        toEpochS(v).exists { case (s, f) => hi = math.min(hi, ceilOf(s, f)); true } ||
-          strBoundS(v).exists { s => hi = math.min(hi, s + 1); true }
-      case LessThanOrEqual(RowConverters.Time, v) =>
-        toEpochS(v).exists { case (s, _) => hi = math.min(hi, s + 1); true } ||
-          strBoundS(v).exists { s => hi = math.min(hi, s + 1); true }
-      case EqualTo(RowConverters.Time, v) =>
-        toEpochS(v).exists { case (s, f) =>
-          lo = math.max(lo, ceilOf(s, f)); hi = math.min(hi, s + 1); true } ||
-          strBoundS(v).exists { s =>
-            lo = math.max(lo, s); hi = math.min(hi, s + 1); true }
-      case _ => false
+    val (op, v) = f match {
+      case GreaterThan(RowConverters.Time, v) => (">", v)
+      case GreaterThanOrEqual(RowConverters.Time, v) => (">=", v)
+      case LessThan(RowConverters.Time, v) => ("<", v)
+      case LessThanOrEqual(RowConverters.Time, v) => ("<=", v)
+      case EqualTo(RowConverters.Time, v) => ("=", v)
+      case IsNotNull(RowConverters.Time) => return Some((Long.MinValue, Long.MaxValue, true))
+      case _ => return None
     }
-    pushed = accepted
-    if (accepted.nonEmpty && (lo > Int.MinValue || hi < Int.MaxValue))
-      timeRange = Some((
-        math.max(0L, lo).min(Int.MaxValue).toInt,
-        math.max(0L, hi).min(Int.MaxValue).toInt))
-    filters // all filters re-evaluated by Spark post-scan (conservative)
+    toEpochS(v).map { case (s, frac, exact) =>
+      val ceil = if (frac) s + 1 else s
+      val (lo, hi) = op match {
+        case ">" => (s + 1, Long.MaxValue)
+        case ">=" => (ceil, Long.MaxValue)
+        case "<" => (Long.MinValue, ceil)
+        case "<=" => (Long.MinValue, s + 1)
+        case _ => (ceil, s + 1)
+      }
+      (lo, hi, exact)
+    }.orElse(strBoundS(v).map { s =>
+      val (lo, hi) = op match {
+        case ">" | ">=" => (s, Long.MaxValue)
+        case "<" | "<=" => (Long.MinValue, s + 1)
+        case _ => (s, s + 1)
+      }
+      (lo, hi, false)
+    })
+  }
+
+  /** Accepts every `__time__` predicate [[rangeOf]] knows, intersecting
+    * their ranges, and hands back as post-scan only those it does not
+    * answer exactly, plus the filters it does not know. */
+  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
+    var lo = Long.MinValue
+    var hi = Long.MaxValue // exclusive
+    val ranged = filters.map(f => f -> rangeOf(f))
+    ranged.foreach { case (_, r) =>
+      r.foreach { case (a, b, _) => lo = math.max(lo, a); hi = math.min(hi, b) }
+    }
+    pushed = ranged.collect { case (f, Some(_)) => f }
+    if (lo > Long.MinValue || hi < Long.MaxValue) timeRange = Some((lo, hi))
+    ranged.collect { case (f, r) if !r.exists(_._3) => f }
   }
 
   override def pushedFilters(): Array[Filter] = pushed
@@ -346,7 +396,7 @@ case class LogStatPartition(statCols: String, total: Long,
     minT: Option[Long], maxT: Option[Long]) extends InputPartition
 
 class LogScan(schema: StructType, opts: LogServiceOptions,
-    pushedTimeRange: Option[(Int, Int)] = None,
+    pushedTimeRange: Option[(Long, Long)] = None,
     pushedLimit: Option[Int] = None) extends Scan
     with SupportsReportStatistics {
   override def readSchema(): StructType = schema
@@ -380,14 +430,21 @@ class LogScan(schema: StructType, opts: LogServiceOptions,
   override def toBatch: Batch =
     new LogBatch(schema, opts, () => snapshot, pushedTimeRange, pushedLimit)
   override def toMicroBatchStream(checkpointLocation: String) = {
-    require(opts.snapshotVersion.isEmpty,
-      "store.snapshotversion is a batch-only option: a stream reads the live log")
+    requireLiveLog()
     new LogMicroBatchStream(schema, opts)
   }
   override def toContinuousStream(checkpointLocation: String) = {
+    requireLiveLog()
+    new LogContinuousStream(schema, opts)
+  }
+  /** A stream reads the whole live log. The builder hands a pushed time
+    * range's exact filters to the scan instead of to Spark, so a stream
+    * that ignored one would return rows outside it. */
+  private def requireLiveLog(): Unit = {
     require(opts.snapshotVersion.isEmpty,
       "store.snapshotversion is a batch-only option: a stream reads the live log")
-    new LogContinuousStream(schema, opts)
+    require(pushedTimeRange.isEmpty,
+      s"a stream cannot apply the pushed __time__ range $pushedTimeRange")
   }
 }
 
@@ -405,7 +462,7 @@ class LogScan(schema: StructType, opts: LogServiceOptions,
   * resolves one from a fresh snapshot when its reader opens. */
 case class LogInputPartition(project: String, store: String, shard: Int,
     from: Long, until: Long, root: String,
-    timeRange: Option[(Int, Int)] = None,
+    timeRange: Option[(Long, Long)] = None,
     segments: Option[Seq[Segment]] = None) extends InputPartition {
   /** Records the reader will read: the clipped segments that survive
     * the time prune (the whole range when no list is carried). */
@@ -447,14 +504,15 @@ object LogPackedPartition {
 
 class LogBatch(schema: StructType, opts: LogServiceOptions,
     snapshot: () => StoreSnapshot,
-    pushedTimeRange: Option[(Int, Int)] = None,
+    pushedTimeRange: Option[(Long, Long)] = None,
     pushedLimit: Option[Int] = None) extends Batch {
 
-  /** Intersect option-level [starttime, endtime) with pushed bounds. */
-  private def effectiveTimeRange: Option[(Int, Int)] = {
+  /** Intersect option-level [starttime, endtime) with pushed bounds; a
+    * missing option leaves its side unbounded. */
+  private def effectiveTimeRange: Option[(Long, Long)] = {
     val optRange = (opts.startTime, opts.endTime) match {
       case (None, None) => None
-      case (lo, hi) => Some((lo.getOrElse(0), hi.getOrElse(Int.MaxValue)))
+      case (lo, hi) => Some((lo.fold(Long.MinValue)(_.toLong), hi.fold(Long.MaxValue)(_.toLong)))
     }
     (optRange, pushedTimeRange) match {
       case (Some((a, b)), Some((c, d))) => Some((math.max(a, c), math.min(b, d)))
@@ -554,21 +612,19 @@ class LogPackedReader(schema: StructType, p: LogPackedPartition,
 class LogPartitionReader(schema: StructType, p: LogInputPartition,
     appendSeq: Boolean) extends PartitionReader[InternalRow] {
   private val store = new EmbeddedLogStore(p.root)
-  private val readers = schema.fields.map(f =>
-    RowConverters.makeReader(f.dataType, f.nullable))
-  private val it = store.readSegments(p.project, p.store, p.shard,
+  private val decoder = new RowDecoder(schema, p.project, p.store, p.shard,
+    appendSeq, p.timeRange)
+  private val lines = store.readSegments(p.project, p.store, p.shard,
     p.segments.getOrElse(store.snapshot(p.project, p.store).shard(p.shard).segments),
     p.from, p.until, p.timeRange)
   private var current: InternalRow = _
 
   override def next(): Boolean = {
-    if (!it.hasNext) return false
-    val (ord, rec) = it.next()
-    val seq = if (appendSeq) RowConverters.sequenceNumber(it.segmentBase, ord) else null
-    current = RowConverters.recordToRow(schema, readers, p.project, p.store,
-      p.shard, ord, rec, seq)
-    true
+    current = null
+    while (current == null && lines.advance())
+      current = decoder.decode(lines.line, lines.ordinal, lines.segmentBase)
+    current != null
   }
   override def get(): InternalRow = current
-  override def close(): Unit = it.close()
+  override def close(): Unit = lines.close()
 }

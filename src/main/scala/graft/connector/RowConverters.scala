@@ -53,7 +53,7 @@ object RowConverters {
 
   /** Heuristic epoch unit promotion: seconds (<1e11), millis (<1e14),
     * else micros — raw numeric times in contents are usually seconds. */
-  private def epochToMicros(v: Long): Long =
+  private[connector] def epochToMicros(v: Long): Long =
     if (math.abs(v) < 100000000000L) v * 1000000L
     else if (math.abs(v) < 100000000000000L) v * 1000L
     else v
@@ -100,10 +100,6 @@ object RowConverters {
     s.fields.map(f => (f.name, f.dataType)).sameElements(
       DefaultSchema.fields.map(f => (f.name, f.dataType)))
 
-  /** Build an InternalRow for a record under `schema`: fields matched by
-    * name against contents, `__tag__:k` against tags, metadata columns
-    * filled specially (LoghubSourceRDD.scala:183-219). Unmatched fields →
-    * null; unknown incoming keys dropped. */
   /** Sequence number in the reference's `<logGroupIndex>-<logIndex>`
     * shape (LoghubSourceRDD.scala:144,166,196-199): our group is the
     * segment, the group index is the segment's base cursor (the cursor
@@ -115,6 +111,12 @@ object RowConverters {
   def sequenceNumber(base: Long, ordinal: Long): String =
     s"$base-${ordinal - base}"
 
+  /** Build an InternalRow for a record under `schema`: fields matched by
+    * name against contents, `__tag__:k` against tags, metadata columns
+    * filled specially (LoghubSourceRDD.scala:183-219). Unmatched fields →
+    * null; unknown incoming keys dropped. The readers decode lines with
+    * [[RowDecoder]], which gives the same rows without the record; this
+    * is its fallback and its reference. */
   def recordToRow(schema: StructType, readers: Array[FieldReader],
       project: String, store: String, shard: Int, ordinal: Long,
       r: LogRecord, seqNum: String): InternalRow = {
@@ -147,29 +149,33 @@ object RowConverters {
   /** Default-schema JSON packing of contents + "__tag__:k" tag entries
     * (LoghubSourceRDD.scala:154-176). */
   def packValueJson(r: LogRecord): String = {
-    val sb = new StringBuilder("{")
+    val sb = new java.lang.StringBuilder("{")
     var first = true
     def put(k: String, v: String): Unit = {
       if (!first) sb.append(',')
       first = false
-      sb.append(jsonStr(k)).append(':').append(jsonStr(v))
+      appendJsonStr(sb, k); sb.append(':'); appendJsonStr(sb, v)
     }
     r.contents.toSeq.sortBy(_._1).foreach { case (k, v) => put(k, v) }
     r.tags.toSeq.sortBy(_._1).foreach { case (k, v) => put(TagPrefix + k, v) }
     sb.append('}').toString
   }
 
-  private def jsonStr(s: String): String = {
-    val sb = new StringBuilder("\"")
-    s.foreach {
-      case '"' => sb.append("\\\"")
-      case '\\' => sb.append("\\\\")
-      case '\n' => sb.append("\\n")
-      case '\r' => sb.append("\\r")
-      case '\t' => sb.append("\\t")
-      case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
-      case c => sb.append(c)
+  private[connector] def appendJsonStr(sb: java.lang.StringBuilder, s: String): Unit = {
+    sb.append('"')
+    var i = 0
+    while (i < s.length) {
+      s.charAt(i) match {
+        case '"' => sb.append("\\\"")
+        case '\\' => sb.append("\\\\")
+        case '\n' => sb.append("\\n")
+        case '\r' => sb.append("\\r")
+        case '\t' => sb.append("\\t")
+        case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
+        case c => sb.append(c)
+      }
+      i += 1
     }
-    sb.append('"').toString
+    sb.append('"')
   }
 }

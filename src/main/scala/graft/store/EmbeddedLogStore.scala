@@ -30,10 +30,10 @@ case class StagedSegment(shard: Int, file: String)
 case class Segment(fileName: String, minTime: Int, maxTime: Int,
     count: Long, base: Long) {
   def end: Long = base + count
-  /** Whether a read bounded by `timeRange` ([lo, hi) seconds) must open
-    * this segment: the one time-prune rule, shared by the reader and the
-    * planner's packing weights. */
-  def overlaps(timeRange: Option[(Int, Int)]): Boolean =
+  /** Whether a read bounded by `timeRange` must open this segment: the
+    * one time-prune rule, shared by the reader and the planner's packing
+    * weights. */
+  def overlaps(timeRange: Option[(Long, Long)]): Boolean =
     timeRange.forall { case (lo, hi) => maxTime >= lo && minTime < hi }
   def logicalName: String =
     fileName.stripSuffix(".jsonl").split("-").dropRight(3).mkString("-")
@@ -103,12 +103,20 @@ final class StoreSnapshot private[store] (
     * would re-append its data. */
   lazy val committed: Set[(Int, String)] = (entries ++ absorbed).toSet
 
-  /** The committed file of logical segment `logicalName` on `shard`. */
-  def committedFile(shard: Int, logicalName: String): Option[String] =
-    (entries.iterator ++ absorbed).collectFirst {
-      case (s, f) if s == shard && f.startsWith(logicalName + "-") &&
-        Segment.parse(f).logicalName == logicalName => f
+  /** The committed file of each (shard, logical segment name) that has
+    * one, in one walk over the committed entries: a writer task stages
+    * many segments against a snapshot of many entries. */
+  def committedFiles(names: Seq[(Int, String)]): Map[(Int, String), String] = {
+    val wanted = names.distinct.groupMap(_._1)(n => (n._2, n._2 + "-"))
+    val found = mutable.Map[(Int, String), String]()
+    (entries.iterator ++ absorbed).foreach { case (s, f) =>
+      wanted.get(s).foreach(_.foreach { case (name, prefix) =>
+        if (f.startsWith(prefix) && !found.contains((s, name)) &&
+          Segment.parse(f).logicalName == name) found((s, name)) = f
+      })
     }
+    found.toMap
+  }
 }
 
 /** File-backed sharded log store — the hermetic stand-in for the log
@@ -277,7 +285,8 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
     else stageWith(snapshot(project, store), project, store, segments)
 
   private def stageWith(snap: StoreSnapshot, project: String, store: String,
-      segments: Seq[(Int, String, Seq[LogRecord])]): Seq[StagedSegment] =
+      segments: Seq[(Int, String, Seq[LogRecord])]): Seq[StagedSegment] = {
+    val committed = snap.committedFiles(segments.map(s => (s._1, s._2)))
     segments.map { case (shard, segmentName, records) =>
       require(!segmentName.contains("/"), s"bad segment name $segmentName")
       require(records.forall(_.time >= 0), "record times must be >= 0")
@@ -288,13 +297,14 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
       val minT = records.map(_.time).minOption.getOrElse(0)
       val maxT = records.map(_.time).maxOption.getOrElse(0)
       val file = s"$segmentName-$minT-$maxT-${records.size}.jsonl"
-      snap.committedFile(shard, segmentName).foreach { prior =>
+      committed.get((shard, segmentName)).foreach { prior =>
         require(prior == file,
           s"replayed segment $segmentName is $file, committed as $prior")
       }
       writeAtomically(dir.resolve(file), sb.toString.getBytes(StandardCharsets.UTF_8))
       StagedSegment(shard, file)
     }
+  }
 
   /** Atomically publish staged segments as one commit. Optimistic
     * versioning: the manifest is hard-linked into place as
@@ -745,7 +755,7 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
         // stage each merged segment (constituents read in order)
         val merged = runs.map { case (shard, segs) =>
           val records = readSegments(project, store, shard, segs,
-            segs.head.base, segs.last.end, None).map(_._2).toVector
+            segs.head.base, segs.last.end, None).records.map(_._2).toVector
           val digest = java.security.MessageDigest.getInstance("MD5")
             .digest((s"$shard|" + segs.map(_.fileName).mkString("|"))
               .getBytes(StandardCharsets.UTF_8))
@@ -785,15 +795,13 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
   /** First ordinal whose record time >= t (for cursor-from-time);
     * shardEnd if none. Segments whose embedded maxTime < t are skipped
     * from the listing alone: the read starts at the first segment with
-    * maxTime >= t, which holds the answer. (A time-range read would not
-    * do: the range is half-open, so no bound admits a record stamped
-    * Int.MaxValue.) */
+    * maxTime >= t, which holds the answer. */
   def cursorAtTime(project: String, store: String, shard: Int, t: Int): Long = {
     val log = snapshot(project, store).shard(shard)
     log.segments.find(_.maxTime >= t).fold(log.end) { seg =>
       val it = readSegments(project, store, shard, log.segments, seg.base,
         log.end, None)
-      try it.find(_._2.time >= t).fold(log.end)(_._1) finally it.close()
+      try it.records.find(_._2.time >= t).fold(log.end)(_._1) finally it.close()
     }
   }
 
@@ -810,7 +818,7 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
       if (seg.minTime >= untilT || seg.maxTime < fromT) 0L
       else if (seg.minTime >= fromT && seg.maxTime < untilT) seg.count
       else readSegments(project, store, shard, Seq(seg), seg.base, seg.end,
-        Some((fromT, untilT))).size.toLong
+        Some((fromT.toLong, untilT.toLong))).records.size.toLong
     }.sum
 
   /** Read records with ordinals in [from, until). An optional time range
@@ -830,22 +838,28 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
       from: Long, until: Long,
       timeRange: Option[(Int, Int)] = None): Iterator[(Long, LogRecord)] =
     readSegments(project, store, shard,
-      snapshot(project, store).shard(shard).segments, from, until, timeRange)
+      snapshot(project, store).shard(shard).segments, from, until,
+      timeRange.map { case (lo, hi) => (lo.toLong, hi.toLong) }).records
 
-  /** [[read]] over a segment list an earlier snapshot resolved (a
-    * partition's carried list): no fold unless a listed file is gone. */
+  /** The lines behind [[read]], over a segment list an earlier snapshot
+    * resolved (a partition's carried list): no fold unless a listed file
+    * is gone. `timeRange` is [lo, hi) in epoch seconds; Long bounds let
+    * "no upper bound" admit a record stamped Int.MaxValue. */
   def readSegments(project: String, store: String, shard: Int,
       segments: Seq[Segment], from: Long, until: Long,
-      timeRange: Option[(Int, Int)]): SegmentReader =
+      timeRange: Option[(Long, Long)]): SegmentReader =
     new SegmentReader(project, store, shard, segments, from, until, timeRange)
 
-  /** The iterator behind [[read]]. [[segmentBase]] names the segment
-    * each record came from, so a caller's sequence numbers always match
-    * the listing the record was actually read from, healed or not. */
+  /** Walks the lines with ordinals in [from, until) of the segments
+    * `timeRange` overlaps, one at a time: [[advance]], then [[line]],
+    * [[ordinal]] and [[segmentBase]] (the base of the segment the line
+    * came from, so a caller's sequence numbers always match the listing
+    * the line was actually read from, healed or not). A line-level
+    * caller parses each line once and applies the time range to that
+    * parse; [[records]] is the record-level view. */
   final class SegmentReader private[EmbeddedLogStore] (project: String,
       store: String, shard: Int, listed: Seq[Segment], from: Long,
-      until: Long, timeRange: Option[(Int, Int)])
-      extends Iterator[(Long, LogRecord)] {
+      until: Long, timeRange: Option[(Long, Long)]) {
     private val dir = shardDir(project, store, shard)
     private var cur = from // next ordinal not yet consumed
     private var heals = 0
@@ -853,13 +867,13 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
     private var file: java.io.BufferedReader = null
     private var fileBase = 0L
     private var lineOrd = 0L // ordinal of the open file's next line
-    private var pending: (Long, LogRecord) = null
-    private var pendingBase = 0L
-    private var lastBase = 0L
+    private var line_ : String = null
+    private var base = 0L
 
-    /** Base ordinal of the segment the record [[next]] returned last
-      * came from. */
-    def segmentBase: Long = lastBase
+    /** The current line: valid after [[advance]] returned true. */
+    def line: String = line_
+    def ordinal: Long = cur - 1
+    def segmentBase: Long = base
 
     private def select(segs: Seq[Segment]): Iterator[Segment] =
       segs.iterator.filter { seg =>
@@ -876,10 +890,11 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
 
     def close(): Unit = if (file != null) { file.close(); file = null }
 
-    override def hasNext: Boolean = {
-      while (pending == null && cur < until) {
+    /** Moves to the next line; false (and closed) at the end. */
+    def advance(): Boolean = {
+      while (cur < until) {
         if (file == null) {
-          if (!todo.hasNext) return false
+          if (!todo.hasNext) { line_ = null; return false }
           val seg = todo.next()
           try {
             file = io(Files.newBufferedReader(dir.resolve(seg.fileName),
@@ -887,29 +902,40 @@ class EmbeddedLogStore(root: String, ioRetries: Int = 10,
             fileBase = seg.base; lineOrd = seg.base
           } catch { case _: java.nio.file.NoSuchFileException => heal() }
         } else {
-          val line = file.readLine()
+          val l = file.readLine()
           val ord = lineOrd
           lineOrd += 1
-          if (line == null || ord >= until) close()
+          if (l == null || ord >= until) close()
           else if (ord >= cur) {
             cur = ord + 1
-            val r = jsonToRecord(line)
-            if (timeRange.forall { case (fromT, untilT) =>
-                r.time >= fromT && r.time < untilT }) {
-              pending = (ord, r); pendingBase = fileBase
-            }
+            line_ = l; base = fileBase
+            return true
           }
         }
       }
-      if (pending == null) close()
-      pending != null
+      close()
+      line_ = null
+      false
     }
 
-    override def next(): (Long, LogRecord) = {
-      if (!hasNext) throw new NoSuchElementException("read past the end")
-      val r = pending
-      pending = null; lastBase = pendingBase
-      r
+    /** The records of the lines, parsed with [[jsonToRecord]] and
+      * filtered to `timeRange`. */
+    def records: Iterator[(Long, LogRecord)] = new Iterator[(Long, LogRecord)] {
+      private var pending: (Long, LogRecord) = null
+      override def hasNext: Boolean = {
+        while (pending == null && advance()) {
+          val r = jsonToRecord(line_)
+          if (timeRange.forall { case (lo, hi) => r.time >= lo && r.time < hi })
+            pending = (ordinal, r)
+        }
+        pending != null
+      }
+      override def next(): (Long, LogRecord) = {
+        if (!hasNext) throw new NoSuchElementException("read past the end")
+        val r = pending
+        pending = null
+        r
+      }
     }
   }
 
@@ -1101,9 +1127,9 @@ object EmbeddedLogStore {
     new String(B64D.decode(cursor), StandardCharsets.UTF_8).toLong
 
   /** Direct string serialization — ~3x less allocation than building a
-    * Jackson tree per record on the hot write path; Jackson still parses
-    * on read (tolerant, well-tested). */
-  private[store] def recordToJson(r: LogRecord): String = {
+    * Jackson tree per record on the hot write path. [[FastJsonl]] reads
+    * exactly this shape back. */
+  private[graft] def recordToJson(r: LogRecord): String = {
     val sb = new StringBuilder(64)
     sb.append("{\"time\":").append(r.time)
     sb.append(",\"topic\":"); appendJsonString(sb, r.topic)
@@ -1144,12 +1170,15 @@ object EmbeddedLogStore {
     sb.append('"')
   }
 
-  private[store] def jsonToRecord(line: String): LogRecord = {
-    // fast path first: our own writer's output shape; any surprise falls
-    // back to the tolerant Jackson parse (differential-tested in
-    // StoreManifestSpec — both must agree wherever the fast path accepts)
+  /** A data line's record: [[FastJsonl]] for the writer's own shape, the
+    * tolerant Jackson parse for anything else (the two are
+    * differential-tested against each other in `FastJsonlSpec`). */
+  private[graft] def jsonToRecord(line: String): LogRecord = {
     val fast = FastJsonl.tryParse(line)
-    if (fast != null) return fast
+    if (fast != null) fast else jacksonToRecord(line)
+  }
+
+  private[graft] def jacksonToRecord(line: String): LogRecord = {
     val n = Json.readTree(line)
     def toMap(field: String): Map[String, String] = {
       val node = n.get(field)

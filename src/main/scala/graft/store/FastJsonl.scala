@@ -1,48 +1,109 @@
 package graft.store
 
-/** Zero-dependency parser for the exact JSONL shape
+/** Zero-dependency scanner for the exact JSONL shape
   * [[EmbeddedLogStore.recordToJson]] writes:
   * `{"time":N,"topic":S,"source":S,"tags":{S:S,...},"contents":{S:S,...}}`
-  * with the writer's escape set (`\" \\ \n \r \t \uXXXX`). Strict: any
-  * deviation (unexpected key order, whitespace, other escapes, other
-  * types) returns null and the caller falls back to Jackson — so the
-  * fast path can only ever be a performance choice, never a semantic
-  * one. Scanning the line directly is ~3x cheaper than building a
-  * Jackson tree per record on the 100k-records/query read path. */
+  * with the writer's escape set (`\" \\ \n \r \t \uXXXX`). One pass
+  * checks the whole line against that grammar and reports each field to a
+  * [[Visitor]] as a span of the line, so a caller materialises only the
+  * fields it needs. Strict: any deviation (unexpected key order,
+  * whitespace, other escapes, other types, a time the writer could not
+  * have written) fails the scan and the caller falls back to Jackson — so
+  * the fast path can only ever be a performance choice, never a semantic
+  * one. Its two visitors are [[tryParse]] (a [[LogRecord]], for the
+  * record-level store read) and the connector's row decoder
+  * (`graft.connector.RowDecoder`, straight into the pruned schema). */
 object FastJsonl {
 
-  def tryParse(line: String): LogRecord =
-    try new Parser(line).parse()
-    catch { case _: Exception => null }
+  /** Receives one line's fields in line order: time, topic, source, each
+    * tag, each content. A string is the span [start, end) of the line
+    * between its quotes; `esc` says the span holds a backslash, so it is
+    * not the value itself but its escaped form ([[string]] resolves
+    * either). Duplicate keys are reported as they occur. Nothing reported
+    * stands until [[scan]] has returned true. */
+  trait Visitor {
+    def time(t: Int): Unit
+    def topic(s: Int, e: Int, esc: Boolean): Unit
+    def source(s: Int, e: Int, esc: Boolean): Unit
+    def tag(ks: Int, ke: Int, kEsc: Boolean, vs: Int, ve: Int, vEsc: Boolean): Unit
+    def content(ks: Int, ke: Int, kEsc: Boolean, vs: Int, ve: Int, vEsc: Boolean): Unit
+  }
 
-  /** Per-call state: one instance per line, safe under concurrent
-    * reader tasks. */
-  private final class Parser(s: String) {
-    private var i = 0
+  /** Scans `line` into `v`; false on any deviation from the grammar. */
+  def scan(line: String, v: Visitor): Boolean = new Scanner(line, v).line()
 
-    def parse(): LogRecord = {
-      if (!expect("{\"time\":")) return null
-      var time = 0
-      var neg = false
-      if (i < s.length && s.charAt(i) == '-') { neg = true; i += 1 }
-      val d0 = i
-      while (i < s.length && s.charAt(i) >= '0' && s.charAt(i) <= '9') {
-        time = time * 10 + (s.charAt(i) - '0'); i += 1
+  /** The record of a line in the writer's grammar; null otherwise. */
+  def tryParse(line: String): LogRecord = {
+    val b = new RecordVisitor(line)
+    if (scan(line, b)) b.result else null
+  }
+
+  /** The string value of the span [s, e) of `line`. */
+  def string(line: String, s: Int, e: Int, esc: Boolean): String =
+    if (esc) unescape(line, s, e) else line.substring(s, e)
+
+  /** Resolves the escapes of a span the scanner accepted. */
+  def unescape(line: String, s: Int, e: Int): String = {
+    val sb = new java.lang.StringBuilder(e - s)
+    var i = s
+    while (i < e) {
+      val c = line.charAt(i)
+      if (c != '\\') { sb.append(c); i += 1 }
+      else {
+        line.charAt(i + 1) match {
+          case 'n' => sb.append('\n'); i += 2
+          case 'r' => sb.append('\r'); i += 2
+          case 't' => sb.append('\t'); i += 2
+          case 'u' =>
+            var code = 0
+            var j = i + 2
+            while (j < i + 6) { code = code * 16 + Character.digit(line.charAt(j), 16); j += 1 }
+            sb.append(code.toChar); i += 6
+          case q => sb.append(q); i += 2 // '"' or '\\'
+        }
       }
-      if (i == d0) return null
-      if (neg) time = -time
-      if (!expect(",\"topic\":")) return null
-      val topic = str(); if (topic == null) return null
-      if (!expect(",\"source\":")) return null
-      val source = str(); if (source == null) return null
-      if (!expect(",\"tags\":{")) return null
-      val tags = obj(); if (tags == null) return null
-      if (!expect(",\"contents\":{")) return null
-      val contents = obj(); if (contents == null) return null
+    }
+    sb.toString
+  }
+
+  private final class RecordVisitor(line: String) extends Visitor {
+    private var t = 0
+    private var topicStr: String = _
+    private var sourceStr: String = _
+    private val tags = Map.newBuilder[String, String]
+    private val contents = Map.newBuilder[String, String]
+    def time(t: Int): Unit = this.t = t
+    def topic(s: Int, e: Int, esc: Boolean): Unit = topicStr = string(line, s, e, esc)
+    def source(s: Int, e: Int, esc: Boolean): Unit = sourceStr = string(line, s, e, esc)
+    def tag(ks: Int, ke: Int, kEsc: Boolean, vs: Int, ve: Int, vEsc: Boolean): Unit =
+      tags += string(line, ks, ke, kEsc) -> string(line, vs, ve, vEsc)
+    def content(ks: Int, ke: Int, kEsc: Boolean, vs: Int, ve: Int, vEsc: Boolean): Unit =
+      contents += string(line, ks, ke, kEsc) -> string(line, vs, ve, vEsc)
+    def result: LogRecord = LogRecord(t, topicStr, sourceStr, tags.result(), contents.result())
+  }
+
+  /** Per-line cursor: one instance per scan, safe under concurrent
+    * reader tasks. */
+  private final class Scanner(s: String, v: Visitor) {
+    private var i = 0
+    private var esc = false // whether the last string scanned held an escape
+
+    def line(): Boolean = {
+      if (!expect("{\"time\":")) return false
+      if (!time()) return false
+      if (!expect(",\"topic\":")) return false
+      var st = i + 1
+      var en = str(); if (en < 0) return false
+      v.topic(st, en, esc)
+      if (!expect(",\"source\":")) return false
+      st = i + 1
+      en = str(); if (en < 0) return false
+      v.source(st, en, esc)
+      if (!expect(",\"tags\":{") || !obj(tags = true)) return false
+      if (!expect(",\"contents\":{") || !obj(tags = false)) return false
       // obj() already consumed the contents object's closing brace —
       // exactly one outer '}' remains in writer output
-      if (!expect("}") || i != s.length) return null
-      LogRecord(time, topic, source, tags, contents)
+      expect("}") && i == s.length
     }
 
     private def expect(lit: String): Boolean = {
@@ -50,53 +111,75 @@ object FastJsonl {
       i += lit.length; true
     }
 
-    /** Quoted string at the cursor; null on any deviation. */
-    private def str(): String = {
-      if (i >= s.length || s.charAt(i) != '"') return null
-      i += 1
-      val sb = new java.lang.StringBuilder(16)
-      while (i < s.length) {
-        s.charAt(i) match {
-          case '"' => i += 1; return sb.toString
-          case '\\' =>
-            if (i + 1 >= s.length) return null
-            s.charAt(i + 1) match {
-              case '"' => sb.append('"'); i += 2
-              case '\\' => sb.append('\\'); i += 2
-              case 'n' => sb.append('\n'); i += 2
-              case 'r' => sb.append('\r'); i += 2
-              case 't' => sb.append('\t'); i += 2
-              case 'u' =>
-                if (i + 6 > s.length) return null
-                val code = Integer.parseInt(s.substring(i + 2, i + 6), 16)
-                sb.append(code.toChar); i += 6
-              case _ => return null // escape the writer never emits
-            }
-          case c if c < ' ' => return null // raw control char: not ours
-          case c => sb.append(c); i += 1
-        }
+    /** An Int as `Int.toString` writes it: no '+', no leading zero, no
+      * "-0", in range. */
+    private def time(): Boolean = {
+      val neg = i < s.length && s.charAt(i) == '-'
+      if (neg) i += 1
+      val d0 = i
+      var t = 0L
+      while (i < s.length && i - d0 < 11 && s.charAt(i) >= '0' && s.charAt(i) <= '9') {
+        t = t * 10 + (s.charAt(i) - '0'); i += 1
       }
-      null // unterminated
+      val digits = i - d0
+      if (digits == 0 || digits > 10 || (digits > 1 && s.charAt(d0) == '0') ||
+        (neg && t == 0)) return false
+      if (neg) t = -t
+      if (t < Int.MinValue || t > Int.MaxValue) return false
+      v.time(t.toInt)
+      true
+    }
+
+    /** The quoted string at the cursor: returns the index of its closing
+      * quote and moves past it, setting [[esc]]; -1 on any deviation. */
+    private def str(): Int = {
+      if (i >= s.length || s.charAt(i) != '"') return -1
+      i += 1
+      esc = false
+      while (i < s.length) {
+        val c = s.charAt(i)
+        if (c == '"') { i += 1; return i - 1 }
+        if (c == '\\') {
+          if (i + 1 >= s.length) return -1
+          s.charAt(i + 1) match {
+            case '"' | '\\' | 'n' | 'r' | 't' => i += 2
+            case 'u' if i + 6 <= s.length && hex(i + 2) && hex(i + 3) &&
+              hex(i + 4) && hex(i + 5) => i += 6
+            case _ => return -1 // an escape the writer never emits
+          }
+          esc = true
+        } else if (c < ' ') return -1 // raw control char: not ours
+        else i += 1
+      }
+      -1 // unterminated
+    }
+
+    private def hex(j: Int): Boolean = {
+      val c = s.charAt(j)
+      (c >= '0' && c <= '9') || (c >= 'a' && c <= 'f') || (c >= 'A' && c <= 'F')
     }
 
     /** `k:v,...}` with the open brace already consumed. */
-    private def obj(): Map[String, String] = {
-      val m = Map.newBuilder[String, String]
-      if (i < s.length && s.charAt(i) == '}') { i += 1; return m.result() }
+    private def obj(tags: Boolean): Boolean = {
+      if (i < s.length && s.charAt(i) == '}') { i += 1; return true }
       while (true) {
-        val k = str(); if (k == null) return null
-        if (i >= s.length || s.charAt(i) != ':') return null
+        val ks = i + 1
+        val ke = str(); if (ke < 0) return false
+        val kEsc = esc
+        if (i >= s.length || s.charAt(i) != ':') return false
         i += 1
-        val v = str(); if (v == null) return null
-        m += (k -> v)
-        if (i >= s.length) return null
+        val vs = i + 1
+        val ve = str(); if (ve < 0) return false
+        if (tags) v.tag(ks, ke, kEsc, vs, ve, esc)
+        else v.content(ks, ke, kEsc, vs, ve, esc)
+        if (i >= s.length) return false
         s.charAt(i) match {
           case ',' => i += 1
-          case '}' => i += 1; return m.result()
-          case _ => return null
+          case '}' => i += 1; return true
+          case _ => return false
         }
       }
-      null
+      false
     }
   }
 }

@@ -2,7 +2,6 @@ package graft
 
 import graft.operators.Similarity
 import graft.store.{EmbeddedLogStore, LogRecord}
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,11 +11,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * StructuredLoghubWordCount.scala:77) and foreachBatch + limit +
   * table insert (StructuredLoghubSinkHive.scala:72-78). Plus IVF ANN
   * recall structure. */
-class CapabilitiesSpec extends AnyFunSuite with StopStreamsAfterAll {
+class CapabilitiesSpec extends AnyFunSuite with StopStreamsAfterAll with TempDirs {
   private lazy val spark = SparkTestSession.spark
 
   private def seeded(): String = {
-    val root = Files.createTempDirectory("graft-cap").toString
+    val root = tempDir("graft-cap").toString
     val store = new EmbeddedLogStore(root)
     store.createStore("proj", "logs", 2)
     store.appendSegment("proj", "logs", 0, "a",
@@ -38,7 +37,7 @@ class CapabilitiesSpec extends AnyFunSuite with StopStreamsAfterAll {
       .flatMap(_.split(" "))
       .groupBy(col("value").as("word")).count()
       .writeStream.format("memory").queryName("t_wc").outputMode("complete")
-      .option("checkpointLocation", Files.createTempDirectory("ck").toString)
+      .option("checkpointLocation", tempDir("ck").toString)
       .trigger(Trigger.AvailableNow()).start()
     awaitDone(q)
     val counts = spark.table("t_wc").collect()
@@ -56,7 +55,7 @@ class CapabilitiesSpec extends AnyFunSuite with StopStreamsAfterAll {
       .foreachBatch { (ds: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
         ds.limit(2).write.insertInto("t_sink")
       }
-      .option("checkpointLocation", Files.createTempDirectory("ck").toString)
+      .option("checkpointLocation", tempDir("ck").toString)
       .trigger(Trigger.AvailableNow()).start()
     awaitDone(q)
     assert(spark.table("t_sink").count() === 2)
@@ -102,13 +101,13 @@ class CapabilitiesSpec extends AnyFunSuite with StopStreamsAfterAll {
   }
 
   test("native session_window streaming aggregation matches the batch gap logic") {
-    val root = Files.createTempDirectory("graft-sess").toString
+    val root = tempDir("graft-sess").toString
     val store = new EmbeddedLogStore(root)
     store.createStore("proj", "logs", 1)
     // user 1: events at 0,10,100 s (30s gap → two sessions: {0,10}, {100})
     store.appendSegment("proj", "logs", 0, "a", Seq(0, 10, 100).map(t =>
       LogRecord(1700000000 + t, "t", "s", Map.empty, Map("uid" -> "1"))))
-    val ckpt = Files.createTempDirectory("ckpt").toString
+    val ckpt = tempDir("ckpt").toString
     val q = spark.readStream.format("graft-logstore").options(opts(root))
       .schema("uid INT, __time__ TIMESTAMP").load()
       .withWatermark("__time__", "10 minutes")

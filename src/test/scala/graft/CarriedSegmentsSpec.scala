@@ -2,7 +2,6 @@ package graft
 
 import graft.connector._
 import graft.store.{EmbeddedLogStore, LogRecord}
-import java.nio.file.Files
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.ReadLimit
@@ -16,17 +15,17 @@ import scala.jdk.CollectionConverters._
   * deletes listed files: the readers must heal onto the new layout and
   * still deliver every record exactly once at its original ordinal, with
   * a `__sequence_number__` that names the segment it was read from. */
-class CarriedSegmentsSpec extends AnyFunSuite {
+class CarriedSegmentsSpec extends AnyFunSuite with TempDirs {
   import CarriedSegmentsSpec._
 
   test("batch partitions read a compacted store exactly once") {
-    check(2, batchPlan, readersFirst = false)
-    check(2, batchPlan, readersFirst = true)
+    check(this, 2, batchPlan, readersFirst = false)
+    check(this, 2, batchPlan, readersFirst = true)
   }
 
   test("micro-batch partitions read a compacted store exactly once") {
-    check(2, microBatchPlan, readersFirst = false)
-    check(2, microBatchPlan, readersFirst = true)
+    check(this, 2, microBatchPlan, readersFirst = false)
+    check(this, 2, microBatchPlan, readersFirst = true)
   }
 }
 
@@ -36,8 +35,8 @@ object CarriedSegmentsSpec extends org.scalatest.Assertions {
   private val SegmentsPerShard = 8
   private val PerSegment = 3
 
-  private def seeded(shards: Int): (String, EmbeddedLogStore) = {
-    val root = Files.createTempDirectory("carried-segments").toString
+  private def seeded(dirs: TempDirs, shards: Int): (String, EmbeddedLogStore) = {
+    val root = dirs.tempDir("carried-segments").toString
     val s = new EmbeddedLogStore(root)
     s.createStore("proj", "logs", shards)
     for (seg <- 0 until SegmentsPerShard; shard <- 0 until shards)
@@ -70,13 +69,13 @@ object CarriedSegmentsSpec extends org.scalatest.Assertions {
     out.result()
   }
 
-  /** Compacts a `shards`-shard store between planning and reading; with
-    * `readersFirst` the readers already exist when the compaction runs.
-    * Returns the planned partitions. */
-  def check(shards: Int,
+  /** Compacts a `shards`-shard store (in a directory of `dirs`) between
+    * planning and reading; with `readersFirst` the readers already exist
+    * when the compaction runs. Returns the planned partitions. */
+  def check(dirs: TempDirs, shards: Int,
       plan: String => (Array[InputPartition], PartitionReaderFactory),
       readersFirst: Boolean): Array[InputPartition] = {
-    val (root, s) = seeded(shards)
+    val (root, s) = seeded(dirs, shards)
     val expected = ordinals(s, shards)
     val (parts, factory) = plan(root)
     val slices = parts.map(_.asInstanceOf[LogPackedPartition].slices)

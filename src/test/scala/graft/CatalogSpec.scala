@@ -7,11 +7,11 @@ import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
 /** SQL catalog surface: stores as tables, no option plumbing. */
-class CatalogSpec extends AnyFunSuite with StopStreamsAfterAll {
+class CatalogSpec extends AnyFunSuite with StopStreamsAfterAll with TempDirs {
   private lazy val spark = SparkTestSession.spark
 
   private def withCatalog(test: String => Unit): Unit = {
-    val root = Files.createTempDirectory("graft-cat").toString
+    val root = tempDir("graft-cat").toString
     // the catalog NAME must be unique per test: Spark's CatalogManager
     // caches catalog instances by name, so a name collision (the old
     // root.hashCode % 1000 scheme collided at the few-per-thousand
@@ -74,7 +74,7 @@ class CatalogSpec extends AnyFunSuite with StopStreamsAfterAll {
       val q = spark.readStream.table(s"$cat.proj.ev")
         .writeStream.format("memory").queryName("t_cat_stream")
         .option("checkpointLocation",
-          Files.createTempDirectory("ckpt").toString)
+          tempDir("ckpt").toString)
         .trigger(Trigger.AvailableNow()).start()
       awaitDone(q)
       assert(spark.table("t_cat_stream").count() === 2)

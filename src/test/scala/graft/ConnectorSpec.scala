@@ -2,16 +2,15 @@ package graft
 
 import graft.connector.RowConverters
 import graft.store.{EmbeddedLogStore, LogRecord}
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-class ConnectorSpec extends AnyFunSuite with StopStreamsAfterAll {
+class ConnectorSpec extends AnyFunSuite with StopStreamsAfterAll with TempDirs {
   private lazy val spark = SparkTestSession.spark
 
   private def freshRoot(): String =
-    Files.createTempDirectory("graft-store").toString
+    tempDir("graft-store").toString
 
   private def seed(root: String, n: Int = 20): Unit = {
     val store = new EmbeddedLogStore(root)
@@ -213,7 +212,7 @@ class ConnectorSpec extends AnyFunSuite with StopStreamsAfterAll {
       if (t == null) Seq.empty else Option(t.getMessage).toSeq ++ msgs(t.getCause)
     assert(msgs(e).exists(_.contains("predates")))
     // a stream must not accept the batch-only snapshot option
-    val ckpt = Files.createTempDirectory("graft-snap-ckpt").toString
+    val ckpt = tempDir("graft-snap-ckpt").toString
     val q = spark.readStream.format("graft-logstore").options(readOpts(root))
       .option("store.snapshotversion", "1").schema("msg INT").load()
       .writeStream.format("noop").option("checkpointLocation", ckpt)

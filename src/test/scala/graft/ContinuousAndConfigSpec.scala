@@ -8,11 +8,11 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
-class ContinuousAndConfigSpec extends AnyFunSuite with StopStreamsAfterAll {
+class ContinuousAndConfigSpec extends AnyFunSuite with StopStreamsAfterAll with TempDirs {
   private lazy val spark = SparkTestSession.spark
 
   private def seeded(n: Int): String = {
-    val root = Files.createTempDirectory("graft-cc").toString
+    val root = tempDir("graft-cc").toString
     val store = new EmbeddedLogStore(root)
     store.createStore("proj", "logs", 2)
     store.appendSegment("proj", "logs", 0, "a",
@@ -29,7 +29,7 @@ class ContinuousAndConfigSpec extends AnyFunSuite with StopStreamsAfterAll {
     val q = spark.readStream.format("graft-logstore").options(opts(root))
       .schema("msg INT").load()
       .writeStream.format("memory").queryName("t_cont")
-      .option("checkpointLocation", Files.createTempDirectory("ckpt").toString)
+      .option("checkpointLocation", tempDir("ckpt").toString)
       .trigger(Trigger.Continuous("1 second")).start()
     try {
       var tries = 0
@@ -53,7 +53,7 @@ class ContinuousAndConfigSpec extends AnyFunSuite with StopStreamsAfterAll {
   test("continuous tail survives a mid-flight segment rewrite") {
     // many 1-record segments so the rewrite has something to fold; the
     // tailing readers hold listings a compaction invalidates mid-run
-    val root = Files.createTempDirectory("graft-cc-opt").toString
+    val root = tempDir("graft-cc-opt").toString
     val store = new EmbeddedLogStore(root)
     store.createStore("proj", "logs", 2)
     (0 until 12).foreach(i =>
@@ -63,7 +63,7 @@ class ContinuousAndConfigSpec extends AnyFunSuite with StopStreamsAfterAll {
     val q = spark.readStream.format("graft-logstore").options(opts(root))
       .schema("msg INT").load()
       .writeStream.format("memory").queryName("t_cont_opt")
-      .option("checkpointLocation", Files.createTempDirectory("ckpt").toString)
+      .option("checkpointLocation", tempDir("ckpt").toString)
       .trigger(Trigger.Continuous("1 second")).start()
     try {
       var tries = 0
@@ -133,7 +133,7 @@ class ContinuousAndConfigSpec extends AnyFunSuite with StopStreamsAfterAll {
     assert(said.endsWith("config: maxoffsetspertrigger=10"))
     assert(store.readSourceConfig("proj", "logs") ===
       Map("maxoffsetspertrigger" -> "10"))
-    val ckpt = Files.createTempDirectory("ckpt").toString
+    val ckpt = tempDir("ckpt").toString
     val q = spark.readStream.format("graft-logstore").options(opts(root))
       .option("maxoffsetspertrigger", "1000") // overridden by config.json
       .schema("msg INT").load()
@@ -169,7 +169,7 @@ class ContinuousAndConfigSpec extends AnyFunSuite with StopStreamsAfterAll {
         .schema("msg INT").load()
         .writeStream.format("memory").queryName("t_grp")
         .option("checkpointLocation",
-          Files.createTempDirectory("ckpt").toString)
+          tempDir("ckpt").toString)
         .trigger(Trigger.AvailableNow()).start()
       awaitDone(q)
       assert(spark.table("t_grp").count() === 30)
@@ -189,7 +189,7 @@ class ContinuousAndConfigSpec extends AnyFunSuite with StopStreamsAfterAll {
         .schema("msg INT").load()
         .writeStream.format("memory").queryName("t_grp2")
         .option("checkpointLocation",
-          Files.createTempDirectory("ckpt").toString)
+          tempDir("ckpt").toString)
         .trigger(Trigger.AvailableNow()).start()
       awaitDone(q2)
       assert(spark.table("t_grp2").collect().map(_.getInt(0)).toSeq ===
@@ -221,7 +221,7 @@ class ContinuousAndConfigSpec extends AnyFunSuite with StopStreamsAfterAll {
   }
 
   test("writer hash-key routing by column") {
-    val root = Files.createTempDirectory("graft-rt").toString
+    val root = tempDir("graft-rt").toString
     new EmbeddedLogStore(root).createStore("proj", "logs", 4)
     import spark.implicits._
     (0 until 40).map(i => (1700000000 + i, s"user${i % 8}", s"m$i"))

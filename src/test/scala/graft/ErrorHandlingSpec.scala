@@ -10,14 +10,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * silently lossy, called out in SURVEY §4); we deliberately do the
   * opposite, so a misconfigured or corrupted store can never masquerade
   * as an empty-but-successful read. */
-class ErrorHandlingSpec extends AnyFunSuite {
+class ErrorHandlingSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
 
   private def opts(root: String) = Map("store.root" -> root,
     "store.project" -> "proj", "store.name" -> "logs")
 
   test("reading a nonexistent store fails, not empty") {
-    val root = Files.createTempDirectory("graft-err").toString
+    val root = tempDir("graft-err").toString
     val e = intercept[Exception] {
       spark.read.format("graft-logstore").options(opts(root))
         .schema("msg INT").load().count()
@@ -26,7 +26,7 @@ class ErrorHandlingSpec extends AnyFunSuite {
   }
 
   test("corrupted segment file fails the task, not silently skipped") {
-    val root = Files.createTempDirectory("graft-err").toString
+    val root = tempDir("graft-err").toString
     val store = new EmbeddedLogStore(root)
     store.createStore("proj", "logs", 1)
     store.appendSegment("proj", "logs", 0, "a",
@@ -45,7 +45,7 @@ class ErrorHandlingSpec extends AnyFunSuite {
   }
 
   test("unconvertible field value fails loudly under a typed schema") {
-    val root = Files.createTempDirectory("graft-err").toString
+    val root = tempDir("graft-err").toString
     val store = new EmbeddedLogStore(root)
     store.createStore("proj", "logs", 1)
     store.appendSegment("proj", "logs", 0, "a",
@@ -58,7 +58,7 @@ class ErrorHandlingSpec extends AnyFunSuite {
   }
 
   test("replayed segment with different record count is rejected") {
-    val root = Files.createTempDirectory("graft-err").toString
+    val root = tempDir("graft-err").toString
     val store = new EmbeddedLogStore(root)
     store.createStore("proj", "logs", 1)
     val rec = (n: Int) => (0 until n).map(i =>
@@ -71,7 +71,7 @@ class ErrorHandlingSpec extends AnyFunSuite {
   }
 
   test("splitting a readonly shard is rejected") {
-    val root = Files.createTempDirectory("graft-err").toString
+    val root = tempDir("graft-err").toString
     val store = new EmbeddedLogStore(root)
     store.createStore("proj", "logs", 2)
     store.splitShard("proj", "logs", 0)
@@ -82,7 +82,7 @@ class ErrorHandlingSpec extends AnyFunSuite {
   }
 
   test("overwrite save mode is rejected (reference K2 semantics)") {
-    val root = Files.createTempDirectory("graft-err").toString
+    val root = tempDir("graft-err").toString
     new EmbeddedLogStore(root).createStore("proj", "logs", 1)
     import spark.implicits._
     val df = Seq((1700000000, "x")).toDF("__time__", "payload")
@@ -95,7 +95,7 @@ class ErrorHandlingSpec extends AnyFunSuite {
   }
 
   test("binary/array/map columns are rejected on write (flat wire model)") {
-    val root = Files.createTempDirectory("graft-err").toString
+    val root = tempDir("graft-err").toString
     new EmbeddedLogStore(root).createStore("proj", "logs", 1)
     import spark.implicits._
     val df = Seq((1700000000, Array[Byte](1, 2, 3))).toDF("__time__", "payload")
@@ -109,7 +109,7 @@ class ErrorHandlingSpec extends AnyFunSuite {
   }
 
   test("sequence numbers and topic/source metadata round-trip") {
-    val root = Files.createTempDirectory("graft-md").toString
+    val root = tempDir("graft-md").toString
     val store = new EmbeddedLogStore(root)
     store.createStore("proj", "logs", 1)
     store.appendSegment("proj", "logs", 0, "a", (0 until 3).map(i =>

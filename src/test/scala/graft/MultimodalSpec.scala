@@ -7,7 +7,7 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
-class MultimodalSpec extends AnyFunSuite {
+class MultimodalSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
 
   /** Fake image payload: 8-byte header (w, h big-endian shorts) + data. */
@@ -283,7 +283,7 @@ class MultimodalSpec extends AnyFunSuite {
     // first sample of each frame has no predecessor inside the frame.
     val events = (0L until 70L).map(i => (1L, i, 2.0)) // s = ±100/50*2...
       .toDF("user_id", "event_id", "value")
-    val dir = java.nio.file.Files.createTempDirectory("m7").toString
+    val dir = tempDir("m7").toString
     events.write.mode("overwrite").parquet(s"$dir/events.parquet")
     val out = SparkEntry.queries("m7_audio_frames")(spark, dir)
       .collect().map(r => (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
@@ -305,7 +305,7 @@ class MultimodalSpec extends AnyFunSuite {
       (2L, "a" * 64 + "b" * 64, "en", "s", 0L),
       (3L, "a" * 63, "en", "s", 0L) // < 2 frames: excluded
     ).toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("m8").toString
+    val dir = tempDir("m8").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = SparkEntry.queries("m8_scene_cuts")(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),

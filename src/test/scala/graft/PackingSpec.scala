@@ -2,7 +2,6 @@ package graft
 
 import graft.connector._
 import graft.store.{EmbeddedLogStore, LogRecord}
-import java.nio.file.Files
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.ReadLimit
@@ -17,7 +16,7 @@ import scala.jdk.CollectionConverters._
   * (local[4]: 4). Packing changes which task reads a slice, never what
   * the slice reads: rows, ordinals and `__sequence_number__` values equal
   * those of the unpacked plan. */
-class PackingSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
+class PackingSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
   private val Shards = 16
   private val PerSegment = 20
@@ -34,7 +33,7 @@ class PackingSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
   /** Shard i holds 2 + i % 3 segments; segment j spans times
     * [T0 + 100j, T0 + 100j + PerSegment). */
   private def seeded(): String = {
-    val root = Files.createTempDirectory("graft-packing").toString
+    val root = tempDir("graft-packing").toString
     val s = new EmbeddedLogStore(root)
     s.createStore("proj", "logs", Shards)
     for (shard <- 0 until Shards; seg <- 0 until 2 + shard % 3)
@@ -172,7 +171,7 @@ class PackingSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
   test("a packed partition heals across a compaction and reads every record once") {
     Seq(false, true).foreach { readersFirst =>
       Seq(CarriedSegmentsSpec.batchPlan _, CarriedSegmentsSpec.microBatchPlan _).foreach { p =>
-        val parts = CarriedSegmentsSpec.check(8, p, readersFirst)
+        val parts = CarriedSegmentsSpec.check(this, 8, p, readersFirst)
         assert(parts.length === 4)
         assert(parts.forall(_.asInstanceOf[LogPackedPartition].slices.size > 1))
       }

@@ -3,16 +3,15 @@ package graft
 import graft.api.LogServiceUtils
 import graft.api.LogServiceUtils.StoreRef
 import graft.store.{EmbeddedLogStore, LogRecord}
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 
-class PushdownSpec extends AnyFunSuite with StopStreamsAfterAll {
+class PushdownSpec extends AnyFunSuite with StopStreamsAfterAll with TempDirs {
   private lazy val spark = SparkTestSession.spark
 
   private def seeded(): StoreRef = {
-    val ref = StoreRef(Files.createTempDirectory("graft-pd").toString, "proj", "logs")
+    val ref = StoreRef(tempDir("graft-pd").toString, "proj", "logs")
     LogServiceUtils.createStore(ref, 2)
     val store = new EmbeddedLogStore(ref.root)
     // three time-disjoint segments per shard: [100,199], [200,299], [300,399]
@@ -80,7 +79,7 @@ class PushdownSpec extends AnyFunSuite with StopStreamsAfterAll {
   }
 
   test("limit pushdown caps partition ranges; residual time filter disables it") {
-    val root = Files.createTempDirectory("graft-limit").toString
+    val root = tempDir("graft-limit").toString
     val store = new EmbeddedLogStore(root)
     store.createStore("proj", "logs", 2)
     (0 until 2).foreach(sh => store.appendSegment("proj", "logs", sh, "a",
@@ -210,14 +209,14 @@ class PushdownSpec extends AnyFunSuite with StopStreamsAfterAll {
 
   test("facade stream + write round-trip") {
     val ref = seeded()
-    val dst = StoreRef(Files.createTempDirectory("graft-pd-out").toString, "proj", "out")
+    val dst = StoreRef(tempDir("graft-pd-out").toString, "proj", "out")
     LogServiceUtils.createStore(dst, 1)
     import org.apache.spark.sql.streaming.Trigger
     val q = LogServiceUtils.createStreamDF(spark, ref, Some(schema),
         maxOffsetsPerTrigger = 64)
       .writeStream.format("graft-logstore")
       .options(dst.options)
-      .option("checkpointLocation", Files.createTempDirectory("ckpt").toString)
+      .option("checkpointLocation", tempDir("ckpt").toString)
       .trigger(Trigger.AvailableNow()).start()
     awaitDone(q)
     val back = LogServiceUtils.createBatchDF(spark, dst,

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * pinned by the t24/t25/s11 DuckDB oracles: the hash-threshold
   * sampling invariants (nesting, determinism, rate edges) and the
   * radius-search/top-k consistency that no SQL replay can state. */
-class SamplingAndRangeSpec extends AnyFunSuite {
+class SamplingAndRangeSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
   private val dir = "/root/testdata/sf0.001"
 
@@ -68,7 +68,7 @@ class SamplingAndRangeSpec extends AnyFunSuite {
     val d = ((1 to 6).map(i => (i.toLong, "new york is big", "en", "s", 15L)) ++
       (7 to 12).map(i => (i.toLong, "big apple is new", "en", "s", 15L)))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val tmp = java.nio.file.Files.createTempDirectory("t24").toString
+    val tmp = tempDir("t24").toString
     d.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     val out = SparkEntry.queries("t24_pmi_collocations")(spark, tmp)
       .collect().map(r => (r.getString(0), r.getString(1),

@@ -4,7 +4,7 @@ import graft.functions.Sketches._
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class SketchesSpec extends AnyFunSuite with StopStreamsAfterAll {
+class SketchesSpec extends AnyFunSuite with StopStreamsAfterAll with TempDirs {
   private lazy val spark = SparkTestSession.spark
   private val sf = "/root/testdata/sf0.01"
   private def events = spark.read.parquet(s"$sf/events.parquet")
@@ -56,7 +56,7 @@ class SketchesSpec extends AnyFunSuite with StopStreamsAfterAll {
 
   test("hll sketch column is storable and re-aggregable (two-level rollup)") {
     import java.nio.file.Files
-    val out = Files.createTempDirectory("graft-sketch").toString
+    val out = tempDir("graft-sketch").toString
     events.groupBy(col("event_type"), (col("user_id") % 7).as("slice"))
       .agg(hll_build(col("user_id")).as("sk"))
       .write.mode("overwrite").parquet(out)
@@ -242,14 +242,14 @@ class SketchesSpec extends AnyFunSuite with StopStreamsAfterAll {
     import graft.store.{EmbeddedLogStore, LogRecord}
     import java.nio.file.Files
     import org.apache.spark.sql.streaming.Trigger
-    val root = Files.createTempDirectory("graft-sk-stream").toString
+    val root = tempDir("graft-sk-stream").toString
     val store = new EmbeddedLogStore(root)
     store.createStore("proj", "logs", 1)
     // users 0..39 across two segments → several micro-batches with pacing
     store.appendSegment("proj", "logs", 0, "a", (0 until 60).map(i =>
       LogRecord(1700000000 + i, "t", "s", Map.empty,
         Map("uid" -> (i % 40).toString))))
-    val ckpt = Files.createTempDirectory("ckpt").toString
+    val ckpt = tempDir("ckpt").toString
     val q = spark.readStream.format("graft-logstore")
       .option("store.root", root).option("store.project", "proj")
       .option("store.name", "logs")

@@ -9,11 +9,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * graft-logstore, SELECT, INSERT INTO — the reference's relation +
   * InsertableRelation paths (S3/K3) driven through DDL instead of the
   * DataFrame API. */
-class SqlSurfaceSpec extends AnyFunSuite {
+class SqlSurfaceSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
 
   test("CREATE TABLE USING graft-logstore supports SELECT and INSERT INTO") {
-    val root = Files.createTempDirectory("graft-sql").toString
+    val root = tempDir("graft-sql").toString
     val store = new EmbeddedLogStore(root)
     store.createStore("proj", "logs", 2)
     store.appendSegment("proj", "logs", 0, "seed",
@@ -45,7 +45,7 @@ class SqlSurfaceSpec extends AnyFunSuite {
   }
 
   test("aborted writes leave no staged files behind") {
-    val root = Files.createTempDirectory("graft-abort").toString
+    val root = tempDir("graft-abort").toString
     val store = new EmbeddedLogStore(root)
     store.createStore("proj", "logs", 1)
     val staged = store.stageSegment("proj", "logs", 0, "doomed",

@@ -2,19 +2,18 @@ package graft
 
 import graft.connector.{LogContinuousStream, LogMicroBatchStream, LogServiceOffset, LogServiceOptions, RowConverters}
 import graft.store.{EmbeddedLogStore, LogRecord}
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Both streaming sources resolve `startingoffsets` the way a batch scan
   * does: sentinels (-1 latest, -2 earliest) become shard ends and
   * retention starts, and the table's names keep their case. */
-class StartOffsetSpec extends AnyFunSuite {
+class StartOffsetSpec extends AnyFunSuite with TempDirs {
 
   private def rec(t: Int) =
     LogRecord(t, "topic", "src", Map.empty, Map("k" -> s"v$t"))
 
   test("stream initial offsets resolve sentinels and keep the project's case") {
-    val root = Files.createTempDirectory("start-offsets").toString
+    val root = tempDir("start-offsets").toString
     val s = new EmbeddedLogStore(root)
     s.createStore("Proj", "Logs", 2)
     (0 until 3).foreach(i =>

@@ -1,7 +1,6 @@
 package graft
 
 import graft.store.{EmbeddedLogStore, LogRecord}
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.scalatest.funsuite.AnyFunSuite
@@ -13,12 +12,12 @@ case class UserAgg(userId: Long, nEvents: Long, maxTsS: Long)
   * the KeyValueGroupedDataset custom-state path of SURVEY §7.4 /
   * spark_guide. Pacing forces multiple micro-batches so state is
   * actually carried across triggers. */
-class StatefulStreamingSpec extends AnyFunSuite with StopStreamsAfterAll {
+class StatefulStreamingSpec extends AnyFunSuite with StopStreamsAfterAll with TempDirs {
   private lazy val spark = SparkTestSession.spark
 
   test("mapGroupsWithState running per-user aggregates across micro-batches") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft-state").toString
+    val root = tempDir("graft-state").toString
     val store = new EmbeddedLogStore(root)
     store.createStore("proj", "logs", 2)
     // 8 users × 25 events, deliberately appended in 5 segments
@@ -42,7 +41,7 @@ class StatefulStreamingSpec extends AnyFunSuite with StopStreamsAfterAll {
       agg
     }
 
-    val ckpt = Files.createTempDirectory("ckpt").toString
+    val ckpt = tempDir("ckpt").toString
     val q = spark.readStream.format("graft-logstore")
       .option("store.root", root).option("store.project", "proj")
       .option("store.name", "logs")
@@ -73,7 +72,7 @@ class StatefulStreamingSpec extends AnyFunSuite with StopStreamsAfterAll {
   test("transformWithState streaming dedup across micro-batches (RocksDB state)") {
     import graft.streaming.{DedupVerdict, StreamingDedup}
     import spark.implicits._
-    val root = Files.createTempDirectory("graft-tws").toString
+    val root = tempDir("graft-tws").toString
     val store = new EmbeddedLogStore(root)
     store.createStore("proj", "docs", 1) // one shard ⇒ deterministic arrival order
     // 30 docs over 10 distinct texts; first arrival of text k is doc k
@@ -90,7 +89,7 @@ class StatefulStreamingSpec extends AnyFunSuite with StopStreamsAfterAll {
     s2.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     locally {
-      val ckpt = Files.createTempDirectory("ckpt-tws").toString
+      val ckpt = tempDir("ckpt-tws").toString
       val verdicts = StreamingDedup.exact(
         s2.readStream.format("graft-logstore")
           .option("store.root", root).option("store.project", "proj")
@@ -120,7 +119,7 @@ class StatefulStreamingSpec extends AnyFunSuite with StopStreamsAfterAll {
     import graft.streaming.{DedupVerdict, StreamingDedup}
     import org.apache.spark.sql.streaming.TimeMode
     import spark.implicits._
-    val root = Files.createTempDirectory("graft-ttl").toString
+    val root = tempDir("graft-ttl").toString
     val store = new EmbeddedLogStore(root)
     store.createStore("proj", "docs", 1)
     store.appendSegment("proj", "docs", 0, "first",
@@ -130,9 +129,9 @@ class StatefulStreamingSpec extends AnyFunSuite with StopStreamsAfterAll {
     s2.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     locally {
-      val outRoot = Files.createTempDirectory("graft-ttl-out").toString
+      val outRoot = tempDir("graft-ttl-out").toString
       new EmbeddedLogStore(outRoot).createStore("proj", "verdicts", 1)
-      val ckpt = Files.createTempDirectory("ckpt-ttl").toString
+      val ckpt = tempDir("ckpt-ttl").toString
       // logstore sink (memory sink cannot recover a checkpoint).
       //
       // NOT Trigger.AvailableNow: a processing-time-TTL'd stateful
@@ -203,7 +202,7 @@ class StatefulStreamingSpec extends AnyFunSuite with StopStreamsAfterAll {
       "as the watermark passes their deadline (timer re-arm across batches)") {
     import graft.streaming.SessionTimers
     import spark.implicits._
-    val root = Files.createTempDirectory("graft-timers").toString
+    val root = tempDir("graft-timers").toString
     val store = new EmbeddedLogStore(root)
     store.createStore("proj", "ev", 1)
     // user 1: five events 100..104 (one session), then 3000 (a new
@@ -239,7 +238,7 @@ class StatefulStreamingSpec extends AnyFunSuite with StopStreamsAfterAll {
       .writeStream.format("memory").queryName("t_timers")
       .outputMode(OutputMode.Append())
       .option("checkpointLocation",
-        Files.createTempDirectory("ckpt-timers").toString)
+        tempDir("ckpt-timers").toString)
       .trigger(Trigger.AvailableNow()).start()
     awaitDone(q)
     assert(q.recentProgress.count(_.numInputRows > 0) >= 3) // really paced
@@ -259,7 +258,7 @@ class StatefulStreamingSpec extends AnyFunSuite with StopStreamsAfterAll {
     // dropped; once the event-time watermark passes a key's last-seen
     // time its state evicts, and a later duplicate re-admits — the
     // state-size-for-dedup-window trade a 100 TB ingest makes.
-    val root = Files.createTempDirectory("graft-wmdedup").toString
+    val root = tempDir("graft-wmdedup").toString
     val store = new EmbeddedLogStore(root)
     store.createStore("proj", "docs", 1)
     val t0 = 1700000000
@@ -271,9 +270,9 @@ class StatefulStreamingSpec extends AnyFunSuite with StopStreamsAfterAll {
     val s2 = spark.newSession()
     s2.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val outRoot = Files.createTempDirectory("graft-wmdedup-out").toString
+    val outRoot = tempDir("graft-wmdedup-out").toString
     new EmbeddedLogStore(outRoot).createStore("proj", "kept", 1)
-    val ckpt = Files.createTempDirectory("ckpt-wmdedup").toString
+    val ckpt = tempDir("ckpt-wmdedup").toString
     // logstore sink: the run resumes from the checkpoint (memory can't)
     def runOnce(): Unit = {
       val q = s2.readStream.format("graft-logstore")

@@ -1,19 +1,18 @@
 package graft
 
 import graft.store.{EmbeddedLogStore, LogRecord}
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Segment (data-file) compaction — the small-files OPTIMIZE. Contract:
   * ordinals, record order, counts and time bounds are preserved; replay
   * idempotence survives via the checkpoint's absorbed list; readers
   * racing the rewrite re-list and resume exactly. */
-class StoreCompactionSpec extends AnyFunSuite {
+class StoreCompactionSpec extends AnyFunSuite with TempDirs {
 
   private def rec(t: Int) =
     LogRecord(t, "", "", Map.empty, Map("k" -> t.toString))
   private def newStore() = {
-    val root = Files.createTempDirectory("graft-optimize").toString
+    val root = tempDir("graft-optimize").toString
     val s = new EmbeddedLogStore(root)
     s.createStore("proj", "logs", 2)
     s

@@ -4,12 +4,12 @@ import graft.store.{EmbeddedLogStore, LogRecord}
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 
-class StoreManifestSpec extends AnyFunSuite {
+class StoreManifestSpec extends AnyFunSuite with TempDirs {
 
   private def rec(t: Int) =
     LogRecord(t, "", "", Map.empty, Map("k" -> t.toString))
   private def newStore() = {
-    val root = Files.createTempDirectory("graft-manifest").toString
+    val root = tempDir("graft-manifest").toString
     val s = new EmbeddedLogStore(root)
     s.createStore("proj", "logs", 2)
     s
@@ -179,7 +179,7 @@ class StoreManifestSpec extends AnyFunSuite {
   }
 
   test("stale delta below a checkpoint (crash mid-deletion) is ignored, then cleaned") {
-    val root = Files.createTempDirectory("graft-crash").toString
+    val root = tempDir("graft-crash").toString
     val s = new EmbeddedLogStore(root)
     s.createStore("proj", "logs", 2)
     (0 until 5).foreach(i =>

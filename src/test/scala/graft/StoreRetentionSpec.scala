@@ -1,19 +1,18 @@
 package graft
 
 import graft.store.{EmbeddedLogStore, LogRecord}
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Time-based retention (expireSegments): prefix-only expiry, stable
   * surviving ordinals via per-shard bases, earliest resolution, replay
   * memory, and interplay with compaction and streams. */
-class StoreRetentionSpec extends AnyFunSuite with StopStreamsAfterAll {
+class StoreRetentionSpec extends AnyFunSuite with StopStreamsAfterAll with TempDirs {
   private lazy val spark = SparkTestSession.spark
 
   private def rec(t: Int) =
     LogRecord(t, "", "", Map.empty, Map("msg" -> t.toString))
   private def newStore() = {
-    val root = Files.createTempDirectory("graft-retain").toString
+    val root = tempDir("graft-retain").toString
     val s = new EmbeddedLogStore(root)
     s.createStore("proj", "logs", 2)
     (root, s)
@@ -83,7 +82,7 @@ class StoreRetentionSpec extends AnyFunSuite with StopStreamsAfterAll {
     import org.apache.spark.sql.functions._
     assert(df.agg(min(col("msg"))).first().getInt(0) === 1700000002)
     // a stream from earliest drains exactly the live records
-    val ckpt = Files.createTempDirectory("ckpt").toString
+    val ckpt = tempDir("ckpt").toString
     val q = spark.readStream.format("graft-logstore").options(opts)
       .schema("msg INT, __time__ TIMESTAMP").load()
       .writeStream.format("memory").queryName("t_retain")

@@ -10,7 +10,7 @@ import scala.collection.mutable.ArrayBuffer
   * out transient shared-storage failures per the reference client
   * contract (RetryUtil.java:28-73) — bounded exponential backoff,
   * unrecoverable signals passed straight through. */
-class StoreRetrySpec extends AnyFunSuite {
+class StoreRetrySpec extends AnyFunSuite with TempDirs {
 
   private def rec(t: Int) =
     LogRecord(t, "topic", "src", Map.empty, Map("k" -> s"v$t"))
@@ -32,7 +32,7 @@ class StoreRetrySpec extends AnyFunSuite {
   }
 
   test("append and read ride out transient IO failures") {
-    val root = java.nio.file.Files.createTempDirectory("retry-store").toString
+    val root = tempDir("retry-store").toString
     val s = new FlakyStore(root, failures = 5)
     s.createStore("proj", "logs", 1)
     s.arm = true
@@ -43,7 +43,7 @@ class StoreRetrySpec extends AnyFunSuite {
   }
 
   test("read path retries independently of the write path") {
-    val root = java.nio.file.Files.createTempDirectory("retry-store").toString
+    val root = tempDir("retry-store").toString
     val s = new FlakyStore(root, failures = 3)
     s.createStore("proj", "logs", 1)
     s.appendSegment("proj", "logs", 0, "w1", Seq(rec(7)))
@@ -53,7 +53,7 @@ class StoreRetrySpec extends AnyFunSuite {
   }
 
   test("consumer-group offset IO rides out transient IO failures") {
-    val root = java.nio.file.Files.createTempDirectory("retry-store").toString
+    val root = tempDir("retry-store").toString
     val s = new FlakyStore(root, failures = 3)
     s.createStore("proj", "logs", 2)
     s.arm = true
@@ -64,7 +64,7 @@ class StoreRetrySpec extends AnyFunSuite {
   }
 
   test("persistent failure surfaces after bounded retries") {
-    val root = java.nio.file.Files.createTempDirectory("retry-store").toString
+    val root = tempDir("retry-store").toString
     val s = new FlakyStore(root, failures = Int.MaxValue)
     s.createStore("proj", "logs", 1)
     s.arm = true

@@ -1,7 +1,6 @@
 package graft
 
 import graft.store.{EmbeddedLogStore, LogRecord}
-import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -11,10 +10,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * of the reference's LoghubMicroBatchSourceSuite patterns (earliest /
   * latest starts, incremental batches, recovery, admission control, shard
   * split, watermark+window, stream-stream self-join, sink idempotence). */
-class StreamingSpec extends AnyFunSuite with StopStreamsAfterAll {
+class StreamingSpec extends AnyFunSuite with StopStreamsAfterAll with TempDirs {
   private lazy val spark = SparkTestSession.spark
 
-  private def freshRoot(): String = Files.createTempDirectory("graft-ss").toString
+  private def freshRoot(): String = tempDir("graft-ss").toString
 
   private def opts(root: String) = Map("store.root" -> root,
     "store.project" -> "proj", "store.name" -> "logs")
@@ -67,7 +66,7 @@ class StreamingSpec extends AnyFunSuite with StopStreamsAfterAll {
     new EmbeddedLogStore(root).createStore("proj", "logs", 2)
     addData(root, 0, "a", 1 to 5)
     addData(root, 1, "a", 6 to 10)
-    val ckpt = Files.createTempDirectory("ckpt").toString
+    val ckpt = tempDir("ckpt").toString
     val dst = newSink()
     runToSink(streamDf(root), dst, ckpt)
     assert(sinkTable(dst).count() === 10)
@@ -87,7 +86,7 @@ class StreamingSpec extends AnyFunSuite with StopStreamsAfterAll {
     val s = new EmbeddedLogStore(root)
     s.createStore("proj", "logs", 2)
     (0 until 6).foreach(i => addData(root, i % 2, s"seg$i", Seq(i)))
-    val ckpt = Files.createTempDirectory("ckpt").toString
+    val ckpt = tempDir("ckpt").toString
     val dst = newSink()
     // pace to leave offsets mid-backlog at the first stop
     runToSink(streamDf(root, Map("maxoffsetspertrigger" -> "2")), dst, ckpt)
@@ -109,7 +108,7 @@ class StreamingSpec extends AnyFunSuite with StopStreamsAfterAll {
     new EmbeddedLogStore(root).createStore("proj", "logs", 2)
     addData(root, 0, "a", 1 to 20)
     addData(root, 1, "b", 21 to 40)
-    val ckpt = Files.createTempDirectory("ckpt").toString
+    val ckpt = tempDir("ckpt").toString
     val dst = newSink()
     // 2 records per trigger → ~20 epochs → ~20+ tiny sink segments
     // without maintenance; the threshold folds them as they accumulate
@@ -127,7 +126,7 @@ class StreamingSpec extends AnyFunSuite with StopStreamsAfterAll {
     val root = freshRoot()
     new EmbeddedLogStore(root).createStore("proj", "logs", 2)
     addData(root, 0, "old", 1 to 5)
-    val ckpt = Files.createTempDirectory("ckpt").toString
+    val ckpt = tempDir("ckpt").toString
     val dst = newSink()
     runToSink(streamDf(root, Map("startingoffsets" -> "latest")), dst, ckpt)
     assert(sinkTable(dst).count() === 0)
@@ -141,7 +140,7 @@ class StreamingSpec extends AnyFunSuite with StopStreamsAfterAll {
     new EmbeddedLogStore(root).createStore("proj", "logs", 2)
     addData(root, 0, "a", 1 to 50)
     addData(root, 1, "a", 51 to 100)
-    val ckpt = Files.createTempDirectory("ckpt").toString
+    val ckpt = tempDir("ckpt").toString
     val q = streamDf(root, Map("maxoffsetspertrigger" -> "20"))
       .writeStream.format("memory").queryName("t_paced")
       .option("checkpointLocation", ckpt)
@@ -158,7 +157,7 @@ class StreamingSpec extends AnyFunSuite with StopStreamsAfterAll {
     val root = freshRoot()
     new EmbeddedLogStore(root).createStore("proj", "logs", 2)
     addData(root, 0, "a", 1 to 10)
-    val ckpt = Files.createTempDirectory("ckpt").toString
+    val ckpt = tempDir("ckpt").toString
     runToMemory(streamDf(root,
       Map("maxoffsetspertrigger" -> Long.MaxValue.toString)), "t_big", ckpt)
     assert(spark.table("t_big").count() === 10)
@@ -170,7 +169,7 @@ class StreamingSpec extends AnyFunSuite with StopStreamsAfterAll {
     store.createStore("proj", "logs", 2)
     addData(root, 0, "a", 1 to 4)
     addData(root, 1, "a", 5 to 8)
-    val ckpt = Files.createTempDirectory("ckpt").toString
+    val ckpt = tempDir("ckpt").toString
     val dst = newSink()
     runToSink(streamDf(root), dst, ckpt)
     assert(sinkTable(dst).count() === 8)
@@ -187,7 +186,7 @@ class StreamingSpec extends AnyFunSuite with StopStreamsAfterAll {
     new EmbeddedLogStore(root).createStore("proj", "logs", 1)
     // two 5-second windows: values 0..4 and 10..14 seconds
     addData(root, 0, "a", Seq(0, 1, 2, 10, 11))
-    val ckpt = Files.createTempDirectory("ckpt").toString
+    val ckpt = tempDir("ckpt").toString
     val agg = streamDf(root)
       .withWatermark("__time__", "10 seconds")
       .groupBy(window(col("__time__"), "5 seconds"))
@@ -203,7 +202,7 @@ class StreamingSpec extends AnyFunSuite with StopStreamsAfterAll {
     val root = freshRoot()
     new EmbeddedLogStore(root).createStore("proj", "logs", 2)
     addData(root, 0, "a", 1 to 6)
-    val ckpt = Files.createTempDirectory("ckpt").toString
+    val ckpt = tempDir("ckpt").toString
     val base = streamDf(root)
       .selectExpr("msg AS value", "msg % 3 AS key", "__time__")
     val joined = base.select("key", "value")
@@ -223,7 +222,7 @@ class StreamingSpec extends AnyFunSuite with StopStreamsAfterAll {
       .selectExpr("CAST(user_id % 2 AS INT) AS __shard__",
         "CAST(CAST(ts AS TIMESTAMP) AS INT) AS __time__", "event_type", "value")
     ev.write.format("graft-logstore").options(opts(root)).mode("append").save()
-    val ckpt = Files.createTempDirectory("ckpt").toString
+    val ckpt = tempDir("ckpt").toString
     val agg = spark.readStream.format("graft-logstore").options(opts(root))
       .option("maxoffsetspertrigger", "200")
       .schema("event_type STRING, value DOUBLE, __time__ TIMESTAMP").load()
@@ -246,7 +245,7 @@ class StreamingSpec extends AnyFunSuite with StopStreamsAfterAll {
     // same msg ids appended twice within the watermark horizon
     addData(root, 0, "a", Seq(1, 2, 3))
     addData(root, 0, "b", Seq(2, 3, 4))
-    val ckpt = Files.createTempDirectory("ckpt").toString
+    val ckpt = tempDir("ckpt").toString
     val deduped = streamDf(root)
       .withWatermark("__time__", "1 hour")
       .dropDuplicatesWithinWatermark("msg")
@@ -264,7 +263,7 @@ class StreamingSpec extends AnyFunSuite with StopStreamsAfterAll {
     new EmbeddedLogStore(srcRoot).createStore("proj", "logs", 1)
     new EmbeddedLogStore(dstRoot).createStore("proj", "out", 1)
     addData(srcRoot, 0, "a", Seq(1, 2, 3, 11, 12, 21)) // keys msg%10
-    val ckpt = Files.createTempDirectory("ckpt").toString
+    val ckpt = tempDir("ckpt").toString
     val q = streamDf(srcRoot, Map("maxoffsetspertrigger" -> "2")) // several epochs
       .selectExpr("msg % 10 AS key")
       .groupBy("key").count()
@@ -312,7 +311,7 @@ class StreamingSpec extends AnyFunSuite with StopStreamsAfterAll {
       LogRecord(1700000000 + dt, "t", "s", Map.empty,
         Map("uid" -> u.toString, "etype" -> ty))
     })
-    val ckpt = Files.createTempDirectory("ckpt").toString
+    val ckpt = tempDir("ckpt").toString
     val src = spark.readStream.format("graft-logstore").options(opts(root))
       .schema("uid INT, etype STRING, __time__ TIMESTAMP").load()
     val views = src.filter(col("etype") === "view")
@@ -345,7 +344,7 @@ class StreamingSpec extends AnyFunSuite with StopStreamsAfterAll {
     val srcRoot = freshRoot(); val dstRoot = freshRoot()
     new EmbeddedLogStore(srcRoot).createStore("proj", "logs", 1)
     new EmbeddedLogStore(dstRoot).createStore("proj", "out", 1)
-    val ckpt = Files.createTempDirectory("ckpt").toString
+    val ckpt = tempDir("ckpt").toString
     def run(): Unit = {
       val agg = streamDf(srcRoot)
         .withWatermark("__time__", "10 seconds")
@@ -384,7 +383,7 @@ class StreamingSpec extends AnyFunSuite with StopStreamsAfterAll {
     new EmbeddedLogStore(srcRoot).createStore("proj", "logs", 1)
     new EmbeddedLogStore(dstRoot).createStore("proj", "out", 2)
     addData(srcRoot, 0, "a", 1 to 9)
-    val ckpt = Files.createTempDirectory("ckpt").toString
+    val ckpt = tempDir("ckpt").toString
     def writeOnce(): Unit = {
       val q = spark.readStream.format("graft-logstore").options(opts(srcRoot))
         .schema("msg INT, __time__ TIMESTAMP").load()
@@ -404,7 +403,7 @@ class StreamingSpec extends AnyFunSuite with StopStreamsAfterAll {
     // replaying the identical epoch (fresh query, same segments) can't dup:
     // simulate a replay by re-running with a WIPED checkpoint — epochs
     // restart at 0 and overwrite the same segment names
-    val ckpt2 = Files.createTempDirectory("ckpt").toString
+    val ckpt2 = tempDir("ckpt").toString
     val q2 = spark.readStream.format("graft-logstore").options(opts(srcRoot))
       .schema("msg INT, __time__ TIMESTAMP").load()
       .selectExpr("msg", "__time__")

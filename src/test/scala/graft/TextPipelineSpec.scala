@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Edge-case coverage for the text-pipeline operators whose main-line
   * behavior is pinned by the t10/t11 DuckDB oracles. */
-class TextPipelineSpec extends AnyFunSuite {
+class TextPipelineSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
 
   test("redactPii: emails before IPs, multiple spans, puncutation-adjacent") {
@@ -209,7 +209,7 @@ class TextPipelineSpec extends AnyFunSuite {
 
   test("rouge overlap: identical pair scores 1, clipping caps repetition, disjoint is 0") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-rouge-docs")
+    val tmp = tempDir("graft-rouge-docs")
     tmp.toFile.deleteOnExit()
     Seq(
       (0L, "a b c a"), (1L, "a b c a"), // identical candidate/reference
@@ -314,7 +314,7 @@ class TextPipelineSpec extends AnyFunSuite {
       .count() === 0)
     // exact multiple of the window: no empty trailing chunk
     val exact128 = Seq((1L, (("tok " * 128).trim))).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("t13").toString
+    val dir = tempDir("t13").toString
     exact128.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val chunks = SparkEntry.queries("t13_token_chunks")(spark, dir).collect()
     assert(chunks.length === 2 && chunks.forall(_.getLong(4) === 64L))
@@ -422,7 +422,7 @@ class TextPipelineSpec extends AnyFunSuite {
       (5L, "x", "de", "B", 5L), (6L, "x y", "de", "B", 7L),
       (7L, "x y z", "de", "B", 9L)
     ).toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("t18").toString
+    val dir = tempDir("t18").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = SparkEntry.queries("t18_source_mix")(spark, dir)
       .collect().map(r => (r.getString(0), r.getString(1),
@@ -444,7 +444,7 @@ class TextPipelineSpec extends AnyFunSuite {
       (10L, "one two three four five six seven eight nine ten", "en", "s", 0L),
       (11L, "one two three four five six seven eight nine ten", "en", "s", 0L)
     ).toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("p3").toString
+    val dir = tempDir("p3").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = SparkEntry.queries("p3_dedup_keeper")(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
@@ -487,7 +487,7 @@ class TextPipelineSpec extends AnyFunSuite {
       (2L, "a b c", "en", "s", 5L),
       (3L, "z z z", "en", "s", 5L)
     ).toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("t19").toString
+    val dir = tempDir("t19").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = SparkEntry.queries("t19_bigram_mass")(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))

@@ -1,6 +1,6 @@
 package graft.store
 
-import java.nio.file.Files
+import graft.TempDirs
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Differential model test: drive the store through randomized (but
@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * covers the PROTOCOL under op interleavings a single writer can
   * produce: splits, compactions, vacuum, abandoned staging, idempotent
   * replays, in any order. */
-class StoreModelSpec extends AnyFunSuite {
+class StoreModelSpec extends AnyFunSuite with TempDirs {
 
   private def randomRecord(rnd: scala.util.Random, t: Int): LogRecord = {
     // exercise the serializer: quotes, backslashes, newlines, unicode
@@ -26,7 +26,7 @@ class StoreModelSpec extends AnyFunSuite {
   test("randomized op sequences match the in-memory model at every step") {
     val rnd = new scala.util.Random(42)
     for (trial <- 1 to 3) {
-      val root = Files.createTempDirectory(s"store-model-$trial").toString
+      val root = tempDir(s"store-model-$trial").toString
       val store = new EmbeddedLogStore(root)
       store.createStore("p", "s", 2)
       // model: per shard, the committed records in commit order, plus

@@ -1,5 +1,6 @@
 package graft.store
 
+import graft.TempDirs
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 import java.util.concurrent.locks.LockSupport
@@ -8,12 +9,12 @@ import scala.jdk.CollectionConverters._
 
 /** One manifest fold per operation, and metadata that a concurrent
   * reader never sees half-written. */
-class StoreSnapshotSpec extends AnyFunSuite {
+class StoreSnapshotSpec extends AnyFunSuite with TempDirs {
 
   private def rec(t: Int) =
     LogRecord(t, "topic", "src", Map.empty, Map("k" -> s"v$t"))
 
-  private def newRoot() = Files.createTempDirectory("snapshot-store").toString
+  private def newRoot() = tempDir("snapshot-store").toString
 
   private val ReadPauseNanos = 50000L
   private val MinReads = 100
@@ -103,8 +104,24 @@ class StoreSnapshotSpec extends AnyFunSuite {
     assert(snap.shard(0).clip(2, 3).map(_.logicalName) === Seq("c"))
     assert(snap.shard(0).segments.map(_.base).toArray sameElements
       s.snapshot("proj", "logs").shard(0).segments.map(_.base))
-    assert(snap.committedFile(0, "c") === Some(snap.shard(0).segments(1).fileName))
-    assert(snap.committedFile(1, "c") === None)
+    assert(snap.committedFiles(Seq((0, "c"), (1, "c"))) ===
+      Map((0, "c") -> snap.shard(0).segments(1).fileName))
+  }
+
+  test("committedFiles resolves many segments at once as it resolves each alone") {
+    val s = new EmbeddedLogStore(newRoot())
+    s.createStore("proj", "logs", 2)
+    // "a" is a prefix of "a-b" at the name level: the lookup must not confuse them
+    Seq((0, "a"), (0, "a-b"), (1, "a"), (1, "x"), (0, "x")).foreach { case (sh, n) =>
+      s.appendSegment("proj", "logs", sh, n, Seq(rec(sh * 10 + n.length)))
+    }
+    s.compactSegments("proj", "logs", targetRecords = 2) // shard 1's become absorbed
+    val snap = s.snapshot("proj", "logs")
+    val asked = for (sh <- 0 to 2; n <- Seq("a", "a-b", "x", "y")) yield (sh, n)
+    val want = asked.flatMap(k => snap.committedFiles(Seq(k))).toMap
+    assert(snap.committedFiles(asked ++ asked) === want)
+    assert(want.keySet === Set((0, "a"), (0, "a-b"), (0, "x"), (1, "a"), (1, "x")))
+    assert(want((0, "a")) !== want((0, "a-b")))
   }
 
   /** Replacing a file by rename makes ext4 write the new file's data out
@@ -115,20 +132,13 @@ class StoreSnapshotSpec extends AnyFunSuite {
   private def memoryRoot(): java.nio.file.Path = {
     val shm = java.nio.file.Paths.get("/dev/shm")
     if (Files.isDirectory(shm) && Files.isWritable(shm))
-      Files.createTempDirectory(shm, "snapshot-store")
-    else Files.createTempDirectory("snapshot-store")
-  }
-
-  private def deleteTree(dir: java.nio.file.Path): Unit = {
-    val walk = Files.walk(dir)
-    try walk.sorted(java.util.Comparator.reverseOrder()).iterator().asScala
-      .foreach(Files.deleteIfExists(_))
-    finally walk.close()
+      tempDir(shm, "snapshot-store")
+    else tempDir("snapshot-store")
   }
 
   test("rewritten metadata is never read torn") {
     val dir = memoryRoot()
-    try tornReads(dir.toString) finally deleteTree(dir)
+    try tornReads(dir.toString) finally TempDirs.deleteTree(dir) // free the memory now
   }
 
   private def tornReads(root: String): Unit = {

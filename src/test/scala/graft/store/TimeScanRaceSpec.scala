@@ -1,16 +1,16 @@
 package graft.store
 
-import java.nio.file.Files
+import graft.TempDirs
 import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The time lookups read segment files from a listing that a racing
   * segment compaction may delete under them; they must heal and still
   * give the exact answer. */
-class TimeScanRaceSpec extends AnyFunSuite {
+class TimeScanRaceSpec extends AnyFunSuite with TempDirs {
 
   test("cursorAtTime and countInTimeRange stay exact while compactSegments rewrites the shard") {
-    val root = Files.createTempDirectory("timescan-race").toString
+    val root = tempDir("timescan-race").toString
     val s = new EmbeddedLogStore(root)
     s.createStore("proj", "logs", 1)
     val t0 = 1000
