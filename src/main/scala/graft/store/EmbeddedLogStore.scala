@@ -107,15 +107,18 @@ final class StoreSnapshot private[store] (
     * one, in one walk over the committed entries: a writer task stages
     * many segments against a snapshot of many entries. */
   def committedFiles(names: Seq[(Int, String)]): Map[(Int, String), String] = {
-    val wanted = names.distinct.groupMap(_._1)(n => (n._2, n._2 + "-"))
-    val found = mutable.Map[(Int, String), String]()
+    val wanted = names.distinct.toArray
+    val prefixes = wanted.map(_._2 + "-")
+    val found = new Array[String](wanted.length) // the first match wins
     (entries.iterator ++ absorbed).foreach { case (s, f) =>
-      wanted.get(s).foreach(_.foreach { case (name, prefix) =>
-        if (f.startsWith(prefix) && !found.contains((s, name)) &&
-          Segment.parse(f).logicalName == name) found((s, name)) = f
-      })
+      var j = 0
+      while (j < wanted.length) {
+        if (found(j) == null && s == wanted(j)._1 && f.startsWith(prefixes(j)) &&
+          Segment.parse(f).logicalName == wanted(j)._2) found(j) = f
+        j += 1
+      }
     }
-    found.toMap
+    wanted.indices.filter(found(_) != null).map(j => wanted(j) -> found(j)).toMap
   }
 }
 
