@@ -437,7 +437,7 @@ class LogScan(schema: StructType, opts: LogServiceOptions,
     requireLiveLog()
     new LogContinuousStream(schema, opts)
   }
-  /** A stream reads the whole live log. The builder hands a pushed time
+  /** A stream reads the whole live log. [[LogScanBuilder]] hands a pushed time
     * range's exact filters to the scan instead of to Spark, so a stream
     * that ignored one would return rows outside it. */
   private def requireLiveLog(): Unit = {

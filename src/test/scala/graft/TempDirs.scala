@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Path}
 
-/** Temp directories (stores, checkpoints, scratch output) that are
+/** Temp directories (stores, checkpoints, other output) that are
   * deleted with everything under them once the suite that made them
   * ends, after any streams the suite left running have stopped. */
 trait TempDirs extends org.scalatest.BeforeAndAfterAll {
