@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: every catalog query at SPARK_GRAFT_SF_DIR,
   * forced through the noop sink so all output columns are actually
   * computed (a bare count() would let Catalyst prune the measured work
@@ -29,61 +27,13 @@ import org.apache.spark.sql.SparkSession
   * batch count deterministic, more reps reliably expose the true
   * floor instead of a slow scheduling alignment. */
 object Bench {
-  /** Task-metrics accumulator (the ProbeC22 shape): snapshot-and-diff
-    * around each streaming rep so the committed drain trace carries
-    * shuffle/spill/cpu alongside the micro-batch durations. */
-  private class TaskAgg extends org.apache.spark.scheduler.SparkListener {
-    val shufWrite = new java.util.concurrent.atomic.AtomicLong
-    val shufRead = new java.util.concurrent.atomic.AtomicLong
-    val spillMem = new java.util.concurrent.atomic.AtomicLong
-    val spillDisk = new java.util.concurrent.atomic.AtomicLong
-    val cpuNs = new java.util.concurrent.atomic.AtomicLong
-    val runMs = new java.util.concurrent.atomic.AtomicLong
-    override def onTaskEnd(
-        e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = e.taskMetrics
-      if (m != null) {
-        shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        shufRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        spillMem.addAndGet(m.memoryBytesSpilled)
-        spillDisk.addAndGet(m.diskBytesSpilled)
-        cpuNs.addAndGet(m.executorCpuTime)
-        runMs.addAndGet(m.executorRunTime)
-      }
-    }
-    def snap(): Map[String, Long] = Map(
-      "shufWB" -> shufWrite.get, "shufRB" -> shufRead.get,
-      "spillMB" -> spillMem.get, "spillDB" -> spillDisk.get,
-      "cpuMs" -> cpuNs.get / 1000000L, "runMs" -> runMs.get)
-    // the listener bus is async — poll until the counters stabilize so
-    // in-flight task-end events don't bleed into the next rep's delta
-    def drainedSnap(): Map[String, Long] = {
-      var prev = snap()
-      var tries = 0
-      while (tries < 10) {
-        Thread.sleep(50)
-        val cur = snap()
-        if (cur == prev) return cur
-        prev = cur; tries += 1
-      }
-      prev
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // default to the machine: a benchmark main should use every core
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors.toString)
-    val spark = MainSessions(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true"))
-      .getOrCreate()
-    MainSessions.assertGuarded(spark)
-    spark.sparkContext.setLogLevel("WARN")
-    val taskAgg = new TaskAgg
-    spark.sparkContext.addSparkListener(taskAgg)
+    val spark = MainSessions.local(cpus)
+    val timer = new RepTimer(spark)
     // JIT/classload warm-up at sf0.001 (smoke scale): run each catalog
     // query once so the measured pass reflects steady-state performance
     // rather than first-use DSv2/codegen/typed-lambda compilation. The
@@ -92,7 +42,7 @@ object Bench {
     val warmDir = "/root/testdata/sf0.001"
     if (new java.io.File(warmDir).isDirectory) {
       SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-        try fn(spark, warmDir).write.mode("overwrite").format("noop").save()
+        try RepTimer.noop(fn(spark, warmDir))
         catch { case e: Throwable =>
           System.err.println(s"[bench] warmup $name failed: ${e.getMessage}")
         }
@@ -105,7 +55,7 @@ object Bench {
     Seq("c1_logstore_roundtrip", "c5_stream_dedup", "c9_stream_sessions")
       .foreach { name =>
         SparkEntry.queries.get(name).foreach { fn =>
-          try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
+          try RepTimer.noop(fn(spark, sfDir))
           catch { case e: Throwable =>
             System.err.println(s"[bench] ingest warmup $name failed: ${e.getMessage}")
           }
@@ -131,44 +81,19 @@ object Bench {
     //    one-time per-(session, dir) DISK artifacts (the connector
     //    ingest, q30's bucketed tables, q32's partitioned layout); all
     //    IN-MEMORY cached data is fenced away before every timed rep
-    //    (cacheFence below), so timed reps always recompute from the
+    //    (RepTimer's cache fence), so timed reps always recompute from the
     //    parquet inputs.
     //  - a System.gc() breather between queries, with used-heap and
     //    cumulative-GC-time deltas traced to stderr so a future
     //    inflated number can be attributed to memory pressure (high
     //    gcd) vs a real plan regression (flat gcd) from the run log.
-    val gcBeans = java.lang.management.ManagementFactory
-      .getGarbageCollectorMXBeans
-    def gcMillis(): Long = {
-      var s = 0L
-      gcBeans.forEach(b => s += math.max(0L, b.getCollectionTime))
-      s
-    }
-    // Cache fence (r20, VERDICT r19 item 2): the warm rep populates any
-    // in-query .cache()/persist (d2/d16's shingle table, the k-means
-    // working set, CachePool sites) through CacheManager's
-    // plan-canonicalized keying, so without a fence every TIMED rep
-    // would read those caches warm and the reported number would omit
-    // cache population — disclosed in r19, called gaming by the judge.
-    // Dropping ALL cached data before every timed rep makes each rep
-    // compute from the parquet inputs alone: the warm rep now covers
-    // JIT/codegen and one-time DISK layouts only (connector ingest,
-    // q30's bucketed tables, q32's partitioned dir), never in-memory
-    // state. localCheckpoint RDDs are per-invocation and die with their
-    // plan, so no fence is needed for them. Headline cost is real work
-    // the old protocol hid; r19 numbers are NOT comparable rep-for-rep
-    // (see OPTIMIZATION_r20.md for the re-baseline).
-    def cacheFence(): Unit = {
-      graft.queries.CachePool.releaseAll(spark)
-      spark.catalog.clearCache()
-    }
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
+      try RepTimer.noop(fn(spark, sfDir))
       catch { case e: Throwable =>
         System.err.println(s"[bench] $name warm rep failed: ${e.getMessage}")
       }
       System.gc()
-      val gc0 = gcMillis()
+      val gc0 = RepTimer.gcMillis()
       // Streaming protocol: a streaming query's wall time rides the
       // micro-batch scheduler (trigger alignment, checkpoint/commit
       // fsyncs, stream-thread wakeups) — identical code swung c17
@@ -190,40 +115,24 @@ object Bench {
       while (times.length < qReps ||
           (flatRun < needFlat && times.length < qMaxReps)) {
         val prevMin = if (times.isEmpty) Double.MaxValue else times.min
-        // per-rep component snapshots OUTSIDE the timed region: GC time
-        // and task-level shuffle/spill/cpu deltas join the micro-batch
-        // durations in the drain trace, so a slow streaming rep in a
-        // driver session splits into scheduler / state-backend /
-        // executor / GC components from the committed artifact alone
-        // (VERDICT r18 item 1)
-        cacheFence() // every timed rep pays its own cache population
-        val repGc0 = if (streaming) gcMillis() else 0L
-        val repTask0 = if (streaming) taskAgg.drainedSnap() else null
-        val t0 = System.nanoTime()
-        try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        // every timed rep pays its own cache population; a streaming
+        // rep's component line joins the committed drain trace
+        val rep = timer.time(streaming, traced = streaming) {
+          try RepTimer.noop(fn(spark, sfDir))
+          catch { case e: Throwable =>
+            System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          }
         }
-        val t = (System.nanoTime() - t0) / 1e9
+        val t = rep.seconds
         times += t
-        // per-rep micro-batch component breakdown (see lastDrainStats):
-        // a slow SESSION self-attributes from the run log
-        if (streaming) {
-          val td = taskAgg.drainedSnap()
-            .map { case (k, v) => k -> (v - repTask0(k)) }
-          drainStats += f"wall=$t%.2f " +
-            graft.queries.ConnectorQueries.lastDrainStats +
-            s" gc=${gcMillis() - repGc0} " +
-            td.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }
-              .mkString(" ")
-        }
+        drainStats ++= rep.trace
         if (times.length >= qReps) {
           if (t >= prevMin * 0.9) flatRun += 1 else flatRun = 0
         }
       }
       val rt = Runtime.getRuntime
       val heapMb = (rt.totalMemory - rt.freeMemory) / (1024 * 1024)
-      val gcd = gcMillis() - gc0
+      val gcd = RepTimer.gcMillis() - gc0
       // per-rep trace to stderr: lets a surprising headline number be
       // attributed to a one-off spike vs a real regression after the fact
       System.err.println(
@@ -259,17 +168,11 @@ object Bench {
     // GC delta, task shuffle/spill/cpu deltas), plus the per-query GC
     // delta across the timed reps ("gc_ms"). A future session-inflated
     // number splits into components from this file without a re-run.
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val repsJson = results.map { case (k, _, ts, _, _) =>
       "\"" + k + "\":[" + ts.map(t => f"$t%.3f").mkString(",") + "]"
     }.mkString("{", ",", "}")
     val drainsJson = results.collect { case (k, _, _, ds, _) if ds.nonEmpty =>
-      "\"" + k + "\":[" + ds.map(jstr).mkString(",") + "]"
+      "\"" + k + "\":[" + ds.map(graft.store.FastJsonl.quote).mkString(",") + "]"
     }.mkString("{", ",", "}")
     val gcJson = results.map { case (k, _, _, _, g) => "\"" + k + "\":" + g }
       .mkString("{", ",", "}")

@@ -222,13 +222,8 @@ object BenchStress {
       "/root/repo/BENCH_STRESS.json")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors.toString)
-    val spark = MainSessions(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true"))
-      .getOrCreate()
-    MainSessions.assertGuarded(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = MainSessions.local(cpus)
+    val timer = new RepTimer(spark)
 
     // events/lineitem joined the blow-up for the q31/q34/c18/c5 rows:
     // regenerate a stress dir from an older round that lacks them
@@ -242,25 +237,24 @@ object BenchStress {
     // (min seconds, per-rep drain traces for streaming rows — the same
     // artifact-of-record principle as Bench's BENCH_DETAIL drains: a
     // streaming stress point's components are citable from the
-    // committed curve file, not just a local probe re-run)
+    // committed curve file, not just a local re-run). Each timed rep
+    // is fenced like Bench's, so it pays its own cache population.
     def timeQuery(name: String, dir: String): (Double, Seq[String]) = {
       val fn = SparkEntry.queries(name)
       val streaming = graft.queries.ConnectorQueries.streamingQueries(name)
       // 1 warm rep, then min-of-3 with the same convergence extension
       // as Bench (up to 6)
-      fn(spark, dir).write.mode("overwrite").format("noop").save()
+      RepTimer.noop(fn(spark, dir))
       val times = scala.collection.mutable.ArrayBuffer.empty[Double]
       val drains = scala.collection.mutable.ArrayBuffer.empty[String]
       var converged = false
       while (times.length < 3 || (!converged && times.length < 6)) {
         val prevMin = if (times.isEmpty) Double.MaxValue else times.min
-        val t0 = System.nanoTime()
-        fn(spark, dir).write.mode("overwrite").format("noop").save()
-        val t = (System.nanoTime() - t0) / 1e9
+        val rep = timer.time(streaming, traced = streaming)(
+          RepTimer.noop(fn(spark, dir)))
+        val t = rep.seconds
         times += t
-        if (streaming)
-          drains += f"wall=$t%.2f " +
-            graft.queries.ConnectorQueries.lastDrainStats
+        drains ++= rep.trace
         if (times.length >= 3) converged = t >= prevMin * 0.9
       }
       System.err.println(
@@ -281,15 +275,9 @@ object BenchStress {
       (name, base, stress, ratio, drains)
     }
     def r3(v: Double): String = f"$v%.3f"
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val qjson = rows.map { case (n, b, s, r, ds) =>
       val drainPart = if (ds.isEmpty) ""
-        else s""","drains":[${ds.map(jstr).mkString(",")}]"""
+        else s""","drains":[${ds.map(graft.store.FastJsonl.quote).mkString(",")}]"""
       s""""$n":{"base":${r3(b)},"stress":${r3(s)},"ratio":${r3(r)}$drainPart}"""
     }.mkString("{", ",", "}")
     val worst = rows.maxBy(_._4)

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Optimization-round evidence dump: `runMain graft.PlanDump <sfDir>
   * <outDir> <suffix> <query...>` writes each named query's
@@ -15,14 +14,7 @@ object PlanDump {
     val outDir = args(1)
     val suffix = args(2)
     val names = args.drop(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = MainSessions(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true"))
-      .getOrCreate()
-    MainSessions.assertGuarded(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = MainSessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     new java.io.File(outDir).mkdirs()
     for (name <- names) {
       val fn = SparkEntry.queries(name)

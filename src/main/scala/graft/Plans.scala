@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Plan audit: `runMain graft.Plans <sfDir> <out.md>` writes a per-query
   * summary of the optimized physical plan — scan pushdown, join
@@ -11,13 +10,7 @@ object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
     val out = if (args.length > 1) args(1) else "PLANS.md"
-    val spark = MainSessions(SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true"))
-      .getOrCreate()
-    MainSessions.assertGuarded(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = MainSessions.local("4")
     val sb = new StringBuilder
     sb.append("# PLANS — physical-plan audit (generated by `graft.Plans`)\n\n")
     sb.append(s"Source: `$sfDir`. Per query: join strategies, shuffle\n")

@@ -4,7 +4,7 @@ import graft.store.{EmbeddedLogStore, LogRecord}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
-import org.apache.spark.sql.types.{StructType, TimestampType}
+import org.apache.spark.sql.types.StructType
 import scala.collection.mutable
 
 /** Write path (re-expression of K1-K6, SURVEY.md §2.2): rows are
@@ -25,8 +25,9 @@ import scala.collection.mutable
   *  - Shard routing: `__shard__` column if present, else
   *    hash(partitionId) round-robin over writable shards (the writer-API
   *    hash-key routing of K6 maps to repartitioning before the write).
-  *  - A `__time__` TimestampType/epoch column feeds the record time;
-  *    otherwise wall-free deterministic 0 (tests always set it).
+  *  - A `__time__` column feeds the record time, converted one exact
+  *    way ([[RowConverters.timeSeconds]]); otherwise wall-free
+  *    deterministic 0 (tests always set it).
   */
 /** SupportsStreamingUpdateAsAppend: Update-mode aggregation rows are
   * appended like any record (the log keeps the update history; latest
@@ -154,11 +155,7 @@ class LogDataWriter(schema: StructType, opts: LogServiceOptions,
                 s"${opts.project}#${opts.store} " +
                 s"(writable: ${writableShards.sorted.mkString(",")})")
           case RowConverters.Time =>
-            val v = row.get(i, f.dataType).toString
-            time = f.dataType match {
-              case TimestampType => (v.toLong / 1000000L).toInt // micros → s
-              case _ => v.toDouble.toInt
-            }
+            time = RowConverters.timeSeconds(f.dataType, row, i)
           case RowConverters.Topic => topic = row.get(i, f.dataType).toString
           case RowConverters.Source => source = row.get(i, f.dataType).toString
           case name =>

@@ -1,6 +1,6 @@
 package graft.connector
 
-import graft.store.LogRecord
+import graft.store.{FastJsonl, LogRecord}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
@@ -71,6 +71,46 @@ object RowConverters {
         s"unsupported write type $dt for the flat string wire model")
     case _ => v.toString
   }
+
+  /** The record second a written `__time__` value stands for, read from
+    * its typed value: integral numbers as seconds, TIMESTAMP micros,
+    * fractional numbers and numeric STRINGs floored. A value outside
+    * [0, Int.MaxValue], a non-numeric STRING or any other type fails the
+    * write: a clamped or wrapped second would file the record at a time
+    * no reader can tell from a real one. */
+  def timeSeconds(dt: DataType, row: InternalRow, i: Int): Int = {
+    def fail(why: String): Nothing = throw new IllegalArgumentException(
+      s"$Time of type ${dt.simpleString} $why: ${row.get(i, dt)}")
+    def outside: Nothing = fail(s"is outside the record seconds [0, ${Int.MaxValue}]")
+    def second(s: Long): Int = if (s < 0 || s > Int.MaxValue) outside else s.toInt
+    def floorDouble(d: Double): Int =
+      if (d.isNaN || d < 0 || d >= Int.MaxValue + 1.0) outside
+      else math.floor(d).toInt
+    // range first, so the floor's rescale is bounded by the value's own
+    // digits; scale > precision means a value below 1
+    def floorDecimal(d: java.math.BigDecimal): Int =
+      if (d.signum < 0 || d.compareTo(MaxSecondExclusive) >= 0) outside
+      else if (d.scale > d.precision) 0
+      else d.setScale(0, java.math.RoundingMode.FLOOR).intValueExact
+    dt match {
+      case ByteType => second(row.getByte(i))
+      case ShortType => second(row.getShort(i))
+      case IntegerType => second(row.getInt(i))
+      case LongType => second(row.getLong(i))
+      case TimestampType => second(Math.floorDiv(row.getLong(i), 1000000L))
+      case FloatType => floorDouble(row.getFloat(i))
+      case DoubleType => floorDouble(row.getDouble(i))
+      case d: DecimalType =>
+        floorDecimal(row.getDecimal(i, d.precision, d.scale).toJavaBigDecimal)
+      case StringType =>
+        val d = try new java.math.BigDecimal(row.getUTF8String(i).toString.trim)
+          catch { case _: NumberFormatException => fail("is not a number") }
+        floorDecimal(d)
+      case _ => fail("is not a record time type (integral, fractional, TIMESTAMP or numeric STRING)")
+    }
+  }
+
+  private val MaxSecondExclusive = java.math.BigDecimal.valueOf(Int.MaxValue.toLong + 1)
 
   /** Metadata column names — reference constants,
     * LoghubSourceProvider.scala:255-262. */
@@ -154,28 +194,10 @@ object RowConverters {
     def put(k: String, v: String): Unit = {
       if (!first) sb.append(',')
       first = false
-      appendJsonStr(sb, k); sb.append(':'); appendJsonStr(sb, v)
+      FastJsonl.appendString(sb, k); sb.append(':'); FastJsonl.appendString(sb, v)
     }
     r.contents.toSeq.sortBy(_._1).foreach { case (k, v) => put(k, v) }
     r.tags.toSeq.sortBy(_._1).foreach { case (k, v) => put(TagPrefix + k, v) }
     sb.append('}').toString
-  }
-
-  private[connector] def appendJsonStr(sb: java.lang.StringBuilder, s: String): Unit = {
-    sb.append('"')
-    var i = 0
-    while (i < s.length) {
-      s.charAt(i) match {
-        case '"' => sb.append("\\\"")
-        case '\\' => sb.append("\\\\")
-        case '\n' => sb.append("\\n")
-        case '\r' => sb.append("\\r")
-        case '\t' => sb.append("\\t")
-        case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
-        case c => sb.append(c)
-      }
-      i += 1
-    }
-    sb.append('"')
   }
 }

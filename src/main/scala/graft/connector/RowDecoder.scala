@@ -232,7 +232,7 @@ final class RowDecoder(schema: StructType, project: String, store: String,
   /** A span with no escape is already its own JSON string body. */
   private def appendSpan(sb: java.lang.StringBuilder, prefix: String, s: Int,
       e: Int, esc: Boolean): Unit =
-    if (esc) appendJsonStr(sb, prefix + FastJsonl.unescape(line, s, e))
+    if (esc) FastJsonl.appendString(sb, prefix + FastJsonl.unescape(line, s, e))
     else sb.append('"').append(prefix).append(line, s, e).append('"')
 
   /** `String.compareTo` of two pairs' keys. */

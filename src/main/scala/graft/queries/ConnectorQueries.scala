@@ -50,7 +50,7 @@ object ConnectorQueries {
     val progs = q.recentProgress
     def d(k: String): Long = progs.map(p =>
       Option(p.durationMs.get(k)).map(_.toLong).getOrElse(0L)).sum
-    // ProbeC22-style state-operator split (zero for stateless queries):
+    // State-operator split (zero for stateless queries):
     // upd/rm/cmt split addBatch's state-backend share out of the
     // executor share; stRows pins the state population the rep carried.
     def st(f: org.apache.spark.sql.streaming.StateOperatorProgress => Long)

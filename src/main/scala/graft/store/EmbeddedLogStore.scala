@@ -1133,44 +1133,26 @@ object EmbeddedLogStore {
     * Jackson tree per record on the hot write path. [[FastJsonl]] reads
     * exactly this shape back. */
   private[graft] def recordToJson(r: LogRecord): String = {
-    val sb = new StringBuilder(64)
+    val sb = new java.lang.StringBuilder(64)
     sb.append("{\"time\":").append(r.time)
-    sb.append(",\"topic\":"); appendJsonString(sb, r.topic)
-    sb.append(",\"source\":"); appendJsonString(sb, r.source)
+    sb.append(",\"topic\":"); FastJsonl.appendString(sb, r.topic)
+    sb.append(",\"source\":"); FastJsonl.appendString(sb, r.source)
     sb.append(",\"tags\":{")
     var first = true
     r.tags.foreach { case (k, v) =>
       if (!first) sb.append(',')
       first = false
-      appendJsonString(sb, k); sb.append(':'); appendJsonString(sb, v)
+      FastJsonl.appendString(sb, k); sb.append(':'); FastJsonl.appendString(sb, v)
     }
     sb.append("},\"contents\":{")
     first = true
     r.contents.foreach { case (k, v) =>
       if (!first) sb.append(',')
       first = false
-      appendJsonString(sb, k); sb.append(':'); appendJsonString(sb, v)
+      FastJsonl.appendString(sb, k); sb.append(':'); FastJsonl.appendString(sb, v)
     }
     sb.append("}}")
     sb.toString
-  }
-
-  private def appendJsonString(sb: StringBuilder, s: String): Unit = {
-    sb.append('"')
-    var i = 0
-    while (i < s.length) {
-      s.charAt(i) match {
-        case '"' => sb.append("\\\"")
-        case '\\' => sb.append("\\\\")
-        case '\n' => sb.append("\\n")
-        case '\r' => sb.append("\\r")
-        case '\t' => sb.append("\\t")
-        case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
-        case c => sb.append(c)
-      }
-      i += 1
-    }
-    sb.append('"')
   }
 
   /** A data line's record: [[FastJsonl]] for the writer's own shape, the

@@ -3,7 +3,8 @@ package graft.store
 /** Zero-dependency scanner for the exact JSONL shape
   * [[EmbeddedLogStore.recordToJson]] writes:
   * `{"time":N,"topic":S,"source":S,"tags":{S:S,...},"contents":{S:S,...}}`
-  * with the writer's escape set (`\" \\ \n \r \t \uXXXX`). One pass
+  * with the writer's escape set (`\" \\ \n \r \t \uXXXX`, written by
+  * [[appendString]]). One pass
   * checks the whole line against that grammar and reports each field to a
   * [[Visitor]] as a span of the line, so a caller materialises only the
   * fields it needs. Strict: any deviation (unexpected key order,
@@ -41,6 +42,41 @@ object FastJsonl {
   /** The string value of the span [s, e) of `line`. */
   def string(line: String, s: Int, e: Int, esc: Boolean): String =
     if (esc) unescape(line, s, e) else line.substring(s, e)
+
+  /** Appends `s` as a quoted JSON string in the writer's escape set, the
+    * inverse of [[unescape]]: `"` and `\` backslashed, `\n \r \t` by
+    * letter, every other control char as `\u00XX`. Runs of plain chars
+    * are copied whole. */
+  def appendString(sb: java.lang.StringBuilder, s: String): Unit = {
+    sb.append('"')
+    var run = 0
+    var i = 0
+    while (i < s.length) {
+      val c = s.charAt(i)
+      if (c == '"' || c == '\\' || c < ' ') {
+        sb.append(s, run, i).append('\\')
+        c match {
+          case '"' | '\\' => sb.append(c)
+          case '\n' => sb.append('n')
+          case '\r' => sb.append('r')
+          case '\t' => sb.append('t')
+          case _ => sb.append("u00").append(Hex(c >> 4)).append(Hex(c & 0xf))
+        }
+        run = i + 1
+      }
+      i += 1
+    }
+    sb.append(s, run, s.length).append('"')
+  }
+
+  /** `s` as a quoted JSON string ([[appendString]]). */
+  def quote(s: String): String = {
+    val sb = new java.lang.StringBuilder(s.length + 2)
+    appendString(sb, s)
+    sb.toString
+  }
+
+  private val Hex = "0123456789abcdef"
 
   /** Resolves the escapes of a span the scanner accepted. */
   def unescape(line: String, s: Int, e: Int): String = {

@@ -1,6 +1,8 @@
 package graft
 
+import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 object CodegenGuardSpec {
   /** The exact round-17 `M27Row` declaration that Janino rejected: a
@@ -48,10 +50,10 @@ class CodegenGuardSpec extends AnyFunSuite {
   }
 
   test("driver-facing mains carry the same guard (MainSessions)") {
-    // Verify/Bench/BenchOne/VerifyOne/BenchStress/Plans all build their
-    // sessions through MainSessions and assertGuarded at startup — this
-    // pins the shared constant so the mains' guarantee can't drift, and
-    // exercises assertGuarded both ways on live sessions.
+    // Verify/Bench/BenchOne/BenchStress/Plans/PlanDump all build their
+    // sessions through MainSessions.local, which runs assertGuarded at
+    // startup — this pins the shared constant so the mains' guarantee
+    // can't drift, and exercises assertGuarded both ways on live sessions.
     assert(MainSessions.CodegenFactoryMode == "CODEGEN_ONLY")
     assert(MainSessions.common.contains(
       "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY"))
@@ -61,6 +63,32 @@ class CodegenGuardSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       MainSessions.assertGuarded(unguarded)
     }
+  }
+
+  test("every main builds its session through MainSessions.local") {
+    // a source scan: a main that builds its own session would run
+    // without the guard whatever the doc above says
+    val root = Paths.get("src/main/scala/graft")
+    assert(Files.isDirectory(root), s"run from the repo root: no ${root.toAbsolutePath}")
+    val sources = Files.walk(root).iterator.asScala.toSeq
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => p.getFileName.toString -> Files.readString(p))
+    // a top-level `object`'s text runs to the next one
+    val mains = sources.flatMap { case (_, src) =>
+      val starts = "(?m)^object (\\w+)".r.findAllMatchIn(src).toSeq
+      starts.zip(starts.drop(1).map(_.start) :+ src.length).map { case (m, end) =>
+        m.group(1) -> src.substring(m.start, end)
+      }
+    }.filter(_._2.contains("def main(")).toMap
+    // the store's config CLI is the one main that opens no session
+    assert(mains.keySet === Set("Bench", "BenchOne", "BenchStress", "PlanDump",
+      "Plans", "Verify", "UpdateSourceConfig"))
+    for ((name, body) <- mains - "UpdateSourceConfig")
+      assert(body.contains("MainSessions.local("), s"$name builds its own session")
+    val builders = sources.collect {
+      case (file, src) if src.contains("SparkSession.builder") => file
+    }
+    assert(builders === Seq("MainSessions.scala"))
   }
 
   test("positive control: the round-17 M27Row shape fails loudly under the guard") {

@@ -83,6 +83,51 @@ class ConnectorSpec extends AnyFunSuite with StopStreamsAfterAll with TempDirs {
     }
   }
 
+  test("__time__ is written one exact way: floored in range, or the write fails") {
+    val root = freshRoot()
+    val store = new EmbeddedLogStore(root)
+    store.createStore("proj", "logs", 1)
+    import spark.implicits._
+    def times(): Seq[Int] =
+      store.read("proj", "logs", 0, 0L, Long.MaxValue).map(_._2.time).toSeq
+    Seq((Int.MaxValue.toDouble, "a"), (10.7, "b")).toDF("__time__", "m")
+      .write.format("graft-logstore").options(readOpts(root)).mode("append").save()
+    assert(times().sorted === Seq(10, Int.MaxValue))
+
+    def at(dt: DataType, v: Any): Int = RowConverters.timeSeconds(dt,
+      new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(Array(v)), 0)
+    assert(at(IntegerType, Int.MaxValue) == Int.MaxValue)
+    assert(at(LongType, 0L) == 0)
+    assert(at(DoubleType, 10.7) == 10)
+    assert(at(FloatType, 10.7f) == 10)
+    assert(at(DecimalType(10, 3), Decimal(BigDecimal("10.700"), 10, 3)) == 10)
+    assert(at(StringType, org.apache.spark.unsafe.types.UTF8String.fromString(" 10.7 ")) == 10)
+    assert(at(TimestampType, 1700000000999999L) == 1700000000)
+    // saturating and wrapping conversions would store these as
+    // Int.MaxValue and 5; a DATE as days-as-seconds
+    val bad = Seq[(DataType, Any)](
+      LongType -> 1700000000000L, LongType -> 4294967301L, LongType -> -1L,
+      TimestampType -> 4294967301000000L, DoubleType -> Double.NaN,
+      DoubleType -> 2147483648.0, DoubleType -> -0.5,
+      StringType -> org.apache.spark.unsafe.types.UTF8String.fromString("1970-01-01 00:00:10"),
+      StringType -> org.apache.spark.unsafe.types.UTF8String.fromString("1e10"),
+      DateType -> 19000, BooleanType -> true)
+    for ((dt, v) <- bad) {
+      val e = intercept[IllegalArgumentException](at(dt, v))
+      assert(e.getMessage.contains(s"__time__ of type ${dt.simpleString}") &&
+        e.getMessage.endsWith(v.toString), e.getMessage)
+    }
+    // a task that meets one fails the job, naming the column
+    val e = intercept[Exception] {
+      Seq((4294967301L, "c")).toDF("__time__", "m")
+        .write.format("graft-logstore").options(readOpts(root)).mode("append").save()
+    }
+    def msgs(t: Throwable): Seq[String] =
+      if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
+    assert(msgs(e).exists(_.contains("__time__ of type bigint")), e.getMessage)
+    assert(times().size == 2)
+  }
+
   test("UDT column round-trips through its sqlType representation") {
     // reference recurses on UserDefinedType.sqlType (Utils.scala:145-146);
     // our converters mirror that on both read and write
