@@ -51,7 +51,9 @@ object Bench {
     // The connector queries share one embedded-store ingest per
     // (session, sf dir); that one-time store construction is warm-up,
     // not query time. Trigger it at the MEASURED scale before any
-    // timer starts (c2/c4 read the same cached store).
+    // timer starts: c1's events store is also read by c2, c3, c7,
+    // c12-c18 and c19 (through c3); c5's documents store by c20; c9's
+    // sessions store by c21 and c22.
     Seq("c1_logstore_roundtrip", "c5_stream_dedup", "c9_stream_sessions")
       .foreach { name =>
         SparkEntry.queries.get(name).foreach { fn =>

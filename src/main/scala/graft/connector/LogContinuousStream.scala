@@ -29,9 +29,8 @@ class LogContinuousStream(schema: StructType, opts: LogServiceOptions)
   override def planInputPartitions(start: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[LogServiceOffset]
     store.listShards(opts.project, opts.store).map { sh =>
-      LogInputPartition(opts.project, opts.store, sh.id,
-        s.shardOrdinals.getOrElse(sh.id, 0L), Long.MaxValue, opts.root)
-        : InputPartition
+      LogShardTail(opts.project, opts.store, sh.id,
+        s.shardOrdinals.getOrElse(sh.id, 0L), opts.root): InputPartition
     }.toArray
   }
 
@@ -53,16 +52,20 @@ class LogContinuousStream(schema: StructType, opts: LogServiceOptions)
 case class LogContinuousReaderFactory(schema: StructType, appendSeq: Boolean)
     extends ContinuousPartitionReaderFactory {
   override def createReader(p: InputPartition): ContinuousPartitionReader[InternalRow] =
-    new LogContinuousPartitionReader(schema,
-      p.asInstanceOf[LogInputPartition], appendSeq)
+    new LogContinuousPartitionReader(schema, p.asInstanceOf[LogShardTail], appendSeq)
 }
+
+/** One shard tailed from ordinal `from` on: the reader takes a fresh
+  * snapshot per poll, so the partition carries no segment list. */
+case class LogShardTail(project: String, store: String, shard: Int,
+    from: Long, root: String) extends InputPartition
 
 case class LogShardPartitionOffset(shard: Int, ordinal: Long) extends PartitionOffset
 
 /** Tails one shard: drains what exists, then polls for newly committed
   * segments (the reference blocks on service long-poll; we poll the
   * listing with a small backoff). */
-class LogContinuousPartitionReader(schema: StructType, p: LogInputPartition,
+class LogContinuousPartitionReader(schema: StructType, p: LogShardTail,
     appendSeq: Boolean) extends ContinuousPartitionReader[InternalRow] {
 
   private val store = new EmbeddedLogStore(p.root)

@@ -93,7 +93,7 @@ class LogMicroBatchStream(schema: StructType, opts: LogServiceOptions)
         s"offset rollback on shard $shard: $until < $from") // O9 guard
       if (until > from)
         Some(LogInputPartition(opts.project, opts.store, shard, from, until,
-          opts.root, segments = Some(snap.shard(shard).clip(from, until))))
+          opts.root, None, snap.shard(shard).clip(from, until)))
       else None
     })
   }

@@ -13,20 +13,22 @@ case class LogServiceOffset(project: String, store: String,
     shardOrdinals: Map[Int, Long]) extends Offset {
 
   override def json(): String = {
-    val mapper = new ObjectMapper()
-    val root = mapper.createObjectNode()
+    val root = LogServiceOffset.Json.createObjectNode()
     val inner = root.putObject(s"$project#$store")
     shardOrdinals.toSeq.sortBy(_._1).foreach { case (s, o) =>
       inner.put(s.toString, o)
     }
-    mapper.writeValueAsString(root)
+    LogServiceOffset.Json.writeValueAsString(root)
   }
 }
 
 object LogServiceOffset {
+  /** One mapper for every offset: configured once, then thread-safe.
+    * Spark serializes and parses offsets on every trigger. */
+  private val Json = new ObjectMapper()
+
   def parse(json: String): LogServiceOffset = {
-    val mapper = new ObjectMapper()
-    val root = mapper.readTree(json)
+    val root = Json.readTree(json)
     val field = root.properties().asScala.toSeq.headOption.getOrElse(
       throw new IllegalArgumentException(s"empty offset json: $json"))
     val Array(project, store) = field.getKey.split("#", 2)

@@ -458,18 +458,15 @@ class LogScan(schema: StructType, opts: LogServiceOptions,
   * directly and takes its `__sequence_number__` bases from the same list,
   * so a task does no manifest fold of its own. If a racing compaction or
   * expiry deleted a listed file, the reader folds again and resumes at
-  * its next unread ordinal. A partition built without a list (None)
-  * resolves one from a fresh snapshot when its reader opens. */
+  * its next unread ordinal. */
 case class LogInputPartition(project: String, store: String, shard: Int,
     from: Long, until: Long, root: String,
-    timeRange: Option[(Long, Long)] = None,
-    segments: Option[Seq[Segment]] = None) extends InputPartition {
+    timeRange: Option[(Long, Long)],
+    segments: Seq[Segment]) extends InputPartition {
   /** Records the reader will read: the clipped segments that survive
-    * the time prune (the whole range when no list is carried). */
-  def records: Long = segments.fold(until - from) { segs =>
-    segs.iterator.filter(_.overlaps(timeRange))
-      .map(seg => math.min(seg.end, until) - math.max(seg.base, from)).sum
-  }
+    * the time prune. */
+  def records: Long = segments.iterator.filter(_.overlaps(timeRange))
+    .map(seg => math.min(seg.end, until) - math.max(seg.base, from)).sum
 }
 
 /** Slices one task reads back to back, ordered by (shard, from). */
@@ -549,7 +546,7 @@ class LogBatch(schema: StructType, opts: LogServiceOptions,
           val lo = from + (until - from) * i / slices
           val hi = from + (until - from) * (i + 1) / slices
           LogInputPartition(opts.project, opts.store, s.id, lo, hi,
-            opts.root, tr, Some(snap.shard(s.id).clip(lo, hi)))
+            opts.root, tr, snap.shard(s.id).clip(lo, hi))
         }
       }
     })
@@ -615,8 +612,7 @@ class LogPartitionReader(schema: StructType, p: LogInputPartition,
   private val decoder = new RowDecoder(schema, p.project, p.store, p.shard,
     appendSeq, p.timeRange)
   private val lines = store.readSegments(p.project, p.store, p.shard,
-    p.segments.getOrElse(store.snapshot(p.project, p.store).shard(p.shard).segments),
-    p.from, p.until, p.timeRange)
+    p.segments, p.from, p.until, p.timeRange)
   private var current: InternalRow = _
 
   override def next(): Boolean = {

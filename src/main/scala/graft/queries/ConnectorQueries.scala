@@ -5,7 +5,9 @@ import graft.store.EmbeddedLogStore
 import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
+import scala.collection.concurrent.TrieMap
 
 /** End-to-end connector queries: the events table is ingested into the
   * embedded log store through the DSv2 write path, read back through the
@@ -18,14 +20,6 @@ object ConnectorQueries {
 
   type Q = (SparkSession, String) => DataFrame
 
-  /** Await an AvailableNow drain and FAIL LOUDLY on timeout: reading
-    * the sink while the query is still running returns a partial
-    * result that surfaces downstream as a confusing oracle mismatch
-    * instead of the actual problem (a slow or hung drain). The default
-    * 120s covers every catalog query at bench scale with a wide
-    * margin; stress harnesses driving 100x corpora through the
-    * streaming rows raise SPARK_GRAFT_DRAIN_TIMEOUT_MS instead of
-    * weakening the guard. */
   /** One-line component summary of the MOST RECENTLY drained streaming
     * query (batch count + summed durationMs per phase). Bench appends
     * it to each streaming rep's stderr trace so a slow SESSION in a
@@ -37,7 +31,15 @@ object ConnectorQueries {
     * cause). */
   @volatile var lastDrainStats: String = ""
 
-  private def drain(q: org.apache.spark.sql.streaming.StreamingQuery,
+  /** Await an AvailableNow drain and FAIL LOUDLY on timeout: reading
+    * the sink while the query is still running returns a partial
+    * result that surfaces downstream as a confusing oracle mismatch
+    * instead of the actual problem (a slow or hung drain). The default
+    * 120s covers every catalog query at bench scale with a wide
+    * margin; stress harnesses driving 100x corpora through the
+    * streaming rows raise SPARK_GRAFT_DRAIN_TIMEOUT_MS instead of
+    * weakening the guard. */
+  private def drain(q: StreamingQuery,
       timeoutMs: Long = sys.env.getOrElse(
         "SPARK_GRAFT_DRAIN_TIMEOUT_MS", "120000").toLong): Unit = {
     val done = q.awaitTermination(timeoutMs)
@@ -65,7 +67,7 @@ object ConnectorQueries {
   }
 
   /** Every c-query backs its embedded store / checkpoint with a fresh
-    * temp directory; the shared c5Ingested/c9Ingested source stores
+    * temp directory; the shared ingest/c5Source/c9Source stores
     * additionally live for the whole session by design (immutable,
     * one ingest per sf dir). A single JVM shutdown hook deletes them
     * all best-effort so a long-lived session reusing many sf dirs
@@ -92,6 +94,15 @@ object ConnectorQueries {
     p.toString
   }
 
+  /** A new store `proj`/`name` of `shards` shards under its own temp
+    * root; returns the reader/writer options that address it. Store
+    * maintenance opens the store from `store.root`. */
+  private[queries] def freshStore(name: String, shards: Int = 1): Map[String, String] = {
+    val root = tempDir(s"graft-logstore-$name")
+    new EmbeddedLogStore(root).createStore("proj", name, shards)
+    Map("store.root" -> root, "store.project" -> "proj", "store.name" -> name)
+  }
+
   /** Isolated session for a streaming leg, with shuffle/state
     * parallelism sized to the leg's actual volume. Stateful operators
     * open + commit one state-store instance per shuffle partition per
@@ -104,12 +115,70 @@ object ConnectorQueries {
     * admission/parallelism sizing is exactly the configuration
     * envelope the reference manages through its own per-source config
     * (SURVEY §2 O4/O12). The derived session shares the SparkContext;
-    * each run still gets a fresh checkpoint + sink. */
+    * each run still gets a fresh checkpoint + sink (see runToSink). */
   private def streamSession(spark: SparkSession, parts: Int = 4): SparkSession = {
     val s2 = spark.newSession()
     s2.conf.set("spark.sql.shuffle.partitions", parts.toString)
     s2
   }
+
+  /** The rest of a streaming leg: `out` (a streaming frame, built on the
+    * leg's stream session) runs in output `mode` into a fresh one-shard
+    * sink under a fresh checkpoint with Trigger.AvailableNow, is
+    * drained, and the sink is read back under `schema` on `spark` — the
+    * caller's session, not the stream's.
+    *
+    * With `perBatch`, every micro-batch goes through foreachBatch:
+    * transformed, stamped with its `batch_id`, and appended through the
+    * batch write path; the read-back then ends with `batch_id LONG`.
+    * Such a leg reconciles by last emission, and its claim that state
+    * crossed trigger boundaries is vacuous if pacing collapsed to one
+    * trigger, so at least two distinct batch ids must reach the sink. */
+  private[queries] def runToSink(spark: SparkSession, out: DataFrame, name: String,
+      mode: String, schema: String,
+      perBatch: Option[DataFrame => DataFrame] = None): DataFrame = {
+    val sinkOpts = freshStore(s"${name}out")
+    val writer = out.writeStream
+      .outputMode(mode)
+      .option("checkpointLocation", tempDir(s"graft-$name-ckpt"))
+      .trigger(Trigger.AvailableNow())
+    drain(perBatch match {
+      case None => writer.format("graft-logstore").options(sinkOpts).start()
+      case Some(f) => writer.foreachBatch { (batch: DataFrame, batchId: Long) =>
+        f(batch).withColumn("batch_id", lit(batchId))
+          .write.format("graft-logstore").options(sinkOpts)
+          .mode("append").save()
+      }.start()
+    })
+    val sink = spark.read.format("graft-logstore").options(sinkOpts)
+      .schema(if (perBatch.isEmpty) schema else s"$schema, batch_id LONG")
+      .load()
+    if (perBatch.isDefined)
+      require(sink.select(col("batch_id")).distinct().count() >= 2,
+        s"$name expected multiple micro-batches; pacing produced fewer than 2")
+    sink
+  }
+
+  /** Each key's LAST emission: `values` of the row with the largest
+    * `batch_id` per `keys` — the reconcile for Update-mode results that
+    * are not monotone in the growing state. */
+  private def lastEmission(df: DataFrame, keys: Seq[String],
+      values: Seq[String]): DataFrame =
+    df.groupBy(keys.map(col): _*)
+      .agg(max(struct((col("batch_id") +: values.map(col)): _*)).as("m"))
+      .select(keys.map(col) ++ values.map(v => col(s"m.$v").as(v)): _*)
+
+  /** Admission budget for ~3 micro-batches over `total` records at any
+    * scale: enough to prove state carries across triggers without
+    * paying per-trigger overhead 30x over. */
+  private[queries] def threeBatches(total: Long): String =
+    math.max(1L, total / 3 + 1).toString
+
+  private val eventCounts = TrieMap.empty[(SparkSession, String), Long]
+
+  /** Row count of the sf dir's events table, once per (session, dir). */
+  private def eventCount(spark: SparkSession, dir: String): Long =
+    eventCounts.getOrElseUpdate((spark, dir), t(spark, dir, "events").count())
 
   def queries: Map[String, Q] = Map(
     "c1_logstore_roundtrip" -> c1,
@@ -194,14 +263,6 @@ object ConnectorQueries {
     * Scale: state is two per-user event lists pruned by watermark;
     * the join shuffles both sides on user_id once. */
   private def c18: Q = (spark, dir) => {
-    val srcOpts = ingest(spark, dir, 2)
-    val total = c14Count.getOrElseUpdate((spark, dir),
-      t(spark, dir, "events").count())
-    val dstRoot = tempDir("graft-logstore-c18")
-    new EmbeddedLogStore(dstRoot).createStore("proj", "pairs", 1)
-    val dstOpts = Map("store.root" -> dstRoot, "store.project" -> "proj",
-      "store.name" -> "pairs")
-    val ckpt = tempDir("graft-c18-ckpt")
     val s2 = streamSession(spark)
     // An INNER stream-stream join emits a pair the moment its later
     // side arrives — nothing in the sink is watermark-gated, so the
@@ -212,8 +273,8 @@ object ConnectorQueries {
     // Watermark-gated-output queries (c9/c22) keep the default.
     s2.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     val stream = s2.readStream.format("graft-logstore")
-      .options(srcOpts)
-      .option("maxoffsetspertrigger", math.max(1L, total / 3 + 1).toString)
+      .options(ingest(spark, dir))
+      .option("maxoffsetspertrigger", threeBatches(eventCount(spark, dir)))
       .schema("event_id LONG, user_id LONG, event_type STRING, ts LONG")
       .load()
     val views = stream.filter(col("event_type") === "view")
@@ -222,29 +283,15 @@ object ConnectorQueries {
     val purchases = stream.filter(col("event_type") === "purchase")
       .select(col("user_id").as("p_user"), timestamp_micros(col("ts")).as("p_time"))
       .withWatermark("p_time", "30 days")
-    val q = views.join(purchases,
+    val pairs = views.join(purchases,
         col("user_id") === col("p_user") &&
           col("p_time") > col("v_time") &&
           col("p_time") <= col("v_time") + expr("INTERVAL 1 HOUR"))
       .select(col("user_id"), unix_micros(col("v_time")).as("v_us"),
         unix_micros(col("p_time")).as("p_us"))
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.withColumn("batch_id", lit(batchId))
-          .write.format("graft-logstore").options(dstOpts)
-          .mode("append").save()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    drain(q)
-    val sink = spark.read.format("graft-logstore").options(dstOpts)
-      .schema("user_id LONG, v_us LONG, p_us LONG, batch_id LONG")
-      .load()
-    require(sink.select(col("batch_id")).distinct().count() >= 2,
-      "c18 expected pair emissions from multiple micro-batches")
-    sink.groupBy(col("user_id"))
+    runToSink(spark, pairs, "c18", "append", "user_id LONG, v_us LONG, p_us LONG",
+        perBatch = Some(identity))
+      .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_conversions"))
   }
 
@@ -273,46 +320,24 @@ object ConnectorQueries {
     * a live ingest can maintain tomorrow's scan-side filter online. */
   private def c17: Q = (spark, dir) => {
     import graft.functions.Bloom
-    val srcOpts = ingest(spark, dir, 2)
-    val total = c14Count.getOrElseUpdate((spark, dir),
-      t(spark, dir, "events").count())
-    val dstRoot = tempDir("graft-logstore-c17")
-    new EmbeddedLogStore(dstRoot).createStore("proj", "bloom", 1)
-    val dstOpts = Map("store.root" -> dstRoot, "store.project" -> "proj",
-      "store.name" -> "bloom")
-    val ckpt = tempDir("graft-c17-ckpt")
-    val q = streamSession(spark).readStream.format("graft-logstore")
-      .options(srcOpts)
-      .option("maxoffsetspertrigger", math.max(1L, total / 3 + 1).toString)
+    val filters = streamSession(spark).readStream.format("graft-logstore")
+      .options(ingest(spark, dir))
+      .option("maxoffsetspertrigger", threeBatches(eventCount(spark, dir)))
       .schema("user_id LONG, event_type STRING").load()
       .groupBy(col("event_type"))
       .agg(Bloom.bloom_build(col("user_id"), 4096L, 1e-4).as("bf"))
-      .writeStream
-      .outputMode("update")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.select(col("event_type"),
-            explode(array(C17Probes.map(p =>
-              struct(lit(p).as("probe_uid"),
-                Bloom.bloom_might_contain(col("bf"), lit(p)).as("might"))): _*))
-              .as("pr"))
-          .select(col("event_type"), col("pr.probe_uid").as("probe_uid"),
-            col("pr.might").as("might"))
-          .withColumn("batch_id", lit(batchId))
-          .write.format("graft-logstore").options(dstOpts)
-          .mode("append").save()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    drain(q)
-    val sink = spark.read.format("graft-logstore").options(dstOpts)
-      .schema("event_type STRING, probe_uid LONG, might BOOLEAN, batch_id LONG")
-      .load()
-    require(sink.select(col("batch_id")).distinct().count() >= 2,
-      "c17 expected multiple micro-batches; pacing produced fewer than 2")
-    sink.groupBy(col("event_type"), col("probe_uid"))
-      .agg(max(struct(col("batch_id"), col("might")))
-        .getField("might").as("might"))
+    val probed = (batch: DataFrame) =>
+      batch.select(col("event_type"),
+          explode(array(C17Probes.map(p =>
+            struct(lit(p).as("probe_uid"),
+              Bloom.bloom_might_contain(col("bf"), lit(p)).as("might"))): _*))
+            .as("pr"))
+        .select(col("event_type"), col("pr.probe_uid").as("probe_uid"),
+          col("pr.might").as("might"))
+    lastEmission(
+      runToSink(spark, filters, "c17", "update",
+        "event_type STRING, probe_uid LONG, might BOOLEAN", perBatch = Some(probed)),
+      Seq("event_type", "probe_uid"), Seq("might"))
   }
 
   /** Streaming HLL distinct-count state on the oracle gate (c14): the
@@ -332,45 +357,17 @@ object ConnectorQueries {
     * tripped the state store intact. */
   private def c14: Q = (spark, dir) => {
     import graft.functions.Sketches.{hll_build, hll_estimate}
-    val srcOpts = ingest(spark, dir, 2)
-    val total = c14Count.getOrElseUpdate((spark, dir),
-      t(spark, dir, "events").count())
-    val dstRoot = tempDir("graft-logstore-c14")
-    new EmbeddedLogStore(dstRoot).createStore("proj", "hll", 1)
-    val dstOpts = Map("store.root" -> dstRoot, "store.project" -> "proj",
-      "store.name" -> "hll")
-    val ckpt = tempDir("graft-c14-ckpt")
-    val q = streamSession(spark).readStream.format("graft-logstore")
-      .options(srcOpts)
-      .option("maxoffsetspertrigger", math.max(1L, total / 3 + 1).toString)
+    val estimates = streamSession(spark).readStream.format("graft-logstore")
+      .options(ingest(spark, dir))
+      .option("maxoffsetspertrigger", threeBatches(eventCount(spark, dir)))
       .schema("user_id LONG, event_type STRING").load()
       .groupBy(col("event_type"))
       .agg(hll_estimate(hll_build(col("user_id"))).as("approx_users"))
-      .writeStream
-      .outputMode("update")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.withColumn("batch_id", lit(batchId))
-          .write.format("graft-logstore").options(dstOpts)
-          .mode("append").save()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    drain(q)
-    val sink = spark.read.format("graft-logstore").options(dstOpts)
-      .schema("event_type STRING, approx_users LONG, batch_id LONG")
-      .load()
-    // the state-carryover claim is vacuous if pacing collapsed to one
-    // trigger — pin it (the c11 in-query require idiom)
-    require(sink.select(col("batch_id")).distinct().count() >= 2,
-      "c14 expected multiple micro-batches; pacing produced fewer than 2")
-    sink.groupBy(col("event_type"))
-      .agg(max(struct(col("batch_id"), col("approx_users")))
-        .getField("approx_users").as("approx_users"))
+    lastEmission(
+      runToSink(spark, estimates, "c14", "update",
+        "event_type STRING, approx_users LONG", perBatch = Some(identity)),
+      Seq("event_type"), Seq("approx_users"))
   }
-
-  private val c14Count =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Long]
 
   /** Streaming KLL quantile state (c16): the LAST of the five sketch
     * families as streaming state — k5's compaction-free KLL (capacity
@@ -388,44 +385,19 @@ object ConnectorQueries {
     * is what makes the STREAMING path itself oracle-checkable. */
   private def c16: Q = (spark, dir) => {
     import graft.functions.Sketches.{kll_build, kll_quantile}
-    val srcOpts = ingest(spark, dir, 2)
-    val total = c14Count.getOrElseUpdate((spark, dir),
-      t(spark, dir, "events").count())
-    val dstRoot = tempDir("graft-logstore-c16")
-    new EmbeddedLogStore(dstRoot).createStore("proj", "kll", 1)
-    val dstOpts = Map("store.root" -> dstRoot, "store.project" -> "proj",
-      "store.name" -> "kll")
-    val ckpt = tempDir("graft-c16-ckpt")
-    val q = streamSession(spark).readStream.format("graft-logstore")
-      .options(srcOpts)
-      .option("maxoffsetspertrigger", math.max(1L, total / 3 + 1).toString)
+    val quantiles = streamSession(spark).readStream.format("graft-logstore")
+      .options(ingest(spark, dir))
+      .option("maxoffsetspertrigger", threeBatches(eventCount(spark, dir)))
       .schema("event_type STRING, value DOUBLE").load()
       .groupBy(col("event_type"))
       .agg(kll_quantile(kll_build(col("value"), 1 << 17), 0.25).as("p25_value"),
         kll_quantile(kll_build(col("value"), 1 << 17), 0.5).as("p50_value"),
         kll_quantile(kll_build(col("value"), 1 << 17), 0.95).as("p95_value"))
-      .writeStream
-      .outputMode("update")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.withColumn("batch_id", lit(batchId))
-          .write.format("graft-logstore").options(dstOpts)
-          .mode("append").save()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    drain(q)
-    val sink = spark.read.format("graft-logstore").options(dstOpts)
-      .schema("event_type STRING, p25_value DOUBLE, p50_value DOUBLE, " +
-        "p95_value DOUBLE, batch_id LONG")
-      .load()
-    require(sink.select(col("batch_id")).distinct().count() >= 2,
-      "c16 expected multiple micro-batches; pacing produced fewer than 2")
-    sink.groupBy(col("event_type"))
-      .agg(max(struct(col("batch_id"), col("p25_value"), col("p50_value"),
-          col("p95_value"))).as("m"))
-      .select(col("event_type"), col("m.p25_value").as("p25_value"),
-        col("m.p50_value").as("p50_value"), col("m.p95_value").as("p95_value"))
+    lastEmission(
+      runToSink(spark, quantiles, "c16", "update",
+        "event_type STRING, p25_value DOUBLE, p50_value DOUBLE, p95_value DOUBLE",
+        perBatch = Some(identity)),
+      Seq("event_type"), Seq("p25_value", "p50_value", "p95_value"))
   }
 
   /** Streaming MinHash signature state (c15): the fourth sketch family
@@ -454,14 +426,6 @@ object ConnectorQueries {
   private def c15: Q = (spark, dir) => {
     import graft.functions.MinHashAgg
     val K = 8
-    val srcOpts = ingest(spark, dir, 2)
-    val total = c14Count.getOrElseUpdate((spark, dir),
-      t(spark, dir, "events").count())
-    val dstRoot = tempDir("graft-logstore-c15")
-    new EmbeddedLogStore(dstRoot).createStore("proj", "minhash", 1)
-    val dstOpts = Map("store.root" -> dstRoot, "store.project" -> "proj",
-      "store.name" -> "minhash")
-    val ckpt = tempDir("graft-c15-ckpt")
     // splitmix64 finalizer via the native wrapping expression (ANSI
     // mode makes built-in Long +/* THROW on overflow, but a hash
     // mixer's arithmetic wraps by definition) — bit-identical to
@@ -469,34 +433,20 @@ object ConnectorQueries {
     import graft.functions.SplitMix64Expr.splitmix64
     val sig = array((0 until K).map(i =>
       splitmix64(xxhash64(col("user_id")), lit(i.toLong))): _*)
-    val q = streamSession(spark).readStream.format("graft-logstore")
-      .options(srcOpts)
-      .option("maxoffsetspertrigger", math.max(1L, total / 3 + 1).toString)
+    val sigs = streamSession(spark).readStream.format("graft-logstore")
+      .options(ingest(spark, dir))
+      .option("maxoffsetspertrigger", threeBatches(eventCount(spark, dir)))
       .schema("user_id LONG, event_type STRING").load()
       .withColumn("sig", sig)
       .groupBy(col("event_type"))
       .agg(MinHashAgg.minSig(K)(col("sig")).as("sig"))
-      .writeStream
-      .outputMode("update")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.select(col("event_type"),
-            posexplode(col("sig")).as(Seq("perm", "min_hash")))
-          .withColumn("batch_id", lit(batchId))
-          .write.format("graft-logstore").options(dstOpts)
-          .mode("append").save()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    drain(q)
-    val sink = spark.read.format("graft-logstore").options(dstOpts)
-      .schema("event_type STRING, perm INT, min_hash LONG, batch_id LONG")
-      .load()
-    require(sink.select(col("batch_id")).distinct().count() >= 2,
-      "c15 expected multiple micro-batches; pacing produced fewer than 2")
-    sink.groupBy(col("event_type"), col("perm"))
-      .agg(max(struct(col("batch_id"), col("min_hash")))
-        .getField("min_hash").as("min_hash"))
+    val perPerm = (batch: DataFrame) =>
+      batch.select(col("event_type"),
+        posexplode(col("sig")).as(Seq("perm", "min_hash")))
+    lastEmission(
+      runToSink(spark, sigs, "c15", "update",
+        "event_type STRING, perm INT, min_hash LONG", perBatch = Some(perPerm)),
+      Seq("event_type", "perm"), Seq("min_hash"))
   }
 
   /** Streaming CMS frequency state on the oracle gate (c13): the c12
@@ -514,41 +464,22 @@ object ConnectorQueries {
     * zero). */
   private def c13: Q = (spark, dir) => {
     import graft.functions.Sketches.{cms_build, cms_query}
-    val srcOpts = ingest(spark, dir, 2)
-    val total = c13Count.getOrElseUpdate((spark, dir),
-      t(spark, dir, "events").count())
-    val dstRoot = tempDir("graft-logstore-c13")
-    new EmbeddedLogStore(dstRoot).createStore("proj", "cms", 1)
-    val dstOpts = Map("store.root" -> dstRoot, "store.project" -> "proj",
-      "store.name" -> "cms")
-    val ckpt = tempDir("graft-c13-ckpt")
     val probes = C13Probes.map(u => cms_query(col("sk"), lit(u)).as(s"est_u$u"))
-    val q = streamSession(spark).readStream.format("graft-logstore")
-      .options(srcOpts)
-      .option("maxoffsetspertrigger", math.max(1L, total / 3 + 1).toString)
+    val estimates = streamSession(spark).readStream.format("graft-logstore")
+      .options(ingest(spark, dir))
+      .option("maxoffsetspertrigger", threeBatches(eventCount(spark, dir)))
       .schema("user_id LONG, event_type STRING").load()
       .groupBy(col("event_type"))
       .agg(cms_build(col("user_id")).as("sk"))
       .select(col("event_type") +: probes: _*)
-      .writeStream.format("graft-logstore").options(dstOpts)
-      .outputMode("update")
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    drain(q)
     val reconcile = C13Probes.map(u => max(col(s"est_u$u")).as(s"est_u$u"))
-    spark.read.format("graft-logstore").options(dstOpts)
-      .schema("event_type STRING, " +
-        C13Probes.map(u => s"est_u$u LONG").mkString(", "))
-      .load()
+    runToSink(spark, estimates, "c13", "update",
+        "event_type STRING, " + C13Probes.map(u => s"est_u$u LONG").mkString(", "))
       .groupBy(col("event_type"))
       .agg(reconcile.head, reconcile.tail: _*)
   }
 
   private val C13Probes = Seq(7L, 41L, 149L, 999999L)
-
-  private val c13Count =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Long]
 
   /** Streaming sketch state on the oracle gate (c12): per-event-type
     * KMV bottom-k sketches built INSIDE a streaming aggregation —
@@ -564,36 +495,16 @@ object ConnectorQueries {
     * state lost or double-counted across triggers breaks the hash. */
   private def c12: Q = (spark, dir) => {
     import graft.functions.Sketches.{kmv_build, kmv_estimate}
-    val srcOpts = ingest(spark, dir, 2)
-    val total = c12Count.getOrElseUpdate((spark, dir),
-      t(spark, dir, "events").count())
-    val dstRoot = tempDir("graft-logstore-c12")
-    new EmbeddedLogStore(dstRoot).createStore("proj", "kmv", 1)
-    val dstOpts = Map("store.root" -> dstRoot, "store.project" -> "proj",
-      "store.name" -> "kmv")
-    val ckpt = tempDir("graft-c12-ckpt")
-    val q = streamSession(spark).readStream.format("graft-logstore")
-      .options(srcOpts)
-      // ~3 micro-batches at any scale (the c5 pacing idiom): enough to
-      // prove sketch state crosses triggers without 30x trigger cost
-      .option("maxoffsetspertrigger", math.max(1L, total / 3 + 1).toString)
+    val estimates = streamSession(spark).readStream.format("graft-logstore")
+      .options(ingest(spark, dir))
+      .option("maxoffsetspertrigger", threeBatches(eventCount(spark, dir)))
       .schema("user_id LONG, event_type STRING").load()
       .groupBy(col("event_type"))
       .agg(kmv_estimate(kmv_build(col("user_id"), 256)).as("approx_users"))
-      .writeStream.format("graft-logstore").options(dstOpts)
-      .outputMode("update")
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    drain(q)
-    spark.read.format("graft-logstore").options(dstOpts)
-      .schema("event_type STRING, approx_users DOUBLE").load()
+    runToSink(spark, estimates, "c12", "update", "event_type STRING, approx_users DOUBLE")
       .groupBy(col("event_type"))
       .agg(max(col("approx_users")).as("approx_users"))
   }
-
-  private val c12Count =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Long]
 
   /** Time-based retention on the oracle gate (c11): two time-ordered
     * commits (cold half, then hot half), expire everything before the
@@ -605,11 +516,8 @@ object ConnectorQueries {
     * only because nothing changed). */
   private def c11: Q = (spark, dir) => {
     val cutoff = 1705363200 // 2024-01-16 00:00:00 UTC, mid-corpus
-    val root = tempDir("graft-logstore-c11")
-    val store = new EmbeddedLogStore(root)
-    store.createStore("proj", "ret", 2)
-    val opts = Map("store.root" -> root, "store.project" -> "proj",
-      "store.name" -> "ret")
+    val opts = freshStore("c11", 2)
+    val store = new EmbeddedLogStore(opts("store.root"))
     val ev = t(spark, dir, "events")
       .select(pmod(col("user_id"), lit(2)).cast(IntegerType).as("__shard__"),
         epochS(col("ts")).cast(IntegerType).as("__time__"),
@@ -618,9 +526,9 @@ object ConnectorQueries {
       .write.format("graft-logstore").options(opts).mode("append").save()
     ev.filter(col("__time__") >= cutoff)
       .write.format("graft-logstore").options(opts).mode("append").save()
-    val expired = store.expireSegments("proj", "ret", cutoff)
+    val expired = store.expireSegments("proj", "c11", cutoff)
     require(expired > 0 &&
-      store.snapshot("proj", "ret").starts.values.forall(_ > 0),
+      store.snapshot("proj", "c11").starts.values.forall(_ > 0),
       s"retention expired $expired segments but moved no base")
     spark.read.format("graft-logstore").options(opts)
       .schema("event_id LONG, event_type STRING, value DOUBLE")
@@ -641,11 +549,8 @@ object ConnectorQueries {
     * by the rewrite breaks it (ordinal/order stability is pinned by
     * StoreCompactionSpec). */
   private def c10: Q = (spark, dir) => {
-    val root = tempDir("graft-logstore-c10")
-    val store = new EmbeddedLogStore(root)
-    store.createStore("proj", "opt", 2)
-    val opts = Map("store.root" -> root, "store.project" -> "proj",
-      "store.name" -> "opt")
+    val opts = freshStore("c10", 2)
+    val store = new EmbeddedLogStore(opts("store.root"))
     val ev = t(spark, dir, "events")
       .select(pmod(col("user_id"), lit(2)).cast(IntegerType).as("__shard__"),
         epochS(col("ts")).cast(IntegerType).as("__time__"),
@@ -654,11 +559,11 @@ object ConnectorQueries {
       ev.filter(col("event_id") % 8 === k)
         .write.format("graft-logstore").options(opts).mode("append").save()
     def nSegments = {
-      val snap = store.snapshot("proj", "opt")
+      val snap = store.snapshot("proj", "c10")
       snap.shards.map(s => snap.shard(s.id).segments.size).sum
     }
     val before = nSegments
-    store.compactSegments("proj", "opt")
+    store.compactSegments("proj", "c10")
     val after = nSegments
     require(after < before && after <= 2,
       s"OPTIMIZE left $after of $before segments")
@@ -671,6 +576,35 @@ object ConnectorQueries {
         min(col("event_id")).as("min_id"),
         max(col("event_id")).as("max_id"))
   }
+
+  /** Inactivity gap of the c9/c22 sessions, in seconds; their oracles
+    * break islands on it too. */
+  private val SessionGapS = 1800L
+
+  private val c9Ingested = TrieMap.empty[(SparkSession, String), Map[String, String]]
+
+  /** Shared c9/c21/c22 source: the events table (+ a far-future flush
+    * sentinel) on two shards, __time__ = epoch seconds of ts. The
+    * store is immutable and deterministic per (session, sf dir), so it
+    * is ingested once; each run still gets a fresh sink + checkpoint
+    * (streaming state). */
+  private def c9Source(spark: SparkSession, dir: String): Map[String, String] =
+    c9Ingested.getOrElseUpdate((spark, dir), {
+      val opts = freshStore("c9", 2)
+      val ev = t(spark, dir, "events")
+        .select(col("user_id"), col("event_type"), col("value"),
+          epochS(col("ts")).as("t"))
+      val maxT = ev.agg(max(col("t"))).first().getLong(0)
+      val sentinel = spark.range(1).select(lit(-1L).as("user_id"),
+        lit("__flush__").as("event_type"), lit(0.0).as("value"),
+        lit(maxT + SessionGapS + 3600L).as("t"))
+      ev.unionAll(sentinel)
+        .select(pmod(col("user_id"), lit(2)).cast(IntegerType).as("__shard__"),
+          col("t").cast(IntegerType).as("__time__"),
+          col("user_id"), col("event_type"), col("value"))
+        .write.format("graft-logstore").options(opts).mode("append").save()
+      opts
+    })
 
   /** Streaming SESSION windows on the oracle gate (c9): per-user
     * sessions with a 30-minute inactivity gap, Append mode — a session
@@ -689,71 +623,67 @@ object ConnectorQueries {
     * the hash. Boundary pinned by real data: an event EXACTLY gap
     * seconds after its predecessor MERGES (session_window merges
     * touching windows), so the islands break is strictly `> gap`. */
-  private val c5Ingested =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), (Map[String, String], Long)]
-
-  private val c9Ingested =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Map[String, String]]
-
-  /** Shared c9/c21 source: the events table (+ a far-future flush
-    * sentinel) on two shards, __time__ = epoch seconds of ts. One
-    * ingest per (session, sf dir). */
-  private def c9Source(spark: SparkSession, dir: String,
-      gapS: Long): Map[String, String] =
-    c9Ingested.getOrElseUpdate((spark, dir), {
-      val root = tempDir("graft-logstore-c9")
-      new EmbeddedLogStore(root).createStore("proj", "sess", 2)
-      val opts = Map("store.root" -> root, "store.project" -> "proj",
-        "store.name" -> "sess")
-      val ev = t(spark, dir, "events")
-        .select(col("user_id"), col("event_type"), col("value"),
-          epochS(col("ts")).as("t"))
-      val maxT = ev.agg(max(col("t"))).first().getLong(0)
-      val sentinel = spark.range(1).select(lit(-1L).as("user_id"),
-        lit("__flush__").as("event_type"), lit(0.0).as("value"),
-        lit(maxT + gapS + 3600L).as("t"))
-      ev.unionAll(sentinel)
-        .select(pmod(col("user_id"), lit(2)).cast(IntegerType).as("__shard__"),
-          col("t").cast(IntegerType).as("__time__"),
-          col("user_id"), col("event_type"), col("value"))
-        .write.format("graft-logstore").options(opts).mode("append").save()
-      opts
-    })
-
   private def c9: Q = (spark, dir) => {
-    val gapS = 1800L
-    // the sentinel-bearing source store is immutable and deterministic
-    // per (session, sf dir) — one ingest, like c1/c2/c3's shared store;
-    // each run still gets a fresh sink + checkpoint (streaming state)
-    val srcOpts = c9Source(spark, dir, gapS)
-    val dstRoot = tempDir("graft-logstore-c9out")
-    new EmbeddedLogStore(dstRoot).createStore("proj", "sessions", 1)
-    val dstOpts = Map("store.root" -> dstRoot, "store.project" -> "proj",
-      "store.name" -> "sessions")
-    val ckpt = tempDir("graft-c9-ckpt")
-    val q = streamSession(spark).readStream.format("graft-logstore").options(srcOpts)
+    val sessions = streamSession(spark).readStream.format("graft-logstore")
+      .options(c9Source(spark, dir))
       .option("maxoffsetspertrigger", "1000000")
       .schema("user_id LONG, event_type STRING, value DOUBLE, __time__ TIMESTAMP")
       .load()
       .withWatermark("__time__", "1 second")
       .groupBy(col("user_id"),
-        session_window(col("__time__"), s"$gapS seconds"))
+        session_window(col("__time__"), s"$SessionGapS seconds"))
       .agg(count(lit(1)).as("n_events"), dsum6(col("value")).as("sum_value"))
       .select(col("user_id"),
         col("session_window.start").cast(LongType).as("session_start"),
         col("session_window.end").cast(LongType).as("session_end"),
         col("n_events"), col("sum_value"))
-      .writeStream.format("graft-logstore").options(dstOpts)
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    drain(q)
-    spark.read.format("graft-logstore").options(dstOpts)
-      .schema("user_id LONG, session_start LONG, session_end LONG, " +
-        "n_events LONG, sum_value DOUBLE")
-      .load()
+    runToSink(spark, sessions, "c9", "append",
+        "user_id LONG, session_start LONG, session_end LONG, " +
+          "n_events LONG, sum_value DOUBLE")
       .filter(col("user_id") >= 0) // sentinel session, if ever finalized
+  }
+
+  /** EVENT-TIME-TIMER sessionization (c22): c9's exact semantics
+    * rebuilt on `transformWithState` timers — per-key buffered event
+    * times in ListState, ONE registered event-time timer at
+    * (max buffered + gap), gap-island split + FINAL emission when the
+    * watermark passes it (SessionTimers.scala Scaladoc for the state
+    * contract). Same shared sentinel-flushed source as c9, same
+    * DuckDB gaps-and-islands oracle (minus the value sum — the
+    * processor state carries times only, keeping per-key state
+    * minimal). The point of the row: the timer API is how a pipeline
+    * expresses window rules session_window cannot (length caps,
+    * per-key gaps), exercised on the one rule with an exact oracle. */
+  private def c22: Q = (spark, dir) => {
+    // isolated session: transformWithState needs the RocksDB provider
+    // (multiple column families: list state + value state + timers).
+    // State parallelism sized to the SOURCE volume (parquet-metadata
+    // count, the editDistancePairs idiom): stateful operators open one
+    // state-store instance per shuffle partition, so a fixed 4 is
+    // right at bench scale (store-open overhead dominates) but starves
+    // the state backend at stress scale — the r13 probe showed ONE
+    // box's 100x point drop 81.8s -> 32.9s just by sharding the same
+    // linear state population over 32 instances instead of 4 (SCALE.md
+    // round-15 note). This is the per-source parallelism knob of the
+    // configuration envelope (SURVEY §2 O4/O12); partition count is
+    // not semantic (the oracle hashes content).
+    val stateParts = math.min(32L, math.max(4L, eventCount(spark, dir) / 250000L)).toInt
+    val s2 = streamSession(spark, stateParts)
+    s2.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    import s2.implicits._
+    val src = s2.readStream.format("graft-logstore").options(c9Source(spark, dir))
+      .option("maxoffsetspertrigger", "1000000")
+      .schema("user_id LONG, event_type STRING, value DOUBLE, __time__ TIMESTAMP")
+      .load()
+      .withWatermark("__time__", "1 second")
+      .selectExpr("user_id", "CAST(__time__ AS LONG) AS t")
+      .as[(Long, Long)]
+    val sessions = graft.streaming.SessionTimers.sessions(src, SessionGapS)
+      .toDF("user_id", "session_start", "session_end", "n_events")
+    runToSink(spark, sessions, "c22", "append",
+        "user_id LONG, session_start LONG, session_end LONG, n_events LONG")
+      .filter(col("user_id") >= 0) // the sentinel's session never closes
   }
 
   /** Stream-static TEMPORAL (as-of) enrichment (c21): the streaming
@@ -769,67 +699,8 @@ object ConnectorQueries {
     * shape (the q27 interval lesson: never a per-event window).
     * Oracle replays the same cutovers and interval selection over the
     * events parquet. */
-  /** EVENT-TIME-TIMER sessionization (c22): c9's exact semantics
-    * rebuilt on `transformWithState` timers — per-key buffered event
-    * times in ListState, ONE registered event-time timer at
-    * (max buffered + gap), gap-island split + FINAL emission when the
-    * watermark passes it (SessionTimers.scala Scaladoc for the state
-    * contract). Same shared sentinel-flushed source as c9, same
-    * DuckDB gaps-and-islands oracle (minus the value sum — the
-    * processor state carries times only, keeping per-key state
-    * minimal). The point of the row: the timer API is how a pipeline
-    * expresses window rules session_window cannot (length caps,
-    * per-key gaps), exercised on the one rule with an exact oracle. */
-  private def c22: Q = (spark, dir) => {
-    val gapS = 1800L
-    val srcOpts = c9Source(spark, dir, gapS)
-    val dstRoot = tempDir("graft-logstore-c22out")
-    new EmbeddedLogStore(dstRoot).createStore("proj", "sessions", 1)
-    val dstOpts = Map("store.root" -> dstRoot, "store.project" -> "proj",
-      "store.name" -> "sessions")
-    val ckpt = tempDir("graft-c22-ckpt")
-    // isolated session: transformWithState needs the RocksDB provider
-    // (multiple column families: list state + value state + timers).
-    // State parallelism sized to the SOURCE volume (parquet-metadata
-    // count, the editDistancePairs idiom): stateful operators open one
-    // state-store instance per shuffle partition, so a fixed 4 is
-    // right at bench scale (store-open overhead dominates) but starves
-    // the state backend at stress scale — the r13 probe showed ONE
-    // box's 100x point drop 81.8s -> 32.9s just by sharding the same
-    // linear state population over 32 instances instead of 4 (SCALE.md
-    // round-15 note). This is the per-source parallelism knob of the
-    // configuration envelope (SURVEY §2 O4/O12); partition count is
-    // not semantic (the oracle hashes content).
-    val nEvents = t(spark, dir, "events").count()
-    val stateParts = math.min(32L, math.max(4L, nEvents / 250000L)).toInt
-    val s2 = streamSession(spark, stateParts)
-    s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    import s2.implicits._
-    val src = s2.readStream.format("graft-logstore").options(srcOpts)
-      .option("maxoffsetspertrigger", "1000000")
-      .schema("user_id LONG, event_type STRING, value DOUBLE, __time__ TIMESTAMP")
-      .load()
-      .withWatermark("__time__", "1 second")
-      .selectExpr("user_id", "CAST(__time__ AS LONG) AS t")
-      .as[(Long, Long)]
-    val q = graft.streaming.SessionTimers.sessions(src, gapS)
-      .toDF("user_id", "session_start", "session_end", "n_events")
-      .writeStream.format("graft-logstore").options(dstOpts)
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    drain(q)
-    spark.read.format("graft-logstore").options(dstOpts)
-      .schema("user_id LONG, session_start LONG, session_end LONG, " +
-        "n_events LONG")
-      .load()
-      .filter(col("user_id") >= 0) // the sentinel's session never closes
-  }
-
   private def c21: Q = (spark, dir) => {
-    val srcOpts = c9Source(spark, dir, 1800L)
+    val srcOpts = c9Source(spark, dir)
     // versioned dim, batch-side: nation key x versions 0..2; version 0
     // is effective from the epoch, versions 1/2 cut over at the event
     // span's thirds — deterministic for any (dataset, sf)
@@ -851,13 +722,8 @@ object ConnectorQueries {
         (key, s"${name}_v$v", f, to)
       }
     }.toDF("key", "dim_val", "f", "tto")
-    val dstRoot = tempDir("graft-logstore-c21out")
-    new EmbeddedLogStore(dstRoot).createStore("proj", "enriched", 1)
-    val dstOpts = Map("store.root" -> dstRoot, "store.project" -> "proj",
-      "store.name" -> "enriched")
-    val ckpt = tempDir("graft-c21-ckpt")
-    val s2 = streamSession(spark)
-    val enriched = s2.readStream.format("graft-logstore").options(srcOpts)
+    val enriched = streamSession(spark).readStream.format("graft-logstore")
+      .options(srcOpts)
       .option("maxoffsetspertrigger", "1000000")
       .schema("user_id LONG, event_type STRING, value DOUBLE, __time__ TIMESTAMP")
       .load()
@@ -868,15 +734,8 @@ object ConnectorQueries {
           col("t") >= col("f") && col("t") < col("tto"))
       .select(col("user_id"), col("event_type"), col("value"), col("t"),
         col("dim_val"))
-    val q = enriched.writeStream.format("graft-logstore").options(dstOpts)
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    drain(q)
-    spark.read.format("graft-logstore").options(dstOpts)
-      .schema("user_id LONG, event_type STRING, value DOUBLE, t LONG, " +
-        "dim_val STRING").load()
+    runToSink(spark, enriched, "c21", "append",
+      "user_id LONG, event_type STRING, value DOUBLE, t LONG, dim_val STRING")
   }
 
   /** Streaming ANN index routing (c23): the ONLINE half of the s3/s15
@@ -903,10 +762,7 @@ object ConnectorQueries {
     * matters: routing is embarrassingly parallel on the stream, and
     * the centroid table is the only broadcast (k rows). */
   private def c23: Q = (spark, dir) => {
-    val srcRoot = tempDir("graft-logstore-c23src")
-    new EmbeddedLogStore(srcRoot).createStore("proj", "vecs", 2)
-    val srcOpts = Map("store.root" -> srcRoot, "store.project" -> "proj",
-      "store.name" -> "vecs")
+    val srcOpts = freshStore("c23src", 2)
     val emb = t(spark, dir, "embeddings")
     emb.select(
         pmod(col("vec_id"), lit(2)).cast(IntegerType).as("__shard__"),
@@ -916,11 +772,6 @@ object ConnectorQueries {
           .as("emb_csv"))
       .write.format("graft-logstore").options(srcOpts).mode("append").save()
     val cs = graft.operators.Similarity.ivfCentroids(emb, 16)
-    val dstRoot = tempDir("graft-logstore-c23out")
-    new EmbeddedLogStore(dstRoot).createStore("proj", "routed", 1)
-    val dstOpts = Map("store.root" -> dstRoot, "store.project" -> "proj",
-      "store.name" -> "routed")
-    val ckpt = tempDir("graft-c23-ckpt")
     val s2 = streamSession(spark)
     import s2.implicits._
     val routed = s2.readStream.format("graft-logstore").options(srcOpts)
@@ -946,14 +797,7 @@ object ConnectorQueries {
         (id, best + 1, bestSim)
       }
       .toDF("vec_id", "cell", "csim")
-    val q = routed.writeStream.format("graft-logstore").options(dstOpts)
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    drain(q)
-    spark.read.format("graft-logstore").options(dstOpts)
-      .schema("vec_id LONG, cell INT, csim DOUBLE").load()
+    runToSink(spark, routed, "c23", "append", "vec_id LONG, cell INT, csim DOUBLE")
   }
 
   /** CDC-style incremental batch (c8): the rows committed BETWEEN two
@@ -964,11 +808,8 @@ object ConnectorQueries {
     * replayable forever (both bounds are manifest-pinned, immune to
     * concurrent appends). Oracle = the second commit's aggregate. */
   private def c8: Q = (spark, dir) => {
-    val root = tempDir("graft-logstore-c8")
-    val store = new EmbeddedLogStore(root)
-    store.createStore("proj", "inc", 2)
-    val opts = Map("store.root" -> root, "store.project" -> "proj",
-      "store.name" -> "inc")
+    val opts = freshStore("c8", 2)
+    val store = new EmbeddedLogStore(opts("store.root"))
     def write(half: DataFrame): Unit =
       half.select(
           (col("user_id") % 2).cast(IntegerType).as("__shard__"),
@@ -977,11 +818,11 @@ object ConnectorQueries {
         .write.format("graft-logstore").options(opts).mode("append").save()
     val ev = t(spark, dir, "events")
     write(ev.filter(col("event_id") % 2 === 0)) // commit 1
-    val v1 = store.latestVersion("proj", "inc")
+    val v1 = store.latestVersion("proj", "c8")
     write(ev.filter(col("event_id") % 2 === 1)) // commit 2 = the increment
-    val v2 = store.latestVersion("proj", "inc")
-    val fromOffsets = graft.connector.LogServiceOffset("proj", "inc",
-      store.snapshot("proj", "inc", Some(v1)).ends)
+    val v2 = store.latestVersion("proj", "c8")
+    val fromOffsets = graft.connector.LogServiceOffset("proj", "c8",
+      store.snapshot("proj", "c8", Some(v1)).ends)
     spark.read.format("graft-logstore").options(opts)
       .option("startingoffsets", fromOffsets.json())
       .option("store.snapshotversion", v2.toString)
@@ -1003,53 +844,37 @@ object ConnectorQueries {
     * is DuckDB's batch join over the original parquet — any loss,
     * duplication, or mis-keyed enrich breaks the hash. */
   private def c7: Q = (spark, dir) => {
-    val srcOpts = ingest(spark, dir, 2)
     val ss = streamSession(spark)
     // built on the STREAM's session: joining datasets across sessions
     // is undefined territory, and the dim is a 25-row broadcast anyway
     val dim = t(ss, dir, "nation")
       .select(col("n_nationkey").cast(LongType).as("n_nationkey"), col("n_name"))
-    val dstRoot = tempDir("graft-logstore-c7")
-    new EmbeddedLogStore(dstRoot).createStore("proj", "enriched", 1)
-    val dstOpts = Map("store.root" -> dstRoot, "store.project" -> "proj",
-      "store.name" -> "enriched")
-    val ckpt = tempDir("graft-c7-ckpt")
-    val q = ss.readStream.format("graft-logstore").options(srcOpts)
+    val enriched = ss.readStream.format("graft-logstore").options(ingest(spark, dir))
       .option("maxoffsetspertrigger", "1000000")
       .schema("user_id LONG, event_type STRING, value DOUBLE").load()
       .join(broadcast(dim), col("user_id") % 25 === col("n_nationkey"))
       .groupBy(col("n_name"), col("event_type"))
       .agg(count(lit(1)).as("n_events"), dsum6(col("value")).as("sum_value"))
-      .writeStream.format("graft-logstore").options(dstOpts)
-      .outputMode("update")
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    drain(q)
-    spark.read.format("graft-logstore").options(dstOpts)
-      .schema("n_name STRING, event_type STRING, n_events LONG, sum_value DOUBLE")
-      .load()
+    runToSink(spark, enriched, "c7", "update",
+        "n_name STRING, event_type STRING, n_events LONG, sum_value DOUBLE")
       .groupBy(col("n_name"), col("event_type"))
       .agg(max(col("n_events")).as("n_events"),
         max(col("sum_value")).as("sum_value"))
   }
 
-  /** One shared ingest per (session, sf dir): the three connector
-    * queries read the same immutable store — repeated catalog runs
-    * (bench reps, the determinism spec) skip re-ingesting 100k events
-    * each time. Nothing downstream depends on the shard count. */
-  private val ingested =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Map[String, String]]
+  /** One shared ingest per (session, sf dir): the eleven connector
+    * queries that read the events table as logged (c1-c3, c7, c12-c18)
+    * read the same immutable store, so repeated catalog runs (bench
+    * reps, the determinism spec) skip re-ingesting 100k events each
+    * time. Four shards, routed by user_id. */
+  private val ingested = TrieMap.empty[(SparkSession, String), Map[String, String]]
 
-  private def ingest(spark: SparkSession, dir: String, shards: Int): Map[String, String] =
+  private def ingest(spark: SparkSession, dir: String): Map[String, String] =
     ingested.getOrElseUpdate((spark, dir), {
-      val root = tempDir("graft-logstore")
-      new EmbeddedLogStore(root).createStore("proj", "events", shards)
-      val opts = Map("store.root" -> root, "store.project" -> "proj",
-        "store.name" -> "events")
+      val opts = freshStore("events", 4)
       t(spark, dir, "events")
         .select(
-          (col("user_id") % shards).cast(IntegerType).as("__shard__"),
+          (col("user_id") % 4).cast(IntegerType).as("__shard__"),
           epochS(col("ts")).cast(IntegerType).as("__time__"),
           col("event_id"), col("user_id"), col("event_type"),
           col("value"), epochUs(col("ts")).as("ts"), col("props"))
@@ -1059,8 +884,7 @@ object ConnectorQueries {
 
   /** Typed user-schema path: string→typed converters on every column. */
   private def c1: Q = (spark, dir) => {
-    val opts = ingest(spark, dir, 4)
-    spark.read.format("graft-logstore").options(opts)
+    spark.read.format("graft-logstore").options(ingest(spark, dir))
       .schema("event_id LONG, user_id LONG, event_type STRING, value DOUBLE, ts LONG")
       .load()
       .groupBy(col("event_type"))
@@ -1079,8 +903,7 @@ object ConnectorQueries {
     * from_json parse per row instead of a get_json_object per extracted
     * field (3 full JSON parses → 1). */
   private def c2: Q = (spark, dir) => {
-    val opts = ingest(spark, dir, 2)
-    spark.read.format("graft-logstore").options(opts).load()
+    spark.read.format("graft-logstore").options(ingest(spark, dir)).load()
       .select(from_json(col("__value__"), StructType.fromDDL(
         "event_type STRING, value STRING, user_id STRING")).as("j"))
       .select(
@@ -1103,14 +926,8 @@ object ConnectorQueries {
     * commits, or state recovery breaks the hash against DuckDB's batch
     * answer over the original parquet. */
   private def c3: Q = (spark, dir) => {
-    val srcOpts = ingest(spark, dir, 2)
-    val dstRoot = tempDir("graft-logstore-c3")
-    new EmbeddedLogStore(dstRoot).createStore("proj", "hourly", 1)
-    val dstOpts = Map("store.root" -> dstRoot, "store.project" -> "proj",
-      "store.name" -> "hourly")
-    val ckpt = tempDir("graft-c3-ckpt")
-    val ss = streamSession(spark)
-    val hourly = ss.readStream.format("graft-logstore").options(srcOpts)
+    val hourly = streamSession(spark).readStream.format("graft-logstore")
+      .options(ingest(spark, dir))
       // admission budget sized to drain the backlog in one trigger at
       // bench scale; pacing across many triggers is covered by
       // StreamingSpec and the reconciliation is trigger-count-agnostic
@@ -1120,14 +937,8 @@ object ConnectorQueries {
         expr("CAST(__time__ AS LONG) DIV 3600 * 3600").as("hour_start"))
       .groupBy(col("hour_start"), col("event_type"))
       .agg(count(lit(1)).as("n_events"))
-    val q = hourly.writeStream.format("graft-logstore").options(dstOpts)
-      .outputMode("update")
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    drain(q)
-    spark.read.format("graft-logstore").options(dstOpts)
-      .schema("hour_start LONG, event_type STRING, n_events LONG").load()
+    runToSink(spark, hourly, "c3", "update",
+        "hour_start LONG, event_type STRING, n_events LONG")
       .groupBy(col("hour_start"), col("event_type"))
       .agg(max(col("n_events")).as("n_events"))
   }
@@ -1140,11 +951,7 @@ object ConnectorQueries {
     * the batch answer over the whole parquet table — missing parent
     * drain, skipped children, or double-reads all break the hash. */
   private def c4: Q = (spark, dir) => {
-    val root = tempDir("graft-logstore-c4")
-    val store = new EmbeddedLogStore(root)
-    store.createStore("proj", "events", 2)
-    val srcOpts = Map("store.root" -> root, "store.project" -> "proj",
-      "store.name" -> "events")
+    val srcOpts = freshStore("c4", 2)
     def write(half: DataFrame, shardExpr: org.apache.spark.sql.Column): Unit =
       half.select(
           shardExpr.cast(IntegerType).as("__shard__"),
@@ -1153,45 +960,34 @@ object ConnectorQueries {
         .write.format("graft-logstore").options(srcOpts).mode("append").save()
     val ev = t(spark, dir, "events")
     write(ev.filter(col("event_id") % 2 === 0), col("user_id") % 2)
-    store.splitShard("proj", "events", 0) // -> {2,3}; 0 readonly
+    new EmbeddedLogStore(srcOpts("store.root"))
+      .splitShard("proj", "c4", 0) // -> {2,3}; 0 readonly
     write(ev.filter(col("event_id") % 2 === 1), (col("user_id") % 3) + 1)
-
-    val dstRoot = tempDir("graft-logstore-c4out")
-    new EmbeddedLogStore(dstRoot).createStore("proj", "agg", 1)
-    val dstOpts = Map("store.root" -> dstRoot, "store.project" -> "proj",
-      "store.name" -> "agg")
-    val ckpt = tempDir("graft-c4-ckpt")
-    val q = streamSession(spark).readStream.format("graft-logstore").options(srcOpts)
+    val agg = streamSession(spark).readStream.format("graft-logstore").options(srcOpts)
       .option("maxoffsetspertrigger", "1000000")
       .schema("event_id LONG, event_type STRING, value DOUBLE").load()
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"),
         min(col("event_id")).as("min_id"), max(col("event_id")).as("max_id"))
-      .writeStream.format("graft-logstore").options(dstOpts)
-      .outputMode("update")
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    drain(q)
     // reconcile the update history: count/max grow, min shrinks
-    spark.read.format("graft-logstore").options(dstOpts)
-      .schema("event_type STRING, n_events LONG, min_id LONG, max_id LONG").load()
+    runToSink(spark, agg, "c4", "update",
+        "event_type STRING, n_events LONG, min_id LONG, max_id LONG")
       .groupBy(col("event_type"))
       .agg(max(col("n_events")).as("n_events"),
         min(col("min_id")).as("min_id"), max(col("max_id")).as("max_id"))
   }
 
+  private val c5Ingested =
+    TrieMap.empty[(SparkSession, String), (Map[String, String], Long)]
+
   /** Shared c5/c20 source: documents plus planted exact duplicates of
-    * every 5th doc, one sorted shard so arrival order is doc_id order.
-    * One ingest per (session, sf dir); each consumer still gets a fresh
-    * sink + checkpoint. */
+    * every 5th doc, one sorted shard so arrival order is doc_id order;
+    * returns the store's options and its record count. One ingest per
+    * (session, sf dir); each consumer still gets a fresh sink +
+    * checkpoint. */
   private def c5Source(spark: SparkSession, dir: String): (Map[String, String], Long) =
     c5Ingested.getOrElseUpdate((spark, dir), {
-      val root = tempDir("graft-logstore-c5")
-      val store = new EmbeddedLogStore(root)
-      store.createStore("proj", "docs", 1)
-      val opts = Map("store.root" -> root, "store.project" -> "proj",
-        "store.name" -> "docs")
+      val opts = freshStore("c5")
       val d = t(spark, dir, "documents").select(col("doc_id"), col("text"))
       val salted = d.unionAll(d.filter(col("doc_id") % 5 === 0)
         .select((col("doc_id") + 100000).as("doc_id"), col("text")))
@@ -1224,11 +1020,6 @@ object ConnectorQueries {
   private def c5: Q = (spark, dir) => {
     import spark.implicits._
     val (srcOpts, total) = c5Source(spark, dir)
-    val dstRoot = tempDir("graft-logstore-c5out")
-    new EmbeddedLogStore(dstRoot).createStore("proj", "verdicts", 1)
-    val dstOpts = Map("store.root" -> dstRoot, "store.project" -> "proj",
-      "store.name" -> "verdicts")
-    val ckpt = tempDir("graft-c5-ckpt")
     // isolated session: the RocksDB provider conf must not leak into
     // (or race with) other streams on the shared session
     val s2 = streamSession(spark)
@@ -1236,21 +1027,12 @@ object ConnectorQueries {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val verdicts = graft.streaming.StreamingDedup.exact(
       s2.readStream.format("graft-logstore").options(srcOpts)
-        // ~3 micro-batches at ANY scale: enough to prove state carries
-        // across triggers without paying per-trigger overhead 30x over
-        .option("maxoffsetspertrigger", math.max(1L, total / 3 + 1).toString)
+        .option("maxoffsetspertrigger", threeBatches(total))
         .schema("doc_id LONG, text STRING").load()
         .selectExpr("md5(text) AS fp", "doc_id")
         .as[(String, Long)])
-    val q = verdicts.toDF("doc_id", "fp", "is_dup")
-      .writeStream.format("graft-logstore").options(dstOpts)
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    drain(q)
-    spark.read.format("graft-logstore").options(dstOpts)
-      .schema("doc_id LONG, fp STRING, is_dup BOOLEAN").load()
+    runToSink(spark, verdicts.toDF("doc_id", "fp", "is_dup"), "c5", "append",
+      "doc_id LONG, fp STRING, is_dup BOOLEAN")
   }
 
   /** Engine-native bounded-state streaming dedup (c20): the same
@@ -1270,11 +1052,6 @@ object ConnectorQueries {
     * StatefulStreamingSpec. */
   private def c20: Q = (spark, dir) => {
     val (srcOpts, total) = c5Source(spark, dir)
-    val dstRoot = tempDir("graft-logstore-c20out")
-    new EmbeddedLogStore(dstRoot).createStore("proj", "kept", 1)
-    val dstOpts = Map("store.root" -> dstRoot, "store.project" -> "proj",
-      "store.name" -> "kept")
-    val ckpt = tempDir("graft-c20-ckpt")
     val s2 = streamSession(spark)
     s2.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
@@ -1287,8 +1064,7 @@ object ConnectorQueries {
     // timers) must keep the default.
     s2.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     val kept = s2.readStream.format("graft-logstore").options(srcOpts)
-      // ~3 micro-batches: state must carry across trigger boundaries
-      .option("maxoffsetspertrigger", math.max(1L, total / 3 + 1).toString)
+      .option("maxoffsetspertrigger", threeBatches(total))
       .schema("doc_id LONG, text STRING").load()
       .selectExpr("doc_id", "md5(text) AS fp",
         // event time mirrors the ingest's __time__ derivation
@@ -1296,14 +1072,7 @@ object ConnectorQueries {
       .withWatermark("ts", "365 days")
       .dropDuplicatesWithinWatermark("fp")
       .select(col("doc_id"), col("fp"))
-    val q = kept.writeStream.format("graft-logstore").options(dstOpts)
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    drain(q)
-    spark.read.format("graft-logstore").options(dstOpts)
-      .schema("doc_id LONG, fp STRING").load()
+    runToSink(spark, kept, "c20", "append", "doc_id LONG, fp STRING")
   }
 
   /** Delta-style snapshot read (time travel): two batch commits land as
@@ -1315,11 +1084,7 @@ object ConnectorQueries {
     * the hash. The reproducible-training-run primitive: pin the data
     * version, not the wall clock. */
   private def c6: Q = (spark, dir) => {
-    val root = tempDir("graft-logstore-c6")
-    val store = new EmbeddedLogStore(root)
-    store.createStore("proj", "tt", 2)
-    val opts = Map("store.root" -> root, "store.project" -> "proj",
-      "store.name" -> "tt")
+    val opts = freshStore("c6", 2)
     def write(half: DataFrame): Unit =
       half.select(
           (col("user_id") % 2).cast(IntegerType).as("__shard__"),
@@ -1328,7 +1093,7 @@ object ConnectorQueries {
         .write.format("graft-logstore").options(opts).mode("append").save()
     val ev = t(spark, dir, "events")
     write(ev.filter(col("event_id") % 2 === 0)) // commit 1
-    val v1 = store.latestVersion("proj", "tt")
+    val v1 = new EmbeddedLogStore(opts("store.root")).latestVersion("proj", "c6")
     write(ev.filter(col("event_id") % 2 === 1)) // commit 2: must stay invisible
     spark.read.format("graft-logstore").options(opts)
       .option("store.snapshotversion", v1.toString)
@@ -1462,25 +1227,25 @@ object ConnectorQueries {
         | MIN(event_id) AS min_id, MAX(event_id) AS max_id
         |FROM events GROUP BY event_type""".stripMargin,
     "c22_stream_timer_sessions" ->
-      """WITH ev AS (SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) AS t
+      s"""WITH ev AS (SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) AS t
         |  FROM events),
         |m AS (SELECT *, CASE WHEN t - lag(t) OVER
-        |    (PARTITION BY user_id ORDER BY t) > 1800 THEN 1 ELSE 0 END AS brk
+        |    (PARTITION BY user_id ORDER BY t) > $SessionGapS THEN 1 ELSE 0 END AS brk
         |  FROM ev),
         |g AS (SELECT *, SUM(brk) OVER (PARTITION BY user_id ORDER BY t
         |    ROWS UNBOUNDED PRECEDING) AS grp FROM m)
-        |SELECT user_id, MIN(t) AS session_start, MAX(t) + 1800 AS session_end,
+        |SELECT user_id, MIN(t) AS session_start, MAX(t) + $SessionGapS AS session_end,
         | COUNT(*) AS n_events
         |FROM g GROUP BY user_id, grp""".stripMargin,
     "c9_stream_sessions" ->
-      """WITH ev AS (SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) AS t, value
+      s"""WITH ev AS (SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) AS t, value
         |  FROM events),
         |m AS (SELECT *, CASE WHEN t - lag(t) OVER
-        |    (PARTITION BY user_id ORDER BY t) > 1800 THEN 1 ELSE 0 END AS brk
+        |    (PARTITION BY user_id ORDER BY t) > $SessionGapS THEN 1 ELSE 0 END AS brk
         |  FROM ev),
         |g AS (SELECT *, SUM(brk) OVER (PARTITION BY user_id ORDER BY t
         |    ROWS UNBOUNDED PRECEDING) AS grp FROM m)
-        |SELECT user_id, MIN(t) AS session_start, MAX(t) + 1800 AS session_end,
+        |SELECT user_id, MIN(t) AS session_start, MAX(t) + $SessionGapS AS session_end,
         | COUNT(*) AS n_events,
         | CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
         |FROM g GROUP BY user_id, grp""".stripMargin,
@@ -1540,8 +1305,6 @@ object ConnectorQueries {
         | SELECT doc_id + 100000, text FROM documents WHERE doc_id % 5 = 0)
         |SELECT md5(text) AS fp, MIN(doc_id) AS doc_id
         |FROM all_docs GROUP BY fp""".stripMargin,
-    // c21: same cutover derivation + half-open interval selection over
-    // the events parquet; version 0 effective from the epoch
     // c23: s3's centroid construction (first 16 by vec_id, normalized)
     // and cell argmax (sim DESC, cid ASC) replayed over the same
     // embeddings — the streamed CSV round trip must land every vector
@@ -1558,6 +1321,8 @@ object ConnectorQueries {
         |      ORDER BY list_dot_product(e.v, c0.cv) DESC, c0.cid) AS rn
         |  FROM e CROSS JOIN c0) x WHERE rn = 1)
         |SELECT vec_id, CAST(cell AS INTEGER) AS cell, csim FROM a""".stripMargin,
+    // c21: same cutover derivation + half-open interval selection over
+    // the events parquet; version 0 effective from the epoch
     "c21_stream_asof_enrich" ->
       """WITH ev AS (SELECT user_id, event_type, value,
         |    CAST(epoch_us(ts) // 1000000 AS BIGINT) AS t FROM events),

@@ -79,7 +79,7 @@ object CarriedSegmentsSpec extends org.scalatest.Assertions {
     val expected = ordinals(s, shards)
     val (parts, factory) = plan(root)
     val slices = parts.map(_.asInstanceOf[LogPackedPartition].slices)
-    assert(slices.flatten.forall(_.segments.isDefined))
+    assert(slices.flatten.forall(_.segments.nonEmpty))
     val early = if (readersFirst) parts.map(p => Some(factory.createReader(p))) else parts.map(_ => None)
     assert(s.compactSegments("proj", "logs", targetRecords = 10) > 0)
     val rows = parts.indices.flatMap { i =>

@@ -102,7 +102,7 @@ class ContinuousAndConfigSpec extends AnyFunSuite with StopStreamsAfterAll with 
     assert(LogServiceOffset.parse(merged.json()).shardOrdinals ===
       Map(0 -> 7L, 1 -> 3L))
     // reader drains existing records then picks up appended ones
-    val p = graft.connector.LogInputPartition("proj", "logs", 0, 0, Long.MaxValue, root)
+    val p = graft.connector.LogShardTail("proj", "logs", 0, 0, root)
     val reader = new graft.connector.LogContinuousPartitionReader(
       org.apache.spark.sql.types.StructType.fromDDL("msg INT"), p, false)
     (0 until 5).foreach { i =>
